@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import corpus, dedup, text
+from ..sources.readers import read_parquet
 from .orchestrator import Dag
 
 
@@ -43,8 +44,9 @@ def corpus_curation_dag(
 
     @dag.task("ingest", retries=3)
     def _ingest(**_):
-        df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return df.select("doc_id", "text", "source")
+        return read_parquet(
+            spark, f"{sf_dir}/documents.parquet", ["doc_id", "text", "source"]
+        )
 
     @dag.task("curate", upstream=["ingest"], retries=3)
     def _curate(docs):

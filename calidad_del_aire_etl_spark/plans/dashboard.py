@@ -4,8 +4,10 @@ The reference collects the WHOLE hourly table into pandas and computes
 six chart panels driver-side. The engine inverts that: each panel's
 relation is one of the distributed dashboard operators (kpis, rolling
 mean, day-of-week distribution, station compare, hourly pattern,
-correlation matrix) and only the REDUCED chart-ready rows ever reach
-the driver — at 100 TB the collect is a few hundred rows either way.
+correlation matrix) and only chart-ready rows reach the driver. Five
+panels reduce to a few hundred rows at any scale; the rolling-mean
+panel does not reduce — it collects one value per event row, so
+``render_png`` collects only its drawn ``rolling_mean`` column.
 
 Rendering proper is import-gated: with matplotlib present,
 ``render_png`` draws the reference's multi-panel layout
@@ -49,6 +51,15 @@ def export_csv(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]
     return paths
 
 
+def _collect_panels(spark: SparkSession, sf_dir: str) -> dict:
+    """:func:`chart_relations` as pandas frames for drawing. The
+    rolling-mean panel draws only its last column, one value per event
+    row, so only ``rolling_mean`` is collected from it."""
+    rels = chart_relations(spark, sf_dir)
+    rels["dash_rolling_mean"] = rels["dash_rolling_mean"].select("rolling_mean")
+    return {k: v.toPandas() for k, v in rels.items()}
+
+
 def render_png(spark: SparkSession, sf_dir: str, out_path: str) -> str:
     """Multi-panel PNG like the reference's create_dashboard_plots
     (dashboard_calidad_aire.py:246-254). With matplotlib present it
@@ -64,7 +75,7 @@ def render_png(spark: SparkSession, sf_dir: str, out_path: str) -> str:
     except ImportError:
         return _render_png_builtin(spark, sf_dir, out_path)
 
-    rels = {k: v.toPandas() for k, v in chart_relations(spark, sf_dir).items()}
+    rels = _collect_panels(spark, sf_dir)
 
     fig, axes = plt.subplots(3, 2, figsize=(18, 14))  # pragma: no cover
     (ax_kpi, ax_roll), (ax_dow, ax_station), (ax_hour, ax_corr) = axes
@@ -99,7 +110,7 @@ def _render_png_builtin(spark: SparkSession, sf_dir: str, out_path: str) -> str:
     correlation text grid — same panel order as the matplotlib path."""
     from . import rasterize as rz
 
-    rels = {k: v.toPandas() for k, v in chart_relations(spark, sf_dir).items()}
+    rels = _collect_panels(spark, sf_dir)
     W, H, cols, rows, pad = 900, 700, 2, 3, 10
     pw, ph = (W - pad * (cols + 1)) // cols, (H - pad * (rows + 1)) // rows
     c = rz.Canvas(W, H)

@@ -10,14 +10,19 @@ IEND — the minimum the spec requires). Charts come out plain but real:
 the bytes open in any viewer, and pytest decodes them back to prove the
 pipeline end-to-end.
 
-This is a driver-side leaf: it only ever touches the few hundred
-chart-ready rows the dashboard relations reduce to, never the fact data.
+This is a driver-side leaf: it only touches the chart-ready rows the
+dashboard collects, never the fact data. Most panels reduce to a few
+hundred rows, but the rolling-mean line carries one value per event row,
+so :func:`draw_line_panel` costs O(points + pixels), not one Bresenham
+call per point.
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
+from itertools import groupby
+from operator import itemgetter
 
 # 5x7 bitmap glyphs (columns of 7 bits, LSB = top row) for the chars the
 # panel titles use. Anything unmapped renders as a blank.
@@ -158,10 +163,18 @@ def draw_line_panel(c: Canvas, x0, y0, x1, y1, title: str, ys: list[float]) -> N
     xs = _scale_to(list(range(len(ys))), px0, px1) if len(ys) > 1 else [(px0 + px1) // 2]
     # screen y grows downward → invert
     yy = _scale_to(ys, py1, py0)
-    for i in range(len(ys) - 1):
-        c.line(xs[i], yy[i], xs[i + 1], yy[i + 1], _SERIES)
-    if len(ys) == 1:
-        c.set(xs[0], yy[0], _SERIES)
+    # Consecutive points in one pixel column chain vertical segments, which
+    # cover exactly [min y, max y] of the run: one vline per column draws
+    # the same pixels as a segment per point. Segments between columns
+    # stay Bresenham, drawn from the earlier point to the later one,
+    # because which pixel a tie picks depends on the direction.
+    prev = None
+    for x, run in groupby(zip(xs, yy), key=itemgetter(0)):
+        col = [y for _, y in run]
+        if prev is not None:
+            c.line(*prev, x, col[0], _SERIES)
+        c.vline(x, min(col), max(col), _SERIES)
+        prev = (x, col[-1])
 
 
 def draw_bar_panel(c: Canvas, x0, y0, x1, y1, title: str, ys: list[float]) -> None:

@@ -29,6 +29,7 @@ from .functions import (
 )
 from .operators import aggregates, cleaning, features
 from .session import pin_oracle_compat
+from .sources.readers import read_parquet
 
 
 def load(
@@ -48,7 +49,7 @@ def load(
             # built from load() output, so ts/date normalization and
             # column types are already canonical
             return spark.table(tbl)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     # Timestamp normalization: the generator has written `ts` as
     # TIMESTAMP(NANOS) (read as long nanoseconds under nanosAsLong) or as
     # TIMESTAMP(MICROS) without timezone metadata (read as TIMESTAMP_NTZ).
@@ -337,6 +338,27 @@ _DRIVER_SAMPLED_BY_ROUND: list[frozenset[str]] = [
         "semi_anti_activity", "text_char_entropy", "text_tfidf_topk",
         "time_weighted_avg", "topn_with_others", "unpivot_daily_metrics",
         "value_deciles", "value_histogram", "winsorize_profile",
+    }),
+    # round 15 (50 keys, from CORRECTNESS_r15.json)
+    frozenset({
+        "ann_bruteforce_topk", "ann_ivf_topk", "ann_lsh_topk",
+        "ann_nprobe_sweep", "ann_pq_recall_eval", "ann_sq_topk",
+        "benford_price_test", "bloom_ingest_dedup", "cms_user_counts",
+        "dash_corr_matrix", "dash_dow_distribution", "dash_downsample_ltob",
+        "dash_hourly_pattern", "dash_kpis", "dash_rolling_mean",
+        "dash_station_compare", "data_skew_report", "dedup_cluster_resolve",
+        "dedup_embedding_cosine", "dedup_exact_docs",
+        "dedup_incremental_minhash", "dedup_minhash_lsh",
+        "dedup_ngram_jaccard", "dedup_simhash", "embed_ivf_balance",
+        "embed_pca_project", "etl_daily_summary", "etl_monthly_summary",
+        "etl_validation_report", "etl_weekly_summary", "hll_rollup_merge",
+        "mm_phash_dedup", "open_order_backlog", "percentile_profile",
+        "range_join_incidents", "revenue_gini_by_nation", "scd2_build",
+        "seasonal_decompose", "sketch_profile", "snapshot_diff_orders",
+        "text_zipf_fit", "tpch_q12_priority_ship", "tpch_q14_promo",
+        "tpch_q15_top_supplier", "tpch_q16_supplier_cnt", "tpch_q17_small_qty",
+        "tpch_q18_large_orders", "tpch_q22_inactive", "tpch_q8_mktshare",
+        "window_funnel",
     }),
 ]
 

@@ -280,9 +280,10 @@ def incremental_rollup_sink(spark, staged_dir: str, rollup_dir: str):
     the next recompute folds them in (no all-rows-per-date contract on
     any single batch), and an epoch replay recomputes byte-identical
     partition contents: exactly-once END-TO-END on an at-least-once
-    foreachBatch. Reading back only the touched dates keeps the
-    recompute proportional to the batch's date span, not table size;
-    partition pruning on ``date`` does the bounding."""
+    foreachBatch. Only the touched dates are aggregated and overwritten,
+    but the staged history is partitioned by ``batch_id``, not ``date``:
+    the date filter prunes no partition, so every batch scans the whole
+    staged history and the recompute grows with it."""
     from ..operators import incremental
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -168,3 +168,43 @@ def test_bar_panel_draws_negative_bars_from_zero_line():
     xpos = 4 + (119 - 4 - 4) // 2 + 2
     assert any(at(xpos, y) == bar for y in range(pos_top, zero + 1))
     assert not any(at(xpos, y) == bar for y in range(zero + 1, py1 + 1))
+
+
+def test_line_panel_matches_per_segment_bresenham():
+    """draw_line_panel draws one vline per pixel column plus Bresenham
+    between columns; it must paint exactly the pixels of the plain
+    per-segment loop, kept here as the reference."""
+    import random
+
+    from calidad_del_aire_etl_spark.plans import rasterize as rz
+
+    def reference(c, x0, y0, x1, y1, title, ys):
+        c.rect(x0, y0, x1, y1, rz._AXIS)
+        c.text(x0 + 4, y0 + 3, title, rz._TITLE)
+        if not ys:
+            return
+        px0, px1, py0, py1 = x0 + 4, x1 - 4, y0 + 14, y1 - 4
+        xs = rz._scale_to(list(range(len(ys))), px0, px1) if len(ys) > 1 else [(px0 + px1) // 2]
+        yy = rz._scale_to(ys, py1, py0)
+        for i in range(len(ys) - 1):
+            c.line(xs[i], yy[i], xs[i + 1], yy[i + 1], rz._SERIES)
+        if len(ys) == 1:
+            c.set(xs[0], yy[0], rz._SERIES)
+
+    rng = random.Random(7)
+    walk = [0.0]
+    for _ in range(4999):
+        walk.append(walk[-1] + rng.uniform(-1, 1))
+    cases = {
+        "empty": [],
+        "one": [3.0],
+        "two": [1.0, 2.0],
+        "sparse": [rng.uniform(-5, 5) for _ in range(50)],
+        "dense": walk,  # far more points than the ~430 pixel columns
+        "constant": [2.5] * 1000,
+    }
+    for name, ys in cases.items():
+        got, want = rz.Canvas(440, 230), rz.Canvas(440, 230)
+        rz.draw_line_panel(got, 0, 0, 439, 229, "T", ys)
+        reference(want, 0, 0, 439, 229, "T", ys)
+        assert got.buf == want.buf, name

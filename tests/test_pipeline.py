@@ -82,6 +82,102 @@ def test_load_normalizes_ntz_and_nanos_timestamps(spark, tmp_path):
         assert got == micros
 
 
+def _jobs_started(spark, fn):
+    """(fn(), number of Spark jobs it started), counted by job tag. A
+    sentinel job run afterwards is awaited in the status store, so the
+    listener bus has delivered every earlier job start before counting."""
+    import time
+
+    sc = spark.sparkContext
+    status = sc._jsc.sc().statusTracker()
+    tag, sentinel = f"memo-{time.monotonic_ns()}", f"sentinel-{time.monotonic_ns()}"
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    sc.addJobTag(sentinel)
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.removeJobTag(sentinel)
+    deadline = time.monotonic() + 30
+    while not len(status.getJobIdsForTag(sentinel)) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    return out, len(status.getJobIdsForTag(tag))
+
+
+def test_load_reuses_schema_of_unchanged_table(spark, tmp_path):
+    """The second load of an unchanged table reads with the memoized
+    schema and starts no Spark job; the first one infers (one job)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from calidad_del_aire_etl_spark.registry import load
+
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"a": [1, 2, 3], "v": [1.0, 2.0, 3.0]}), str(d / "part-0.parquet"))
+    first, n_first = _jobs_started(spark, lambda: load(spark, str(tmp_path), "t").schema)
+    second, n_second = _jobs_started(spark, lambda: load(spark, str(tmp_path), "t").schema)
+    assert n_first >= 1
+    assert n_second == 0
+    assert second == first
+    assert sorted(r["a"] for r in load(spark, str(tmp_path), "t").collect()) == [1, 2, 3]
+
+
+def test_load_sees_rewritten_table_schema(spark, tmp_path):
+    """Rewriting a table's file in place under the same path (new mtime)
+    invalidates its memoized schema: the next load returns the new one."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from calidad_del_aire_etl_spark.registry import load
+
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    f = str(d / "part-0.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), f)
+    assert load(spark, str(tmp_path), "t").columns == ["a"]
+    mtime = os.stat(f).st_mtime
+    pq.write_table(pa.table({"b": ["x", "y"]}), f)
+    os.utime(f, (mtime + 10, mtime + 10))
+    df = load(spark, str(tmp_path), "t")
+    assert df.columns == ["b"]
+    assert sorted(r["b"] for r in df.collect()) == ["x", "y"]
+
+
+def test_read_parquet_memo_misses_on_nanos_conf_flip(spark, tmp_path):
+    """nanosAsLong changes what inference returns for TIMESTAMP(NANOS),
+    so flipping it between two reads of one file must re-infer: with the
+    flag off Spark rejects the column, where a stale hit would silently
+    return the bigint schema inferred under the flag."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    from calidad_del_aire_etl_spark.sources.readers import read_parquet
+
+    d = tmp_path / "nanos.parquet"
+    d.mkdir()
+    pq.write_table(
+        pa.table({"ts": pa.array([1_700_000_000_000_000_000], pa.timestamp("ns"))}),
+        str(d / "part-0.parquet"),
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        assert read_parquet(spark, str(d)).schema["ts"].dataType.simpleString() == "bigint"
+        spark.conf.set(key, "false")
+        with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+            read_parquet(spark, str(d))
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_cli_front_door(spark, tmp_path):
     """The `python -m calidad_del_aire_etl_spark` surface: list knows
     every registered query, oracle prints twin SQL, run writes real
