@@ -235,7 +235,7 @@ def main() -> None:
         yield from batches
 
     (
-        r.repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        r.repartition(spark.sparkContext.defaultParallelism)
         .mapInPandas(_noop_batches, "id long, k long, g long, x double")
         .write.format("noop").mode("overwrite").save()
     )

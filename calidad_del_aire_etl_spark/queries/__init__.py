@@ -1,4 +1,3 @@
 """Registered query modules, split out of registry.py by family
-(round 10). registry.py imports them in the original section order —
-import THAT, not these modules directly, so registration order (and
-therefore the driver's external sampling window) stays stable."""
+(round 10). Import ``registry``, not these modules directly: it imports
+them all, so ``registry.queries()`` lists every registered query."""

@@ -1,10 +1,7 @@
 """Widening batch (r4-r6): readability, LM scoring, split hygiene, profiling — registered queries, split out of registry.py
 (round 10, VERDICT r9 #8: 3.9k lines had become the merge-conflict
 magnet). PURELY MECHANICAL: bodies are byte-identical to the original
-section; registration ORDER is load-bearing (the driver's external
-50-key correctness window samples queries() in registration order), so
-``registry`` imports these modules in the original section sequence and
-each module preserves its section's internal order."""
+section."""
 
 from __future__ import annotations
 

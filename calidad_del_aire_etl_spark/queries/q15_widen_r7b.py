@@ -1,12 +1,10 @@
 """Widening batch (r7b-r10): Benford, Gini, seasonal, graph ANN, BPE loop — registered queries, split out of registry.py
 (round 10, VERDICT r9 #8: 3.9k lines had become the merge-conflict
-magnet). PURELY MECHANICAL: bodies are byte-identical to the original
-section; registration ORDER is load-bearing (the driver's external
-50-key correctness window samples queries() in registration order), so
-``registry`` imports these modules in the original section sequence and
-each module preserves its section's internal order."""
+magnet)."""
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
@@ -190,6 +188,28 @@ def q_corpus_dup_spans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from ..operators import ann_graph  # noqa: E402
+from ..sources.readers import file_signature  # noqa: E402
+
+# sf_dir -> memo key of the standing graph over its embeddings table
+_EMBEDDINGS_MEMO_KEYS: dict[str, str] = {}
+
+
+def _embeddings_memo_key(spark: SparkSession, sf_dir: str) -> str | None:
+    """Memo key of the standing graph index over ``sf_dir``'s embeddings:
+    the table path plus a digest of its file signature, so a table
+    rewritten under the same path builds a fresh index instead of
+    serving the stale one. Entries memoized under the path's previous
+    signature are evicted, which releases their checkpoint blocks.
+    None (no memo) when the table cannot be listed."""
+    sig = file_signature(spark, f"{sf_dir}/embeddings.parquet")
+    if sig is None:
+        return None
+    key = f"{sf_dir}/embeddings@{hashlib.md5(repr(sig).encode()).hexdigest()}"
+    old = _EMBEDDINGS_MEMO_KEYS.get(sf_dir)
+    if old is not None and old != key:
+        ann_graph.clear_graph_memo(old)
+    _EMBEDDINGS_MEMO_KEYS[sf_dir] = key
+    return key
 
 
 @register(
@@ -216,7 +236,7 @@ def q_ann_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     em = load(spark, sf_dir, "embeddings", spread=True)
     return ann_graph.graph_beam_topk(
         em, "vec_id", "embedding", lambda c: c < 10, k=5,
-        memo_key=f"{sf_dir}/embeddings",
+        memo_key=_embeddings_memo_key(spark, sf_dir),
     )
 
 
@@ -243,7 +263,7 @@ def q_ann_graph_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     em = load(spark, sf_dir, "embeddings", spread=True)
     return ann_graph.nndescent_insert(
         em, "vec_id", "embedding", lambda c: c % 5 == 0, k=8,
-        memo_key=f"{sf_dir}/embeddings", pred_tag="mod5",
+        memo_key=_embeddings_memo_key(spark, sf_dir), pred_tag="mod5",
     )
 
 
@@ -264,7 +284,7 @@ def q_ann_graph_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     em = load(spark, sf_dir, "embeddings", spread=True)
     return ann_graph.graph_recall_eval(
         em, "vec_id", "embedding", lambda c: c < 10, k=5,
-        memo_key=f"{sf_dir}/embeddings",
+        memo_key=_embeddings_memo_key(spark, sf_dir),
     )
 
 

@@ -1,8 +1,5 @@
 """Round-10 widening: LSH parameter sweep, hybrid sparse+dense
-retrieval, quality-score calibration. Registered LAST — the driver's
-external 50-key correctness window samples queries() in registration
-order (see registry._ordered_specs), so new modules append, never
-insert."""
+retrieval, quality-score calibration."""
 
 from __future__ import annotations
 

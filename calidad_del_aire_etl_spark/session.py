@@ -13,12 +13,10 @@ import threading
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def get_session(app_name: str = "calidad_del_aire_etl_spark") -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -28,11 +28,13 @@ _INFERENCE_CONFS = (
 _SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
 
 
-def _signature(spark: SparkSession, path: str) -> tuple | None:
-    """What the inferred schema of ``path`` depends on: every file under
-    it as (name, length, modificationTime), plus the inference confs.
-    None when the path cannot be listed (missing, a glob): the caller
-    then infers and lets Spark raise its usual error."""
+def file_signature(spark: SparkSession, path: str) -> tuple | None:
+    """What a read of ``path`` depends on: every file under it as
+    (name, length, modificationTime), plus the schema inference confs.
+    Any rewritten or touched file changes it, so it also keys state
+    derived from the table's data. None when the path cannot be listed
+    (missing, a glob): the caller then reads as usual and lets Spark
+    raise its error."""
     jvm = spark.sparkContext._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     try:
@@ -60,7 +62,7 @@ def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = Non
     conf, is a miss: the schema is inferred as before and replaces that
     path's entry. One entry per path, so the memo grows with the number
     of distinct tables opened, not with the number of reads."""
-    sig = _signature(spark, path)
+    sig = file_signature(spark, path)
     hit = _SCHEMAS.get(path)
     if sig is not None and hit is not None and hit[0] == sig:
         df = spark.read.schema(hit[1]).parquet(path)

@@ -236,3 +236,52 @@ def test_insert_memo_requires_pred_tag_and_keys_by_it(spark):
     assert not any(
         str(k[1]).startswith("memo-test") for k in ann_graph._GRAPH_MEMO
     )
+
+
+def test_standing_index_rebuilds_when_embeddings_rewritten(spark, tmp_path):
+    """The registered graph queries memoize their standing index per
+    embeddings table. Rewriting the table under the same path must
+    build a fresh index: the second answer matches the DuckDB twin on
+    the new vectors, and no entry of the old index stays memoized."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from calidad_del_aire_etl_spark import oracle, registry
+
+    sf = str(tmp_path)
+    path = tmp_path / "embeddings.parquet"
+    shutil.copy(f"{SF}/embeddings.parquet", path)
+    fn = registry.queries()["ann_graph_topk"]
+    sql = registry.oracle_sql()["ann_graph_topk"]
+
+    def check() -> str:
+        got: dict = {}
+        con = oracle.duck_connection(sf)
+        try:
+            _, problems = oracle.compare_query(spark, con, fn, sql, sf, out=got)
+        finally:
+            con.close()
+        assert not problems, "; ".join(problems)
+        return oracle.value_hash(got["oracle_df"])
+
+    before = check()
+    t = pq.read_table(path)
+    flipped = pa.array(
+        [[-x for x in v] if i % 3 else v
+         for i, v in enumerate(t["embedding"].to_pylist())],
+        type=t.schema.field("embedding").type,
+    )
+    pq.write_table(t.set_column(t.schema.get_field_index("embedding"),
+                                "embedding", flipped), path)
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**10))
+    assert check() != before  # the rewrite changes the answer
+
+    prefix = f"{sf}/embeddings@"
+    keys = {str(k[1]).split("#")[0] for k in ann_graph._GRAPH_MEMO
+            if str(k[1]).startswith(prefix)}
+    assert len(keys) == 1
+    assert ann_graph.clear_graph_memo(keys.pop()) > 0
