@@ -10,13 +10,23 @@ readers keep partition-pruning on ``date``.
 Contract: the incoming batch must carry ALL rows for each date it
 touches (the reprocess-the-partition pattern); late rows for an old date
 mean re-feeding that date's full slice, which is exactly how
-warehouse-style backfills work.
+warehouse-style backfills work. The streaming sink
+(streaming/jobs.incremental_rollup_sink) meets it by feeding
+:func:`date_slice` of its staged history.
+
+The write is the only Spark job: the touched dates come back from an
+``Observation`` riding on the write (:func:`observe_dates`), not from a
+second scan of the batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import datetime as dt
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import scoped_conf
 
 
 def daily_rollup(events: DataFrame) -> DataFrame:
@@ -37,22 +47,52 @@ def write_daily_full(summary: DataFrame, path: str) -> None:
     summary.write.mode("overwrite").partitionBy("date").parquet(path)
 
 
+def observe_dates(df: DataFrame, date: Column) -> tuple[DataFrame, Observation]:
+    """Attach the distinct values of the string ``date`` column to
+    ``df``'s next action. ``obs.get["dates"]`` is ready once that action
+    (a write, say) has finished; it costs no job of its own."""
+    obs = Observation()
+    return df.observe(obs, F.collect_set(date).alias("dates")), obs
+
+
+def date_slice(events: DataFrame, dates: list[str]) -> DataFrame:
+    """The rows of ``events`` whose ``to_date(ts)`` is in ``dates``.
+
+    Written as half-open ``ts`` ranges, ``[midnight of d, midnight of
+    the day after)`` in the session time zone, one per run of
+    consecutive dates, so parquet min/max statistics can skip row groups
+    outside them (``to_date(ts) IN (...)`` cannot be pushed down). The
+    bounds are string casts of the local midnights, which follow DST: a
+    23 h or 25 h day keeps exactly its own rows."""
+    days = sorted(dt.date.fromisoformat(d) for d in set(dates))
+    runs: list[list[dt.date]] = []
+    for d in days:
+        if runs and d == runs[-1][1]:
+            runs[-1][1] = d + dt.timedelta(days=1)
+        else:
+            runs.append([d, d + dt.timedelta(days=1)])
+    cond = F.lit(False)
+    for lo, hi in runs:
+        cond = cond | (
+            (F.col("ts") >= F.lit(lo.isoformat()).cast("timestamp"))
+            & (F.col("ts") < F.lit(hi.isoformat()).cast("timestamp"))
+        )
+    return events.filter(cond)
+
+
 def incremental_daily_update(
     spark: SparkSession, events_batch: DataFrame, path: str
 ) -> list[str]:
     """Re-aggregate the batch and overwrite ONLY its date partitions.
 
-    Returns the affected dates. ``partitionOverwriteMode=dynamic`` is set
-    per-write (session conf restored), so a 2-date batch against a
-    3-year table rewrites 2 directories, not ~1100."""
-    summary = daily_rollup(events_batch)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    Returns the affected dates, sorted, observed during the write.
+    ``partitionOverwriteMode=dynamic`` is set per-write (session conf
+    restored), so a 2-date batch against a 3-year table rewrites 2
+    directories, not ~1100."""
+    summary, obs = observe_dates(daily_rollup(events_batch), F.col("date"))
+    with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         summary.write.mode("overwrite").partitionBy("date").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return [r["date"] for r in summary.select("date").distinct().collect()]
+    return sorted(obs.get["dates"])
 
 
 # ---------------------------------------------------------------------------

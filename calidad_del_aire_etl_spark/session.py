@@ -10,8 +10,33 @@ from __future__ import annotations
 
 import os
 import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+
+_CGROUP_MEM_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2 ("max" when unlimited)
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def _default_driver_mem() -> str:
+    """16g, capped at 60 % of the memory this process may use: the
+    cgroup limit if one is set, else physical RAM. The local-mode driver
+    JVM hosts every executor thread, and a 16g heap on a 16 GiB host
+    leaves nothing for the Python workers and the OS."""
+    avail = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEM_LIMITS:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            avail = min(avail, int(limit))
+    cap_mb = int(avail * 0.6) >> 20
+    return "16g" if cap_mb >= 16 * 1024 else f"{cap_mb}m"
 
 
 def get_session(app_name: str = "calidad_del_aire_etl_spark") -> SparkSession:
@@ -73,8 +98,12 @@ def get_session(app_name: str = "calidad_del_aire_etl_spark") -> SparkSession:
         # 159 s @32 GB, 125 s @64 GB (GC/pointer-density effects dominate
         # once the shuffle buffers stop spilling early; ≥32 GB also drops
         # CompressedOops). 16 GB ≈ 0.5 GB per task thread is the measured
-        # sweet spot on this 32-thread/128 GiB box.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # sweet spot on a 32-thread/128 GiB box; smaller hosts get a
+        # capped default (_default_driver_mem).
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         # The oracle comparator collects full results via toPandas; at
         # sf1 the 15-min resample grid serializes past the 1g default
         # (1.3 GiB, task results only — operators themselves never
@@ -115,6 +144,24 @@ def pin_oracle_compat(spark: SparkSession) -> SparkSession:
     return spark
 
 
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set a runtime SQL conf for the block, then restore (or unset) it.
+
+    Session confs are per-session: inside ``foreachBatch`` pass the
+    batch DataFrame's ``sparkSession`` (a clone of the query's session),
+    or the conf never reaches the batch's writes."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def checkpoint_keeping_partitioning(df):
     """Eager localCheckpoint that PRESERVES the relation's hash
     partitioning metadata.
@@ -144,13 +191,8 @@ def checkpoint_keeping_partitioning(df):
     on the calling thread before any such window opens).
     """
     spark = df.sparkSession
-    with _AQE_TOGGLE_LOCK:
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return df.localCheckpoint(eager=True)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
+    with _AQE_TOGGLE_LOCK, scoped_conf(spark, "spark.sql.adaptive.enabled", "false"):
+        return df.localCheckpoint(eager=True)
 
 
 _AQE_TOGGLE_LOCK = threading.RLock()

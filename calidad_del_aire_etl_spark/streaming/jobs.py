@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import scoped_conf
+
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -264,43 +266,62 @@ def incremental_rollup_sink(spark, staged_dir: str, rollup_dir: str):
     drives operators/incremental.py's dynamic-partition-overwrite daily
     rollup, epoch-replay-safe.
 
-    Per micro-batch:
+    Per micro-batch, three Spark jobs:
 
     1. stage the batch's RAW rows under ``batch_id=<epoch>/`` with
        overwrite — the idempotent-staging half (a replayed epoch
-       rewrites identical files, never appends);
-    2. collect the batch's touched dates (tiny: distinct dates per
-       micro-batch);
-    3. recompute those dates' rollup partitions from the FULL staged
-       history and dynamic-partition-overwrite only them
-       (operators/incremental.incremental_daily_update).
+       rewrites identical files, never appends). An ``Observation`` on
+       this write yields the batch's touched dates, so collecting them
+       costs no job. ``ts`` is staged as TIMESTAMP_MICROS: INT96 columns
+       carry no parquet statistics;
+    2. open the staged history with the batch's schema (no inference
+       job) and keep the touched dates' rows as ``ts`` ranges
+       (operators/incremental.date_slice). Staging is partitioned by
+       ``batch_id``, not ``date``, so no directory is pruned, but the
+       ``ts`` min/max statistics skip every row group outside the
+       touched dates: the scan reads those dates' rows, not the whole
+       history;
+    3. recompute those dates' rollup partitions and
+       dynamic-partition-overwrite only them
+       (operators/incremental.incremental_daily_update; two jobs under
+       AQE).
 
     Because the staged set — not the batch — is the aggregation input,
     late rows for an old date just extend that date's staged slice and
     the next recompute folds them in (no all-rows-per-date contract on
     any single batch), and an epoch replay recomputes byte-identical
     partition contents: exactly-once END-TO-END on an at-least-once
-    foreachBatch. Only the touched dates are aggregated and overwritten,
-    but the staged history is partitioned by ``batch_id``, not ``date``:
-    the date filter prunes no partition, so every batch scans the whole
-    staged history and the recompute grows with it."""
+    foreachBatch. Staged dirs written INT96 by earlier versions still
+    read correctly; they are just never skipped. Opening a staged root
+    of more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (32) ``batch_id`` dirs adds one parallel-listing job."""
     from ..operators import incremental
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{staged_dir}/batch_id={batch_id}")
-        dates = [
-            r["date"]
-            for r in batch_df.select(
-                F.to_date("ts").cast("string").alias("date")
-            ).distinct().collect()
-        ]
+        observed, obs = incremental.observe_dates(
+            batch_df, F.to_date("ts").cast("string")
+        )
+        # foreachBatch runs in a clone of the query's session: the conf
+        # must go on the batch's own session to reach this write
+        with scoped_conf(
+            batch_df.sparkSession,
+            "spark.sql.parquet.outputTimestampType",
+            "TIMESTAMP_MICROS",
+        ):
+            observed.write.mode("overwrite").parquet(
+                f"{staged_dir}/batch_id={batch_id}"
+            )
+        dates = obs.get["dates"]
         if not dates:
             return
-        staged = spark.read.option("basePath", staged_dir).parquet(staged_dir)
-        slice_ = staged.filter(F.to_date("ts").cast("string").isin(dates)).drop(
-            "batch_id"
+        staged = (
+            spark.read.schema(batch_df.schema)
+            .option("basePath", staged_dir)
+            .parquet(staged_dir)
         )
-        incremental.incremental_daily_update(spark, slice_, rollup_dir)
+        incremental.incremental_daily_update(
+            spark, incremental.date_slice(staged, dates).drop("batch_id"), rollup_dir
+        )
 
     return write_batch
 

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import pytest
 
@@ -17,6 +18,35 @@ def spark():
     s = get_session("tests")
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def jobs_started(spark):
+    """``jobs_started(fn) -> (fn(), ids of the Spark jobs fn started)``,
+    found by job tag. A sentinel job run afterwards is awaited in the
+    status store, so the listener bus has delivered every earlier job
+    start before counting."""
+    sc = spark.sparkContext
+    status = sc._jsc.sc().statusTracker()
+
+    def run(fn):
+        tag, sentinel = f"jobs-{time.monotonic_ns()}", f"sentinel-{time.monotonic_ns()}"
+        sc.addJobTag(tag)
+        try:
+            out = fn()
+        finally:
+            sc.removeJobTag(tag)
+        sc.addJobTag(sentinel)
+        try:
+            spark.range(1).collect()
+        finally:
+            sc.removeJobTag(sentinel)
+        deadline = time.monotonic() + 30
+        while not len(status.getJobIdsForTag(sentinel)) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        return out, list(status.getJobIdsForTag(tag))
+
+    return run
 
 
 @pytest.fixture(scope="session")

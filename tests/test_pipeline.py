@@ -82,32 +82,7 @@ def test_load_normalizes_ntz_and_nanos_timestamps(spark, tmp_path):
         assert got == micros
 
 
-def _jobs_started(spark, fn):
-    """(fn(), number of Spark jobs it started), counted by job tag. A
-    sentinel job run afterwards is awaited in the status store, so the
-    listener bus has delivered every earlier job start before counting."""
-    import time
-
-    sc = spark.sparkContext
-    status = sc._jsc.sc().statusTracker()
-    tag, sentinel = f"memo-{time.monotonic_ns()}", f"sentinel-{time.monotonic_ns()}"
-    sc.addJobTag(tag)
-    try:
-        out = fn()
-    finally:
-        sc.removeJobTag(tag)
-    sc.addJobTag(sentinel)
-    try:
-        spark.range(1).collect()
-    finally:
-        sc.removeJobTag(sentinel)
-    deadline = time.monotonic() + 30
-    while not len(status.getJobIdsForTag(sentinel)) and time.monotonic() < deadline:
-        time.sleep(0.05)
-    return out, len(status.getJobIdsForTag(tag))
-
-
-def test_load_reuses_schema_of_unchanged_table(spark, tmp_path):
+def test_load_reuses_schema_of_unchanged_table(spark, tmp_path, jobs_started):
     """The second load of an unchanged table reads with the memoized
     schema and starts no Spark job; the first one infers (one job)."""
     import pyarrow as pa
@@ -118,10 +93,10 @@ def test_load_reuses_schema_of_unchanged_table(spark, tmp_path):
     d = tmp_path / "t.parquet"
     d.mkdir()
     pq.write_table(pa.table({"a": [1, 2, 3], "v": [1.0, 2.0, 3.0]}), str(d / "part-0.parquet"))
-    first, n_first = _jobs_started(spark, lambda: load(spark, str(tmp_path), "t").schema)
-    second, n_second = _jobs_started(spark, lambda: load(spark, str(tmp_path), "t").schema)
-    assert n_first >= 1
-    assert n_second == 0
+    first, ids_first = jobs_started(lambda: load(spark, str(tmp_path), "t").schema)
+    second, ids_second = jobs_started(lambda: load(spark, str(tmp_path), "t").schema)
+    assert len(ids_first) >= 1
+    assert len(ids_second) == 0
     assert second == first
     assert sorted(r["a"] for r in load(spark, str(tmp_path), "t").collect()) == [1, 2, 3]
 
@@ -208,3 +183,23 @@ def test_registry_lists_each_spec_once_in_registration_order():
     assert set(oracles) <= set(q)
     assert len(oracles) == 197
     assert len(q) - len(oracles) == 3
+
+
+def test_default_driver_mem_caps_at_host_share(monkeypatch, tmp_path):
+    """The default driver heap is 16g on a big host and 60 % of the
+    memory limit on a small one; a cgroup limit below RAM wins."""
+    from calidad_del_aire_etl_spark import session
+
+    gib = 1 << 30
+    ram = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": 128 * gib // 4096}
+    monkeypatch.setattr(session.os, "sysconf", lambda k: ram[k])
+    v2, v1 = tmp_path / "memory.max", tmp_path / "memory.limit_in_bytes"
+    monkeypatch.setattr(session, "_CGROUP_MEM_LIMITS", (str(v2), str(v1)))
+    assert session._default_driver_mem() == "16g"
+    v2.write_text("max\n")
+    assert session._default_driver_mem() == "16g"
+    v1.write_text(f"{10 * gib}\n")
+    assert session._default_driver_mem() == f"{6 * 1024}m"
+    v1.unlink()
+    ram["SC_PHYS_PAGES"] = 16 * gib // 4096
+    assert session._default_driver_mem() == f"{int(16 * gib * 0.6) >> 20}m"
