@@ -4,12 +4,17 @@ sf0.1) on local[$SPARK_GRAFT_CPUS].
 Output protocol (round-5 VERDICT #1 fix — the round-4 single giant line
 outgrew the driver's bounded stdout tail and BENCH_r04 failed to parse):
   * Spark console progress bars are suppressed (they competed for the tail).
-  * Full per-query detail goes to BENCH_DETAIL.json next to this file AND
-    is printed first (for humans / logs).
+  * The full detail record is printed first (for humans / logs): the
+    per-query walls plus the host record perfbench writes (`host`,
+    `loadavg_before`/`_after`, `cpu_probe_before_s`/`_after_s`,
+    `window_steal_share`). A full run also writes it to
+    BENCH_DETAIL.json next to this file; a subset run
+    ($SPARK_GRAFT_QUERIES) writes no file.
   * The LAST stdout line is a compact summary JSON, a few hundred bytes,
     guaranteed inside any reasonable tail window:
       {"metric": ..., "value": total_sec, "unit": "sec", "sf": ...,
-       "n_queries": N, "detail": "BENCH_DETAIL.json"}
+       "n_queries": N, "window_steal_share": ...,
+       "detail": "BENCH_DETAIL.json"}   # detail: full runs only
 
 Each query is forced end-to-end with a noop sink (full computation, no
 driver collect). First a tiny warm-up absorbs JVM/codegen startup.
@@ -178,29 +183,18 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # Record machine load going in (r6 VERDICT #8): the shared host's
-    # intermittent external load inflates suite totals ~±10-20%; a
-    # committed loadavg makes a noisy run self-describing instead of
-    # reading as a code regression.
-    loadavg_start = round(os.getloadavg()[0], 2)
+    from perfbench import host
 
-    # Host-speed probe: a fixed single-thread CPU workload whose wall
-    # depends only on how fast this container actually computes RIGHT
-    # NOW. Container loadavg is blind to hypervisor-level contention
-    # (r14: start-load 0.52 yet every query ~1.3-2x its r13 wall, on
-    # r13 code too); a probe above the calibrated quiet-window wall
-    # (~0.35 s on this box) flags the run. Run before AND after so a
-    # noise burst in either window is caught.
-    def cpu_probe() -> float:
-        t0 = time.perf_counter()
-        acc = 0
-        for i in range(5_000_000):
-            acc += i * i
-        assert acc > 0
-        return round(time.perf_counter() - t0, 3)
-
-    probe_gate = float(os.environ.get("SPARK_GRAFT_CPU_PROBE_GATE", "0.6"))
-    cpu_probe_start = cpu_probe()
+    # The host record perfbench/run.py writes: shape, load and a fixed
+    # CPU probe on both sides of the run, and the steal share of the
+    # timed loop. They describe the host; nothing here judges it.
+    detail: dict = {
+        "metric": "headline_queries_total_wall",
+        "unit": "sec",
+        "host": host.host_shape(),
+        "loadavg_before": os.getloadavg(),
+        "cpu_probe_before_s": host.cpu_probe_s(),
+    }
     from calidad_del_aire_etl_spark import registry
     from calidad_del_aire_etl_spark.session import get_session
 
@@ -240,34 +234,6 @@ def main() -> None:
         .write.format("noop").mode("overwrite").save()
     )
 
-    # Parallel-throughput probe: a fixed all-cores JVM job (codegen'd
-    # range-agg, no IO). The single-thread cpu_probe misses co-tenant
-    # contention that only bites under full parallelism (r14: probe
-    # 0.34 s nominal while 32-thread queries ran 2×); this one measures
-    # effective parallel throughput directly. Quiet-window nominal
-    # ~0.21-0.25 s on this box.
-    def spark_probe() -> float:
-        t0 = time.perf_counter()
-        spark.range(1 << 29).selectExpr("sum(id % 1000003) as s").collect()
-        return round(time.perf_counter() - t0, 3)
-
-    # Gate at ~1.6× the 0.21-0.25 s quiet nominal: the r14 refresh run
-    # read 0.497 at start — double nominal, correctly predicting the
-    # ~20 % suite inflation that followed — and sat just under a 0.5
-    # gate, so 0.4.
-    spark_probe_gate = float(
-        os.environ.get("SPARK_GRAFT_SPARK_PROBE_GATE", "0.4")
-    )
-    # Measurement fix (r15, guide §1): the FIRST spark_probe call pays
-    # the probe query's own one-time codegen/JIT — measured 1.1-3.1 s
-    # cold vs 0.20-0.33 s warm on an otherwise idle box — so the start
-    # reading always breached the 0.4 gate and every r14 run self-flagged
-    # regardless of actual contention. Warm the probe once (discarded)
-    # so both readings measure machine throughput, not compilation. The
-    # timed region is untouched.
-    spark_probe()
-    spark_probe_start = spark_probe()
-
     # Best-of-2 per query (r3 VERDICT #4): single-shot timings on a
     # shared machine showed 2-4x contention inflation vs a dedicated
     # session (ann_bruteforce_topk 2.11s benched vs 0.89s dedicated),
@@ -286,14 +252,15 @@ def main() -> None:
     # storage posture a production cluster uses for its fact tables.
     # The build cost is reported separately (it amortizes over every
     # query that ever joins the facts), and the flag rides the record.
-    bucketed_build: dict[str, float] = {}
     if os.environ.get("SPARK_GRAFT_BUCKETED") == "1":
         from calidad_del_aire_etl_spark.sinks.writers import (
             prepare_bucketed_facts,
         )
 
-        bucketed_build = prepare_bucketed_facts(spark, sf_dir)
+        detail["bucketed"] = True
+        detail["bucketed_build_s"] = prepare_bucketed_facts(spark, sf_dir)
     timings: dict[str, float] = {}
+    jiffies0 = host.cpu_jiffies()
     for name in names:
         best = None
         for _ in range(2):
@@ -303,88 +270,38 @@ def main() -> None:
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
         timings[name] = round(best, 3)
+    steal, total = (b - a for a, b in zip(jiffies0, host.cpu_jiffies()))
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # Load gate (VERDICT r13 #9): the r13 bpe_merges episode showed a
-    # loadavg of 5-8 inflates job-floor-bound queries by up to ±60%, so
-    # round-over-round comparisons on a loaded run are noise, not
-    # regressions. Gate on the STARTING loadavg only — by the end the
-    # bench's own 32 threads dominate the 1-min average, so end-load
-    # would flag every healthy run. A flagged run self-describes;
-    # ratio_report surfaces it. Container loadavg cannot see EXTERNAL
-    # hypervisor contention (the r14 episode: start-load 0.52, yet
-    # untouched queries ran 2× their r13 walls, reproduced on r13 code)
-    # — that is what the cpu_probe below is for.
-    load_gate = float(os.environ.get("SPARK_GRAFT_LOAD_GATE", "4.0"))
-    loadavg_end = round(os.getloadavg()[0], 2)
-    cpu_probe_end = cpu_probe()
-    spark_probe_end = spark_probe()
-    cpu_probe_flagged = max(cpu_probe_start, cpu_probe_end) > probe_gate
-    spark_probe_flagged = (
-        max(spark_probe_start, spark_probe_end) > spark_probe_gate
+    detail.update(
+        value=round(sum(timings.values()), 3),
+        queries=timings,
+        sf=float(sf) if sf.replace(".", "").isdigit() else sf,
+        window_steal_share=steal / total if total else 0.0,
+        loadavg_after=os.getloadavg(),
+        cpu_probe_after_s=host.cpu_probe_s(),
     )
-    load_flagged = (
-        loadavg_start > load_gate or cpu_probe_flagged or spark_probe_flagged
-    )
-    detail = {
-        "metric": "headline_queries_total_wall",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "loadavg_start": loadavg_start,
-        "loadavg_end": loadavg_end,
-        "load_gate": load_gate,
-        "load_flagged": load_flagged,
-        "cpu_probe_start_s": cpu_probe_start,
-        "cpu_probe_end_s": cpu_probe_end,
-        "cpu_probe_gate_s": probe_gate,
-        "spark_probe_start_s": spark_probe_start,
-        "spark_probe_end_s": spark_probe_end,
-        "spark_probe_gate_s": spark_probe_gate,
-    }
-    if bucketed_build or os.environ.get("SPARK_GRAFT_BUCKETED") == "1":
-        detail["bucketed"] = True
-        detail["bucketed_build_s"] = bucketed_build
-    # subset runs (SPARK_GRAFT_QUERIES) get their own detail file — they
-    # must not overwrite the full-suite record a prior summary line's
-    # `detail` pointer still references
-    detail_name = "BENCH_DETAIL_SUBSET.json" if only else "BENCH_DETAIL.json"
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), detail_name)
-    # Clobber guard (VERDICT r8 #2): round 7's snapshot overwrote the
-    # 14-query sf1 sweep with a 1-query run and destroyed the only
-    # committed at-scale evidence. Refuse to replace a detail file with
-    # one covering strictly fewer queries; divert to a .partial file the
-    # caller can merge by hand. SPARK_GRAFT_FORCE_DETAIL=1 overrides.
-    if (os.path.exists(detail_path)
-            and os.environ.get("SPARK_GRAFT_FORCE_DETAIL") != "1"):
-        try:
-            with open(detail_path) as fh:
-                prior = set(json.load(fh).get("queries", {}))
-        except (OSError, ValueError):
-            prior = set()
-        if prior - set(timings):
-            detail_path += ".partial"
-            print(f"refusing to shrink {detail_name} "
-                  f"(prior covers {sorted(prior - set(timings))}); "
-                  f"writing {detail_path} instead", file=sys.stderr)
-    with open(detail_path, "w") as fh:
-        json.dump(detail, fh, indent=1, sort_keys=True)
-        fh.write("\n")
-    # Detail first (humans/logs), compact summary LAST — the driver keeps a
-    # bounded stdout tail and parses the final JSON line; round 4's single
-    # ~3 KB line outgrew that window and the official bench record was lost.
-    print(json.dumps(detail))
     summary = {
-        "metric": "headline_queries_total_wall",
+        "metric": detail["metric"],
         "value": detail["value"],
         "unit": "sec",
         "sf": detail["sf"],
         "n_queries": len(timings),
-        "detail": detail_name,
-        "loadavg_start": loadavg_start,
-        "load_flagged": load_flagged,
+        "window_steal_share": detail["window_steal_share"],
     }
+    # Only a full run writes the committed record: HEADLINE is
+    # append-only, so it never covers fewer queries than the last one.
+    # A subset run prints its detail and leaves every file alone.
+    if not only:
+        path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
+        with open(path, "w") as fh:
+            json.dump(detail, fh, indent=1, sort_keys=True)
+            fh.write("\n")
+        summary["detail"] = "BENCH_DETAIL.json"
+    # Detail first (humans/logs), compact summary LAST — the driver keeps a
+    # bounded stdout tail and parses the final JSON line; round 4's single
+    # ~3 KB line outgrew that window and the official bench record was lost.
+    print(json.dumps(detail))
     sys.stdout.flush()
     print(json.dumps(summary))
     spark.stop()

@@ -28,23 +28,31 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def mg_fold(
+    counts: dict[str, int], decr: int, values: pd.Series, capacity: int
+) -> tuple[dict[str, int], int]:
+    """One Misra-Gries step over a batch of values: their value_counts
+    merge into ``counts``; on overflow the (len - capacity)-th smallest
+    count is subtracted from everything and added to ``decr`` (a batched
+    decrement round — same invariant, fewer passes)."""
+    for v, c in values.value_counts().items():
+        counts[v] = counts.get(v, 0) + int(c)
+    if len(counts) > capacity:
+        t = sorted(counts.values())[len(counts) - capacity - 1]
+        decr += t
+        counts = {v: c - t for v, c in counts.items() if c > t}
+    return counts, decr
+
+
 def _mg_partition(col: str, capacity: int):
-    """Per-partition Misra-Gries fold, Arrow-batch-vectorized: each
-    batch's value_counts merges into the summary dict; on overflow the
-    (len - capacity)-th smallest count is subtracted from everything
-    (a batched decrement round — same invariant, fewer passes)."""
+    """Per-partition Misra-Gries fold, Arrow-batch-vectorized: one
+    :func:`mg_fold` per batch."""
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counts: dict[str, int] = {}
         decr = 0
         for pdf in batches:
-            for v, c in pdf[col].value_counts().items():
-                counts[v] = counts.get(v, 0) + int(c)
-            if len(counts) > capacity:
-                cs = sorted(counts.values())
-                t = cs[len(counts) - capacity - 1]
-                decr += t
-                counts = {v: c - t for v, c in counts.items() if c > t}
+            counts, decr = mg_fold(counts, decr, pdf[col], capacity)
         items = list(counts.items())
         yield pd.DataFrame(
             {

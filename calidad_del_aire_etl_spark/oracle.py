@@ -13,8 +13,10 @@ consumed by two front doors:
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
+import threading
 
 import pandas as pd
 
@@ -68,6 +70,23 @@ def duck_connection(sf_dir: str):
     return con
 
 
+@contextlib.contextmanager
+def interruptible_connection(sf_dir: str, timeout_s: float):
+    """A fresh :func:`duck_connection` whose running query is interrupted
+    (``duckdb.InterruptException``) once ``timeout_s`` has passed, closed
+    on exit. Fresh, not shared: a timer firing between a query's return
+    and its cancel would leave a pending interrupt that aborts the next
+    query on a shared connection, mis-recording a fast twin as a DNF."""
+    con = duck_connection(sf_dir)
+    timer = threading.Timer(timeout_s, con.interrupt)
+    timer.start()
+    try:
+        yield con
+    finally:
+        timer.cancel()
+        con.close()
+
+
 def degenerate_frame(df) -> bool:
     """True when an oracle answer can't discriminate a wrong
     implementation: zero rows, or every numeric cell NULL (e.g. TPC-H
@@ -98,9 +117,8 @@ def compare_query(
     sanity check. ``twin_timeout`` > 0 interrupts a runaway DuckDB twin
     (the quadratic dedup oracles at big SFs) and reports a single
     ``TIMEOUT`` problem — a DNF is information, not a mismatch; callers
-    should count it separately. The timed path uses a fresh connection
-    so a Timer firing between fetch and cancel can't leave a pending
-    interrupt on the shared one (the tools/baseline.py lesson).
+    should count it separately. The timed path runs on an
+    :func:`interruptible_connection`, never on ``con``.
 
     Pass a dict as ``out`` to receive ``out["oracle_df"]`` — the raw
     (pre-normalization) twin frame — so callers needing a degeneracy
@@ -109,20 +127,13 @@ def compare_query(
     if oracle is None:
         return len(sdf), []
     if twin_timeout > 0:
-        import threading
-
         import duckdb
 
-        qcon = duck_connection(sf_dir)
-        timer = threading.Timer(twin_timeout, qcon.interrupt)
-        timer.start()
         try:
-            ddf = qcon.execute(oracle).df()
+            with interruptible_connection(sf_dir, twin_timeout) as qcon:
+                ddf = qcon.execute(oracle).df()
         except duckdb.InterruptException:
             return len(sdf), [f"TIMEOUT: twin exceeded {twin_timeout}s (DNF)"]
-        finally:
-            timer.cancel()
-            qcon.close()
     else:
         ddf = con.execute(oracle).df()
     if out is not None:

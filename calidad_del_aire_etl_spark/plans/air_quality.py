@@ -10,9 +10,6 @@ writes anything.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -22,26 +19,6 @@ from ..sinks import writers
 from ..sources.generator import generate_air_quality
 
 POLLUTANTS = ["pm25", "pm10", "no2", "o3", "co", "temperature", "humidity"]
-
-
-@dataclass
-class Pipeline:
-    """A named chain of DataFrame stages (the engine's DAG analog)."""
-
-    name: str
-    stages: list[tuple[str, Callable[[DataFrame], DataFrame]]] = field(default_factory=list)
-
-    def stage(self, name: str):
-        def deco(fn):
-            self.stages.append((name, fn))
-            return fn
-
-        return deco
-
-    def run(self, df: DataFrame) -> DataFrame:
-        for _, fn in self.stages:
-            df = fn(df)
-        return df
 
 
 def extract(spark: SparkSession, num_days: int = 90) -> DataFrame:
@@ -95,23 +72,23 @@ def load(df: DataFrame, daily: DataFrame, out_dir: str) -> None:
     writers.write_parquet(daily, f"{out_dir}/daily")
 
 
-def validate(df: DataFrame) -> DataFrame:
-    """VALIDATE (dag:365-407): quality report over the transformed set."""
-    return aggregates.validation_report(
+def validate(df: DataFrame) -> dict:
+    """VALIDATE (dag:365-407): the quality report over the transformed
+    set, with the reference's checks (dag:396-401): fail under 1000
+    rows, warn over 5 % nulls."""
+    report = aggregates.validation_report(
         df, "ts", "station", POLLUTANTS, category_col="air_quality_category"
-    )
-
-
-def run_full_pipeline(spark: SparkSession, out_dir: str, num_days: int = 30) -> dict:
-    """extract ≫ transform ≫ load ≫ validate, returning the quality report
-    (the reference fails under 1000 rows / warns over 5 % nulls —
-    dag:396-401; same thresholds here)."""
-    raw = extract(spark, num_days=num_days)
-    clean = transform(raw)
-    daily = daily_summary(clean)
-    load(clean, daily, out_dir)
-    report = validate(clean).collect()[0].asDict()
+    ).collect()[0].asDict()
     if report["total_records"] < 1000:
         raise ValueError("insufficient data for analysis")
     report["null_warning"] = bool(report["null_percentage"] > 5)
     return report
+
+
+def run_full_pipeline(spark: SparkSession, out_dir: str, num_days: int = 30) -> dict:
+    """extract ≫ transform ≫ load ≫ validate, returning the quality report."""
+    raw = extract(spark, num_days=num_days)
+    clean = transform(raw)
+    daily = daily_summary(clean)
+    load(clean, daily, out_dir)
+    return validate(clean)

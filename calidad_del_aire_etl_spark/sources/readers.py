@@ -81,17 +81,6 @@ def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame
     return spark.read.schema(schema).json(path)
 
 
-def normalize_nanos_ts(df: DataFrame, ts_cols: tuple[str, ...] = ("ts",)) -> DataFrame:
-    """Convert long-nanosecond columns (from TIMESTAMP(NANOS) parquet read
-    under ``spark.sql.legacy.parquet.nanosAsLong``) to µs timestamps.
-    Integer division — a double round-trip loses µs precision at 10^18."""
-    for c in ts_cols:
-        fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        if fields.get(c) == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
-    return df
-
-
 def read_json_with_quarantine(
     spark: SparkSession, path: str, schema: T.StructType
 ) -> tuple[DataFrame, DataFrame]:

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.sketches import mg_fold
 from ..session import scoped_conf
 
 EVENTS_SCHEMA = T.StructType(
@@ -363,13 +364,7 @@ def streaming_heavy_hitters(
         else:
             counts, decr = {}, 0
         for pdf in pdfs:
-            for v, c in pdf["v"].value_counts().items():
-                counts[v] = counts.get(v, 0) + int(c)
-            if len(counts) > capacity:
-                cs = sorted(counts.values())
-                t = cs[len(counts) - capacity - 1]
-                decr += t
-                counts = {v: c - t for v, c in counts.items() if c > t}
+            counts, decr = mg_fold(counts, decr, pdf["v"], capacity)
         state.update((list(counts.keys()), list(counts.values()), decr))
         items = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
         yield pd.DataFrame(

@@ -101,6 +101,19 @@ def test_sweep_catches_an_injected_mismatch(spark, duck):
     assert problems, "comparator failed to flag a wrong oracle"
 
 
+def test_twin_timeout_reports_dnf_and_spares_shared_connection(spark, duck):
+    """A twin that overruns ``twin_timeout`` is interrupted on its own
+    connection: one TIMEOUT problem, and the shared connection passed in
+    still answers."""
+    slow = "SELECT SUM(a.range * b.range) FROM range(100000) a, range(100000) b"
+    n, problems = oracle.compare_query(
+        spark, duck, lambda s, _sf: s.range(1), slow, SF, twin_timeout=0.2
+    )
+    assert n == 1
+    assert len(problems) == 1 and problems[0].startswith("TIMEOUT"), problems
+    assert duck.execute("SELECT 1").fetchall() == [(1,)]
+
+
 def test_norm_frame_canonicalizes_negative_zero():
     """Numerically-equal frames must hash equal: DuckDB's ROUND emits
     −0.0 where Spark's never does (r12 sf1 sweep class #2)."""

@@ -53,6 +53,18 @@ def test_full_pipeline_runs_and_validates(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def test_validate_fails_under_1000_rows_and_reports_nulls(spark):
+    """The reference's validate gate (dag:396-401): 8 days x 24 h x 5
+    stations = 960 rows is too few; 10 days passes with a null warning
+    flag in the report."""
+    short = air_quality.transform(air_quality.extract(spark, num_days=8))
+    with pytest.raises(ValueError, match="insufficient data"):
+        air_quality.validate(short)
+    report = air_quality.validate(air_quality.transform(air_quality.extract(spark, num_days=10)))
+    assert report["total_records"] >= 1000
+    assert "null_warning" in report
+
+
 def test_load_normalizes_ntz_and_nanos_timestamps(spark, tmp_path):
     """registry.load must deliver plain TIMESTAMP regardless of how the
     parquet writer typed `ts`: TIMESTAMP(NANOS) (arrives as bigint under

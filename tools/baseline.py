@@ -67,7 +67,7 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from bench import HEADLINE
 
-    from calidad_del_aire_etl_spark.oracle import duck_connection
+    from calidad_del_aire_etl_spark.oracle import duck_connection, interruptible_connection
 
     oracles = entry_mod.oracle_sql()
     # view setup is shared with the oracle-parity gate (one source of
@@ -89,24 +89,13 @@ def main() -> None:
             skipped.append(name)
             continue
         if timeout_s > 0:
-            # fresh connection per timed query: a Timer that fires in the
-            # window between fetchall returning and cancel() would leave a
-            # pending interrupt that aborts the NEXT query on a shared
-            # connection, mis-recording a fast twin as the DNF
-            import threading
-
-            qcon = duck_connection(sf_dir)
-            timer = threading.Timer(timeout_s, qcon.interrupt)
-            timer.start()
-            t0 = time.perf_counter()
             try:
-                qcon.execute(oracles[name]).fetchall()
-                timings[name] = round(time.perf_counter() - t0, 3)
+                with interruptible_connection(sf_dir, timeout_s) as qcon:
+                    t0 = time.perf_counter()
+                    qcon.execute(oracles[name]).fetchall()
+                    timings[name] = round(time.perf_counter() - t0, 3)
             except duckdb.InterruptException:
                 timed_out.append(name)
-            finally:
-                timer.cancel()
-                qcon.close()
         else:
             t0 = time.perf_counter()
             con.execute(oracles[name]).fetchall()

@@ -93,15 +93,8 @@ def main() -> None:
                 "overwritten by a later run): " + "; ".join(mismatches)
             )
     base = json.load(open(base_path))
-    if bench.get("load_flagged"):
-        print(
-            "!! LOAD-FLAGGED RUN: loadavg "
-            f"{bench.get('loadavg_start')} -> {bench.get('loadavg_end')} "
-            f"exceeded the gate ({bench.get('load_gate')}); per-query "
-            "walls on job-floor-bound queries can be inflated ±60% — "
-            "treat round-over-round deltas as noise, re-run quiet before "
-            "adjudicating a regression (VERDICT r13 #9)\n"
-        )
+    if "window_steal_share" in bench:
+        print(f"host steal share over the timed loop: {bench['window_steal_share']:.1%}\n")
     bq, dq, warm, bkt = _overlay(bench, base)
     comp = {k: v for k, v in bq.items() if k in dq and dq[k] is not None}
     ds, dd = sum(comp.values()), sum(dq[k] for k in comp)
