@@ -225,52 +225,24 @@ def iqr_clip(
     cols: Sequence[str],
     group_cols: Sequence[str] = (),
     k: float = 3.0,
-    method: str = "join",
     bounds_over: DataFrame | None = None,
 ) -> DataFrame:
     """Clip columns to [Q1 − k·IQR, Q3 + k·IQR] using exact percentiles.
 
     Mirrors reference dag:170-177 (k=3 fences). The reference computes
     quantiles per pandas chunk — an artifact of single-node memory limits;
-    the engine computes them over the whole dataset (or per ``group_cols``).
+    the engine computes them over the whole dataset (or per ``group_cols``)
+    as a tiny groupBy-percentile relation, broadcast-joined back: the
+    fact table is read twice but never shuffled for the bounds.
 
-    Two physically different, result-identical strategies:
-
-    - ``method="join"`` (default): tiny groupBy-percentile relation,
-      broadcast-joined back. Best when ``df`` is a cheap scan — the fact
-      table is read twice but never shuffled for the bounds.
-    - ``method="window"``: percentiles as window aggregates over the group
-      partition — one extra full-width shuffle on ``group_cols``, but the
-      upstream plan is evaluated exactly ONCE. Best when ``df`` is an
-      expensive subtree (e.g. mid-pipeline after interpolation windows),
-      which Spark would otherwise recompute for the bounds branch.
-
-    ``bounds_over`` (join method only): compute the fences over a
-    DIFFERENT relation than the one being clipped — e.g. clip a deduped
-    subset with bounds from the full pre-dedup relation, keeping the
-    reference's compute-bounds-then-filter order while letting the
-    clipped side stay in its upstream partitioning. When the bounds
-    relation shares a subtree with ``df``, Catalyst's ReuseExchange
-    dedupes the shuffle between the two branches.
+    ``bounds_over``: compute the fences over a DIFFERENT relation than
+    the one being clipped — e.g. clip a deduped subset with bounds from
+    the full pre-dedup relation, keeping the reference's
+    compute-bounds-then-filter order while letting the clipped side stay
+    in its upstream partitioning. When the bounds relation shares a
+    subtree with ``df``, Catalyst's ReuseExchange dedupes the shuffle
+    between the two branches.
     """
-    if method == "window" and group_cols:
-        w = Window.partitionBy(*group_cols)
-        out = df
-        for c in cols:
-            q1 = F.expr(f"percentile({c}, 0.25)").over(w)
-            q3 = F.expr(f"percentile({c}, 0.75)").over(w)
-            lo = q1 - F.lit(k) * (q3 - q1)
-            hi = q3 + F.lit(k) * (q3 - q1)
-            out = out.withColumn(
-                c,
-                F.round(
-                    F.when(F.col(c) < lo, lo).when(F.col(c) > hi, hi).otherwise(F.col(c))
-                    + F.lit(1e-9),
-                    4,
-                ),
-            )
-        return out
-
     aggs = []
     for c in cols:
         aggs.append(F.expr(f"percentile({c}, 0.25)").alias(f"__q1_{c}"))

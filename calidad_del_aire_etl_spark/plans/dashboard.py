@@ -9,11 +9,10 @@ panels reduce to a few hundred rows at any scale; the rolling-mean
 panel does not reduce — it collects one value per event row, so
 ``render_png`` collects only its drawn ``rolling_mean`` column.
 
-Rendering proper is import-gated: with matplotlib present,
-``render_png`` draws the reference's multi-panel layout
-(dashboard:70-254); without it, ``export_csv`` hands the same six
-relations to any external BI/plotting tool, which is the engine-shaped
-contract anyway. The data side is always real and tested.
+``render_png`` draws the reference's six-panel layout (dashboard:70-254)
+with the stdlib-only rasterizer in :mod:`rasterize`, the same bytes on
+every host; ``export_csv`` hands the same six relations to any external
+BI/plotting tool. The data side is always real and tested.
 """
 
 from __future__ import annotations
@@ -51,66 +50,19 @@ def export_csv(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]
     return paths
 
 
-def _collect_panels(spark: SparkSession, sf_dir: str) -> dict:
-    """:func:`chart_relations` as pandas frames for drawing. The
-    rolling-mean panel draws only its last column, one value per event
-    row, so only ``rolling_mean`` is collected from it."""
-    rels = chart_relations(spark, sf_dir)
-    rels["dash_rolling_mean"] = rels["dash_rolling_mean"].select("rolling_mean")
-    return {k: v.toPandas() for k, v in rels.items()}
-
-
 def render_png(spark: SparkSession, sf_dir: str, out_path: str) -> str:
     """Multi-panel PNG like the reference's create_dashboard_plots
-    (dashboard_calidad_aire.py:246-254). With matplotlib present it
-    draws the reference's layout; without it (this container) the
-    stdlib-only rasterizer in :mod:`rasterize` draws the same six
-    panels — plainer, but real PNG bytes either way, and the relations
-    come from :func:`chart_relations` in both paths."""
-    try:
-        import matplotlib
-
-        matplotlib.use("Agg")
-        import matplotlib.pyplot as plt
-    except ImportError:
-        return _render_png_builtin(spark, sf_dir, out_path)
-
-    rels = _collect_panels(spark, sf_dir)
-
-    fig, axes = plt.subplots(3, 2, figsize=(18, 14))  # pragma: no cover
-    (ax_kpi, ax_roll), (ax_dow, ax_station), (ax_hour, ax_corr) = axes
-    kpi = rels["dash_kpis"].iloc[0]
-    ax_kpi.axis("off")
-    ax_kpi.text(0.02, 0.5, " | ".join(f"{k}={v}" for k, v in kpi.items()), fontsize=10)
-    roll = rels["dash_rolling_mean"]
-    ax_roll.plot(range(len(roll)), roll.iloc[:, -1])
-    ax_roll.set_title("rolling mean")
-    dow = rels["dash_dow_distribution"]
-    ax_dow.bar(dow.iloc[:, 0].astype(str), dow.iloc[:, 1])
-    ax_dow.set_title("day-of-week")
-    st = rels["dash_station_compare"].head(20)
-    ax_station.bar(st.iloc[:, 0].astype(str), st.iloc[:, 1])
-    ax_station.set_title("stations")
-    hr = rels["dash_hourly_pattern"].sort_values(hr_col := "hour")
-    ax_hour.plot(hr[hr_col], hr.iloc[:, 1])
-    ax_hour.set_title("hourly pattern")
-    corr = rels["dash_corr_matrix"]
-    ax_corr.axis("off")
-    ax_corr.table(cellText=corr.round(3).values.tolist(), loc="center")
-    ax_corr.set_title("correlations")
-    fig.tight_layout()
-    fig.savefig(out_path, dpi=120)
-    plt.close(fig)
-    return out_path
-
-
-def _render_png_builtin(spark: SparkSession, sf_dir: str, out_path: str) -> str:
-    """The six-panel layout on the stdlib rasterizer: KPI text panel,
-    rolling-mean line, day-of-week bars, station bars, hourly line,
-    correlation text grid — same panel order as the matplotlib path."""
+    (dashboard_calidad_aire.py:246-254), drawn by the stdlib-only
+    rasterizer in :mod:`rasterize` from :func:`chart_relations`: KPI
+    text panel, rolling-mean line, day-of-week bars, station bars,
+    hourly line, correlation text grid. The rolling-mean panel draws
+    one value per event row, so only its ``rolling_mean`` column is
+    collected."""
     from . import rasterize as rz
 
-    rels = _collect_panels(spark, sf_dir)
+    rels = chart_relations(spark, sf_dir)
+    rels["dash_rolling_mean"] = rels["dash_rolling_mean"].select("rolling_mean")
+    rels = {k: v.toPandas() for k, v in rels.items()}
     W, H, cols, rows, pad = 900, 700, 2, 3, 10
     pw, ph = (W - pad * (cols + 1)) // cols, (H - pad * (rows + 1)) // rows
     c = rz.Canvas(W, H)

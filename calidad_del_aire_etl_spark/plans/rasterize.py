@@ -1,14 +1,13 @@
 """Dependency-free PNG chart rasterizer (stdlib only: zlib + struct).
 
 The reference renders its dashboard with matplotlib
-(dashboard_calidad_aire.py:246-254); this container ships without
-matplotlib and installs are off-limits, so ``plans.dashboard.render_png``
-falls back to this module: a tiny software rasterizer (RGB byte buffer,
-Bresenham lines, filled bars, a 5x7 bitmap font for titles) and a
-from-scratch PNG encoder (signature + IHDR + zlib'd filter-0 scanlines +
-IEND — the minimum the spec requires). Charts come out plain but real:
-the bytes open in any viewer, and pytest decodes them back to prove the
-pipeline end-to-end.
+(dashboard_calidad_aire.py:246-254); the engine takes no plotting
+dependency, so ``plans.dashboard.render_png`` draws with this module: a
+tiny software rasterizer (RGB byte buffer, Bresenham lines, filled bars,
+a 5x7 bitmap font for titles) and a from-scratch PNG encoder
+(signature + IHDR + zlib'd filter-0 scanlines + IEND — the minimum the
+spec requires). Charts come out plain but real: the bytes open in any
+viewer, and pytest decodes them back to prove the pipeline end-to-end.
 
 This is a driver-side leaf: it only touches the chart-ready rows the
 dashboard collects, never the fact data. Most panels reduce to a few

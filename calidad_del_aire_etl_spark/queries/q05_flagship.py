@@ -112,8 +112,7 @@ def q_etl_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         df, key_cols=["user_id", "event_type", "__hr"], tiebreak_cols=["event_id"]
     )
     df = cleaning.iqr_clip(
-        df, ["value"], group_cols=["event_type"], k=3.0, method="join",
-        bounds_over=interp,
+        df, ["value"], group_cols=["event_type"], k=3.0, bounds_over=interp
     )
     df = features.with_aqi(df, "value", out_col="aqi")
     df = features.with_quality_category(df, "aqi")

@@ -10,6 +10,7 @@ compression choice (dag:265).
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame
 
@@ -579,9 +580,7 @@ def _commit_snapshot(spark, path: str, version: int, files: list[str]) -> bool:
     writer leaves no trace. A writer that crashes mid-commit leaves only
     a ``.tmp-*`` staging dir — never a claimed version, so there are no
     permanently-burned version numbers to skip over."""
-    import uuid as _uuid
-
-    staged = f"{path}/_snapshots/.tmp-{_uuid.uuid4().hex[:12]}"
+    staged = f"{path}/_snapshots/.tmp-{uuid.uuid4().hex[:12]}"
     manifest = spark.createDataFrame([(f,) for f in files], "file string")
     manifest.coalesce(1).write.mode("error").parquet(staged)
     global _test_pre_publish_hook
@@ -592,6 +591,89 @@ def _commit_snapshot(spark, path: str, version: int, files: list[str]) -> bool:
         return True
     _delete_dir(spark, staged)
     return False
+
+
+def _new_commit_dir(path: str) -> str:
+    return f"{path}/data/c-{uuid.uuid4().hex[:12]}"
+
+
+def _written_files(spark, commit_dir: str) -> list[str]:
+    """The data files one commit wrote, as ``input_file_name()`` URIs —
+    the form manifests store (vacuum normalizes them)."""
+    from pyspark.sql import functions as F
+
+    return sorted(
+        r["f"]
+        for r in spark.read.parquet(commit_dir)
+        .select(F.input_file_name().alias("f"))
+        .distinct()
+        .collect()
+    )
+
+
+def _snapshot_files(spark, path: str, version: int) -> list[str]:
+    """The data files snapshot ``version`` lists, in manifest order."""
+    return [
+        r["file"] for r in spark.read.parquet(f"{path}/_snapshots/v={version}").collect()
+    ]
+
+
+def _split_on_keys(
+    spark, path: str, version: int, keys: DataFrame, key_cols: list[str],
+    broadcast_keys: bool,
+) -> tuple[list[str], DataFrame | None]:
+    """The affected-file discovery of MERGE and DELETE (see
+    :func:`merge_versioned_parquet`) against snapshot ``version``:
+    (untouched files, the affected files' rows anti-joined on the keys —
+    None when no file holds a key)."""
+    from pyspark.sql import functions as F
+
+    files = _snapshot_files(spark, path, version)
+    kd = keys.select(*key_cols).distinct()
+    if broadcast_keys:
+        kd = F.broadcast(kd)
+    tagged = spark.read.parquet(*files).withColumn("__file", F.input_file_name())
+    affected = sorted(
+        r["__file"]
+        for r in tagged.join(kd, key_cols, "left_semi")
+        .select("__file")
+        .distinct()
+        .collect()
+    )
+    aff = set(affected)
+    untouched = [f for f in files if f not in aff]
+    if not affected:
+        return untouched, None
+    return untouched, spark.read.parquet(*affected).join(kd, key_cols, "left_anti")
+
+
+def _commit_loop(spark, path: str, verb: str, max_retries: int, plan) -> int:
+    """The optimistic commit of append, MERGE and DELETE. Each attempt
+    asks ``plan(latest version)`` for (files carried over, rows to write
+    as new files or None) and publishes their union as the next version.
+    A lost race or a :func:`_vanished_file_race` deletes the attempt's
+    commit dir and re-plans against the new latest snapshot;
+    ``max_retries`` lost races raise :class:`CommitConflictError`."""
+    for _ in range(max_retries + 1):
+        current = latest_version(spark, path)
+        commit_dir = _new_commit_dir(path)
+        try:
+            files, rows = plan(current)
+            if rows is not None:
+                rows.write.mode("error").parquet(commit_dir)
+                files = files + _written_files(spark, commit_dir)
+        except Exception as e:
+            if not _vanished_file_race(e):
+                raise
+            _delete_dir(spark, commit_dir)
+            continue
+        version = 0 if current is None else current + 1
+        if _commit_snapshot(spark, path, version, files):
+            return version
+        _delete_dir(spark, commit_dir)
+    raise CommitConflictError(
+        f"{verb}: lost {max_retries + 1} commit races at {path}"
+    )
 
 
 def write_versioned_parquet(
@@ -618,35 +700,21 @@ def write_versioned_parquet(
     republished — append/append races are always mergeable, so the
     data files never need rewriting, only the file list.
     """
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
     spark = df.sparkSession
-    commit_dir = f"{path}/data/c-{_uuid.uuid4().hex[:12]}"
-    df.write.mode("error").parquet(commit_dir)
-    new_files = sorted(
-        r["f"]
-        for r in spark.read.parquet(commit_dir)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    )
-    for _ in range(max_retries + 1):
-        current = latest_version(spark, path)
-        base: list[str] = []
+    data_dir = _new_commit_dir(path)
+    df.write.mode("error").parquet(data_dir)
+    new_files = _written_files(spark, data_dir)
+
+    def plan(current):
         if mode == "append" and current is not None:
-            base = [
-                r["file"]
-                for r in spark.read.parquet(f"{path}/_snapshots/v={current}").collect()
-            ]
-        version = 0 if current is None else current + 1
-        if _commit_snapshot(spark, path, version, base + new_files):
-            return version
-    _delete_dir(spark, commit_dir)
-    raise CommitConflictError(
-        f"write_versioned_parquet: lost {max_retries + 1} commit races at {path}"
-    )
+            return _snapshot_files(spark, path, current) + new_files, None
+        return new_files, None
+
+    try:
+        return _commit_loop(spark, path, "write_versioned_parquet", max_retries, plan)
+    except CommitConflictError:
+        _delete_dir(spark, data_dir)
+        raise
 
 
 def latest_version(spark, path: str) -> int | None:
@@ -671,10 +739,7 @@ def read_versioned_parquet(spark, path: str, version: int | None = None) -> Data
         version = latest_version(spark, path)
     if version is None:
         raise ValueError(f"no snapshots at {path}")
-    files = [
-        r["file"] for r in spark.read.parquet(f"{path}/_snapshots/v={version}").collect()
-    ]
-    return spark.read.parquet(*files)
+    return spark.read.parquet(*_snapshot_files(spark, path, version))
 
 
 def merge_versioned_parquet(
@@ -713,10 +778,6 @@ def merge_versioned_parquet(
     semantics. After ``max_retries`` lost races it raises
     :class:`CommitConflictError` with no trace left behind.
     """
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
     if updates.isEmpty():
         # An all-duplicate daily increment or an empty CDC micro-batch
         # used to commit a new snapshot referencing one empty parquet
@@ -727,74 +788,23 @@ def merge_versioned_parquet(
         current = latest_version(spark, path)
         if current is not None:
             return current
-    for _ in range(max_retries + 1):
-        current = latest_version(spark, path)
-        commit_dir = f"{path}/data/c-{_uuid.uuid4().hex[:12]}"
+
+    def plan(current):
         if current is None:
             # First commit on an empty table. NOT delegated to
             # write_versioned_parquet(mode='overwrite'): its conflict
             # rebase would republish updates-only as v1, silently
             # dropping a racing writer's v0 — a merge must instead
-            # re-enter this loop and merge against the new snapshot.
-            updates.write.mode("error").parquet(commit_dir)
-            new_files = sorted(
-                r["f"]
-                for r in spark.read.parquet(commit_dir)
-                .select(F.input_file_name().alias("f"))
-                .distinct()
-                .collect()
-            )
-            if _commit_snapshot(spark, path, 0, new_files):
-                return 0
-            _delete_dir(spark, commit_dir)
-            continue
-        try:
-            files = [
-                r["file"]
-                for r in spark.read.parquet(f"{path}/_snapshots/v={current}").collect()
-            ]
-            keys = updates.select(*key_cols).distinct()
-            if broadcast_keys:
-                keys = F.broadcast(keys)
-            tagged = spark.read.parquet(*files).withColumn("__file", F.input_file_name())
-            affected = sorted(
-                r["__file"]
-                for r in tagged.join(keys, key_cols, "left_semi")
-                .select("__file")
-                .distinct()
-                .collect()
-            )
-            aff = set(affected)
-            untouched = [f for f in files if f not in aff]
-            if affected:
-                survivors = spark.read.parquet(*affected).join(
-                    keys, key_cols, "left_anti"
-                )
-                merged = survivors.unionByName(updates)
-            else:
-                merged = updates
-            merged.write.mode("error").parquet(commit_dir)
-        except Exception as e:
-            # A concurrent vacuum retired this snapshot's files mid-read
-            # (possible only when a newer snapshot exists) — a lost race
-            # in all but name: clean up and rebase on the new latest.
-            if not _vanished_file_race(e):
-                raise
-            _delete_dir(spark, commit_dir)
-            continue
-        new_files = sorted(
-            r["f"]
-            for r in spark.read.parquet(commit_dir)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
+            # re-plan and merge against the new snapshot.
+            return [], updates
+        untouched, survivors = _split_on_keys(
+            spark, path, current, updates, key_cols, broadcast_keys
         )
-        if _commit_snapshot(spark, path, current + 1, untouched + new_files):
-            return current + 1
-        _delete_dir(spark, commit_dir)
-    raise CommitConflictError(
-        f"merge_versioned_parquet: lost {max_retries + 1} commit races at {path}"
-    )
+        return untouched, (
+            updates if survivors is None else survivors.unionByName(updates)
+        )
+
+    return _commit_loop(spark, path, "merge_versioned_parquet", max_retries, plan)
 
 
 def vacuum_versioned_parquet(
@@ -840,10 +850,7 @@ def vacuum_versioned_parquet(
         if not fs.exists(p):
             continue
         try:
-            referenced |= {
-                r["file"]
-                for r in spark.read.parquet(f"{path}/_snapshots/v={v}").collect()
-            }
+            referenced |= set(_snapshot_files(spark, path, v))
         except Exception as e:
             if not _vanished_file_race(e):
                 raise
@@ -892,12 +899,9 @@ def vacuum_versioned_parquet(
             # a file referenced only by expired versions is known-committed
             # garbage, deletable regardless of age.
             try:
-                expired_refs |= {
-                    r["file"]
-                    for r in spark.read.parquet(
-                        f"{path}/_snapshots/{name}"
-                    ).collect()
-                }
+                expired_refs |= set(
+                    _snapshot_files(spark, path, int(name.split("=", 1)[1]))
+                )
             except Exception as e:
                 if not _vanished_file_race(e):
                     raise
@@ -979,59 +983,13 @@ def delete_versioned_parquet(
     commit: a lost race deletes the stale survivor rewrite and re-runs
     the delete against the new latest snapshot. Returns the new
     version."""
-    import uuid as _uuid
 
-    from pyspark.sql import functions as F
-
-    for _ in range(max_retries + 1):
-        current = latest_version(spark, path)
+    def plan(current):
         if current is None:
             raise ValueError(f"no snapshots at {path}")
-        commit_dir = None
-        try:
-            files = [
-                r["file"]
-                for r in spark.read.parquet(f"{path}/_snapshots/v={current}").collect()
-            ]
-            kd = keys.select(*key_cols).distinct()
-            if broadcast_keys:
-                kd = F.broadcast(kd)
-            tagged = spark.read.parquet(*files).withColumn("__file", F.input_file_name())
-            affected = sorted(
-                r["__file"]
-                for r in tagged.join(kd, key_cols, "left_semi")
-                .select("__file")
-                .distinct()
-                .collect()
-            )
-            aff = set(affected)
-            untouched = [f for f in files if f not in aff]
-            new_files: list[str] = []
-            if affected:
-                survivors = spark.read.parquet(*affected).join(kd, key_cols, "left_anti")
-                commit_dir = f"{path}/data/c-{_uuid.uuid4().hex[:12]}"
-                survivors.write.mode("error").parquet(commit_dir)
-                new_files = sorted(
-                    r["f"]
-                    for r in spark.read.parquet(commit_dir)
-                    .select(F.input_file_name().alias("f"))
-                    .distinct()
-                    .collect()
-                )
-        except Exception as e:
-            # vacuum retired the snapshot mid-read (see merge) → rebase
-            if not _vanished_file_race(e):
-                raise
-            if commit_dir is not None:
-                _delete_dir(spark, commit_dir)
-            continue
-        if _commit_snapshot(spark, path, current + 1, untouched + new_files):
-            return current + 1
-        if commit_dir is not None:
-            _delete_dir(spark, commit_dir)
-    raise CommitConflictError(
-        f"delete_versioned_parquet: lost {max_retries + 1} commit races at {path}"
-    )
+        return _split_on_keys(spark, path, current, keys, key_cols, broadcast_keys)
+
+    return _commit_loop(spark, path, "delete_versioned_parquet", max_retries, plan)
 
 
 # Spark SQL simpleString -> DDL type, per dialect. The reference DAG

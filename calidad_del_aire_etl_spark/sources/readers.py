@@ -98,8 +98,11 @@ def read_json_with_quarantine(
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
         # corrupt-record capture requires materialization before the
-        # filter (Spark refuses filters on the raw corrupt column alone)
-        .cache()
+        # filter (Spark refuses filters on the raw corrupt column alone).
+        # A lazy localCheckpoint materializes on the first action and
+        # its blocks go to the ContextCleaner; a cache() here would stay
+        # in the CacheManager for the session, one entry per input.
+        .localCheckpoint(eager=False)
     )
     good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     bad = df.filter(F.col("_corrupt_record").isNotNull()).select("_corrupt_record")
@@ -122,7 +125,7 @@ def read_csv_with_quarantine(
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .option("header", header)
         .csv(path)
-        .cache()
+        .localCheckpoint(eager=False)  # see read_json_with_quarantine
     )
     good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     bad = df.filter(F.col("_corrupt_record").isNotNull()).select("_corrupt_record")

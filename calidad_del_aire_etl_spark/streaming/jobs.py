@@ -48,6 +48,29 @@ def _crash_point(site: str, batch_id: int) -> None:
         _test_crash_hook(site, batch_id)
 
 
+def _once_per_epoch(root: str, marker_dir: str, site: str, apply):
+    """foreachBatch function that runs ``apply(batch_df, batch_id, fs)``
+    at most once per epoch: a ``<root>/<marker_dir>/batch-N`` marker is
+    dropped after it returns, and a redelivered epoch whose marker
+    exists is skipped. ``fs`` is the Hadoop FileSystem of ``root``; the
+    ``site`` crash point sits between ``apply`` and the marker."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        jvm = spark._jvm
+        fs = jvm.org.apache.hadoop.fs.Path(root).getFileSystem(
+            spark._jsc.hadoopConfiguration()
+        )
+        marker = jvm.org.apache.hadoop.fs.Path(f"{root}/{marker_dir}/batch-{batch_id}")
+        if fs.exists(marker):
+            return  # epoch replay — already applied
+        apply(batch_df, batch_id, fs)
+        _crash_point(site, batch_id)
+        fs.mkdirs(marker)
+
+    return write_batch
+
+
 def read_events_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """#38 — schema'd file-source stream (one file per micro-batch in
     tests; swap for kafka/kinesis in production — same downstream plan)."""
@@ -769,17 +792,7 @@ def cdc_merge_sink(
     close."""
     from ..sinks.writers import merge_versioned_parquet
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(table_path).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{table_path}/_commits/batch-{batch_id}"
-        )
-        if fs.exists(marker):
-            return  # epoch replay — already committed
+    def merge_batch(batch_df: DataFrame, batch_id: int, fs) -> None:
         w = PSWindow.partitionBy(*key_cols).orderBy(
             F.col(order_col).desc(), F.col(tiebreak_col).desc()
         )
@@ -788,11 +801,9 @@ def cdc_merge_sink(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        merge_versioned_parquet(spark, table_path, compacted, key_cols)
-        _crash_point("cdc_merge:pre_marker", batch_id)
-        fs.mkdirs(marker)
+        merge_versioned_parquet(batch_df.sparkSession, table_path, compacted, key_cols)
 
-    return write_batch
+    return _once_per_epoch(table_path, "_commits", "cdc_merge:pre_marker", merge_batch)
 
 
 def run_cdc_merge(
@@ -866,15 +877,9 @@ def minhash_dedup_sink(
     anywhere."""
     from ..operators import dedup
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def dedup_batch(batch_df: DataFrame, batch_id: int, fs) -> None:
         spark = batch_df.sparkSession
         jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(store_dir).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        marker = jvm.org.apache.hadoop.fs.Path(f"{store_dir}/_epochs/batch-{batch_id}")
-        if fs.exists(marker):
-            return  # epoch replay — already applied
         batch = batch_df.select(
             F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
         ).localCheckpoint(eager=True)
@@ -948,10 +953,8 @@ def minhash_dedup_sink(
             "id", "sig", "b", "bkey"
         )
         new_bands.write.mode("overwrite").parquet(f"{bands_path}/epoch={batch_id}")
-        _crash_point("minhash:pre_marker", batch_id)
-        fs.mkdirs(marker)
 
-    return write_batch
+    return _once_per_epoch(store_dir, "_epochs", "minhash:pre_marker", dedup_batch)
 
 
 def run_minhash_dedup(stream_df: DataFrame, store_dir: str, checkpoint_dir: str):
@@ -1001,17 +1004,9 @@ def ann_index_sink(store_dir: str, id_col: str = "vec_id",
     """
     from ..operators import ann_graph
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def index_batch(batch_df: DataFrame, batch_id: int, fs) -> None:
         spark = batch_df.sparkSession
         jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(store_dir).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_epochs/batch-{batch_id}"
-        )
-        if fs.exists(marker):
-            return  # epoch replay — already applied
         batch = batch_df.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("v")
         ).localCheckpoint(eager=True)
@@ -1056,10 +1051,8 @@ def ann_index_sink(store_dir: str, id_col: str = "vec_id",
 
         delta.write.mode("overwrite").parquet(f"{store_dir}/graph/epoch={batch_id}")
         batch_new.write.mode("overwrite").parquet(f"{vec_path}/epoch={batch_id}")
-        _crash_point("ann_index:pre_marker", batch_id)
-        fs.mkdirs(marker)
 
-    return write_batch
+    return _once_per_epoch(store_dir, "_epochs", "ann_index:pre_marker", index_batch)
 
 
 def ann_index_view(spark: SparkSession, store_dir: str,

@@ -135,7 +135,6 @@ def test_append_conflict_rebases_file_list_without_rewrite(spark, tmp_path):
     assert _data_files_on_disk(path) == referenced
 
 
-@pytest.mark.slow
 def test_delete_conflict_retries_on_new_snapshot(spark, tmp_path):
     path = str(tmp_path / "del")
     _mk_base(spark, path)

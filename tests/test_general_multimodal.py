@@ -228,6 +228,28 @@ def test_read_csv_with_quarantine(spark, tmp_path):
     assert len(bad_rows) == 1 and "boom" in bad_rows[0]
 
 
+def test_quarantine_readers_leave_no_cache_entries(spark, tmp_path):
+    """Each quarantine read over a distinct file must not pin a
+    CacheManager entry for the rest of the session."""
+    from pyspark.sql import types as T
+
+    from calidad_del_aire_etl_spark.sources import readers
+
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("v", T.DoubleType())]
+    )
+    pj, pc = tmp_path / "a.json", tmp_path / "b.csv"
+    pj.write_text('{"id": 1, "v": 2.5}\nnot json\n')
+    pc.write_text("id,v\n1,2.5\nboom,1.0\n")
+    spark.catalog.clearCache()
+    for good, bad in (
+        readers.read_json_with_quarantine(spark, str(pj), schema),
+        readers.read_csv_with_quarantine(spark, str(pc), schema),
+    ):
+        assert (good.count(), bad.count()) == (1, 1)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_phash_band_join_is_exact_for_hamming_le_3(spark):
     """The 4x16 pigeonhole banding must find EXACTLY the pairs a
     brute-force popcount over all fingerprint pairs finds (hamming <=
