@@ -16,29 +16,80 @@ from pyspark.sql import functions as F
 from ..functions import r4
 
 
-def kpis(
+# dashboard_cells groups by these three keys in every call, so a set's
+# grouping_id() is fixed: bit (2 - i) is set when key i is rolled up.
+_CELL_KEYS = ("d", "g", "hour")
+DATE, GROUP, HOUR, GROUP_DATE = ("d",), ("g",), ("hour",), ("g", "d")
+
+
+def _cell_gid(cell_set: Sequence[str]) -> int:
+    """``grouping_id()`` of one of :func:`dashboard_cells`' sets."""
+    n = len(_CELL_KEYS)
+    return sum(1 << (n - 1 - i) for i, k in enumerate(_CELL_KEYS) if k not in cell_set)
+
+
+def dashboard_cells(
     df: DataFrame,
     ts_col: str,
     group_col: str,
     value_col: str,
-    unhealthy_threshold: float = 35.4,
+    type_col: str,
+    types: Sequence[str],
+    sets: Sequence[Sequence[str]],
 ) -> DataFrame:
-    """Single-row KPI relation (reference dashboard:81-93): overall
-    avg/max, count of days whose daily mean exceeds the threshold, total
-    days, percentage, and the worst group (argmax of group mean,
-    deterministic tie-break on the group key).
+    """The aggregate cells the KPI, station, hourly and correlation
+    panels derive from (reference dashboard:64-254 computes all four
+    from one collected frame): ONE fact pass via GROUP BY GROUPING SETS
+    over the keys (d = date, g = group, hour), asking only for ``sets``
+    (any of :data:`DATE`, :data:`GROUP`, :data:`HOUR`,
+    :data:`GROUP_DATE`). Spark expands each row once per set map-side
+    and partial-aggregates them all in the same shuffle, so the result
+    is |dates| + |groups| + 24 + |group×date| rows at most; ``gid``
+    (:func:`_cell_gid`) tells the sets apart, a rolled-up key is NULL.
 
-    ONE fact pass via GROUP BY GROUPING SETS ((date), (group)): Spark
-    expands both sets map-side and partial-aggregates them in the same
-    shuffle, so the fact is scanned once and the shuffled relation is
-    |dates| + |groups| rows — NOT dates × groups. (A previous shape
-    rolled up to (date, group) cells first; that intermediate is nearly
-    fact-sized under high group cardinality and its eager checkpoint
-    cost 2.5× the whole query.) The tiny grouping-sets result is
-    checkpointed — negligible bytes — so the daily branch and the
-    argmax branch can't re-trigger the fact scan through optimizer
-    divergence (ReuseExchange does not survive per-branch column
-    pruning here).
+    Per cell: ``sc`` exact int64 cents Σfloor(v·100 + 0.5) (see
+    :func:`kpis`), ``c`` the non-NULL value count, ``mx`` the max,
+    ``mean`` avg(value), ``n`` the row count and one conditional mean
+    ``m_<t>`` per type. A derivation that reads a subset of them prunes
+    the rest out of the aggregate.
+    """
+    base = df.select(
+        F.to_date(F.col(ts_col)).alias("d"),
+        F.col(group_col).alias("g"),
+        F.hour(F.col(ts_col)).cast("int").alias("hour"),
+        F.col(type_col).alias("__t"),
+        F.col(value_col).alias("__v"),
+        F.floor(F.col(value_col) * 100 + F.lit(0.5)).cast("bigint").alias("__vc"),
+    )
+    return base.groupingSets([list(s) for s in sets], *_CELL_KEYS).agg(
+        F.grouping_id().alias("gid"),
+        F.sum("__vc").alias("sc"),
+        F.count("__v").alias("c"),
+        F.max("__v").alias("mx"),
+        F.avg("__v").alias("mean"),
+        F.count(F.lit(1)).alias("n"),
+        *[F.avg(F.when(F.col("__t") == t, F.col("__v"))).alias(f"m_{t}") for t in types],
+    )
+
+
+def _cells_of(cells: DataFrame, cell_set: Sequence[str]) -> DataFrame:
+    return cells.filter(F.col("gid") == _cell_gid(cell_set))
+
+
+def kpis(cells: DataFrame, unhealthy_threshold: float = 35.4) -> DataFrame:
+    """Single-row KPI relation (reference dashboard:81-93) from the
+    :data:`DATE` and :data:`GROUP` cells of :func:`dashboard_cells`:
+    overall avg/max, count of days whose daily mean exceeds the
+    threshold, total days, percentage, and the worst group (argmax of
+    group mean, deterministic tie-break on the group key). One
+    aggregate over the cells: no join between the daily and the argmax
+    branch, so the fact is read once.
+
+    The argmax is ``min_by(g, struct(mean IS NULL, -mean, g))`` — the
+    same order as ``ORDER BY mean DESC NULLS LAST, g ASC``: a group
+    whose values are all NULL (c = 0, so mean is NULL) never beats a
+    group with a mean, which is what the twin's NULLS LAST does.
+    An empty fact has no worst group and yields no row, as in the twin.
 
     Exact-cents arithmetic throughout (r12): per-cell sums ride as
     exact int64 cents, so every mean is the double nearest the same
@@ -50,58 +101,36 @@ def kpis(
     'worst' group despite the group-key tie-break.
     """
     thr_c = int(round(unhealthy_threshold * 100))
-    base = df.select(
-        F.to_date(F.col(ts_col)).alias("__d"),
-        F.col(group_col).alias("__g"),
-        F.col(value_col).alias("__v"),
-        F.floor(F.col(value_col) * 100 + F.lit(0.5)).cast("bigint").alias("__vc"),
+    day = F.col("gid") == _cell_gid(DATE)
+    grp = F.col("gid") == _cell_gid(GROUP)
+    mean = F.col("sc").cast("double") / F.col("c").cast("double")
+    out = cells.filter(day | grp).agg(
+        r4(
+            F.sum(F.when(day, F.col("sc"))).cast("double")
+            / F.sum(F.when(day, F.col("c"))).cast("double")
+            / F.lit(100.0)
+        ).alias("avg_value"),
+        r4(F.max(F.when(day, F.col("mx")))).alias("max_value"),
+        F.sum(
+            F.when(day, (F.col("sc") > F.lit(thr_c) * F.col("c")).cast("bigint"))
+        ).alias("days_unhealthy"),
+        F.count(F.when(day, F.lit(1))).alias("total_days"),
+        F.min_by(
+            F.col("g"), F.when(grp, F.struct(mean.isNull(), -mean, F.col("g")))
+        ).alias("worst_group"),
     )
-    cells = (
-        base.groupingSets([["__d"], ["__g"]], "__d", "__g")
-        .agg(
-            F.sum("__vc").alias("__sc"),
-            F.count("__v").alias("__c"),
-            F.max("__v").alias("__mx"),
-            F.grouping_id().alias("__gid"),  # 1 = (date) set, 2 = (group) set
-        )
-        .localCheckpoint(eager=True)
+    return out.filter(F.col("total_days") > 0).select(
+        "avg_value",
+        "max_value",
+        "days_unhealthy",
+        "total_days",
+        r4(
+            F.col("days_unhealthy").cast("double")
+            / F.col("total_days").cast("double")
+            * 100.0
+        ).alias("pct_unhealthy"),
+        "worst_group",
     )
-    daily = (
-        cells.filter(F.col("__gid") == 1)
-        .agg(
-            r4(
-                F.sum("__sc").cast("double")
-                / F.sum("__c").cast("double")
-                / F.lit(100.0)
-            ).alias("avg_value"),
-            r4(F.max("__mx")).alias("max_value"),
-            F.sum(
-                (F.col("__sc") > F.lit(thr_c) * F.col("__c")).cast("bigint")
-            ).alias("days_unhealthy"),
-            F.count(F.lit(1)).alias("total_days"),
-        )
-        .select(
-            "avg_value",
-            "max_value",
-            "days_unhealthy",
-            "total_days",
-            r4(
-                F.col("days_unhealthy").cast("double")
-                / F.col("total_days").cast("double")
-                * 100.0
-            ).alias("pct_unhealthy"),
-        )
-    )
-    worst = (
-        cells.filter(F.col("__gid") == 2)
-        .orderBy(
-            (F.col("__sc").cast("double") / F.col("__c").cast("double")).desc(),
-            F.col("__g").asc(),
-        )
-        .limit(1)
-        .select(F.col("__g").alias("worst_group"))
-    )
-    return daily.crossJoin(worst)
 
 
 def kpis_sql(
@@ -204,29 +233,36 @@ def dow_distribution(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
     )
 
 
-def group_compare(df: DataFrame, group_col: str, value_col: str, type_col: str, types: Sequence[str]) -> DataFrame:
+def group_compare(cells: DataFrame, group_col: str, types: Sequence[str]) -> DataFrame:
     """Per-group multi-metric comparison (reference dashboard:167-192
-    grouped bars): overall mean plus one conditional mean per type."""
-    aggs = [r4(F.avg(value_col)).alias("value_mean")]
-    for t in types:
-        aggs.append(
-            r4(F.avg(F.when(F.col(type_col) == t, F.col(value_col)))).alias(f"mean_{t}")
-        )
-    return df.groupBy(group_col).agg(*aggs)
+    grouped bars) from the :data:`GROUP` cells of
+    :func:`dashboard_cells`: overall mean plus one conditional mean per
+    type."""
+    return _cells_of(cells, GROUP).select(
+        F.col("g").alias(group_col),
+        r4(F.col("mean")).alias("value_mean"),
+        *[r4(F.col(f"m_{t}")).alias(f"mean_{t}") for t in types],
+    )
 
 
-def hourly_pattern(df: DataFrame, ts_col: str, value_col: str) -> DataFrame:
-    """Hour-of-day profile (reference dashboard:196-219)."""
-    return (
-        df.groupBy(F.hour(F.col(ts_col)).cast("int").alias("hour"))
-        .agg(
-            r4(F.avg(value_col)).alias("value_mean"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .withColumn(
-            "is_rush_hour",
-            F.col("hour").isin(7, 8, 9, 17, 18, 19).cast("int"),
-        )
+def hourly_pattern(cells: DataFrame) -> DataFrame:
+    """Hour-of-day profile (reference dashboard:196-219) from the
+    :data:`HOUR` cells of :func:`dashboard_cells`."""
+    return _cells_of(cells, HOUR).select(
+        "hour",
+        r4(F.col("mean")).alias("value_mean"),
+        F.col("n").alias("n_rows"),
+        F.col("hour").isin(7, 8, 9, 17, 18, 19).cast("int").alias("is_rush_hour"),
+    )
+
+
+def group_day_type_means(cells: DataFrame, types: Sequence[str]) -> DataFrame:
+    """The correlation panel's pivot (reference dashboard:223-243 uses
+    one column per pollutant): one row per (group, day) from the
+    :data:`GROUP_DATE` cells of :func:`dashboard_cells`, one rounded
+    conditional mean ``m_<t>`` per type."""
+    return _cells_of(cells, GROUP_DATE).select(
+        "g", "d", *[r4(F.col(f"m_{t}")).alias(f"m_{t}") for t in types]
     )
 
 

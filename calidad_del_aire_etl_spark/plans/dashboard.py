@@ -2,17 +2,23 @@
 
 The reference collects the WHOLE hourly table into pandas and computes
 six chart panels driver-side. The engine inverts that: each panel's
-relation is one of the distributed dashboard operators (kpis, rolling
-mean, day-of-week distribution, station compare, hourly pattern,
-correlation matrix) and only chart-ready rows reach the driver. Five
-panels reduce to a few hundred rows at any scale; the rolling-mean
-panel does not reduce — it collects one value per event row, so
-``render_png`` collects only its drawn ``rolling_mean`` column.
+relation is one of the distributed dashboard operators and only
+chart-ready rows reach the driver. Like the reference, which derives
+its KPI row, station bars, hourly line and correlation matrix from one
+frame, four panels derive from ONE grouping-sets pass over the fact
+(``analytics.dashboard_cells``, materialized once per call); the
+rolling mean (a window over every row) and the day-of-week quartiles
+(an exact percentile, which would push the shared pass onto a
+sort-based aggregate) stay standalone queries. Five panels reduce to a
+few hundred rows at any scale; the rolling-mean panel does not reduce —
+it collects one value per event row, so ``render_png`` collects only
+its group key and drawn ``rolling_mean`` column.
 
 ``render_png`` draws the reference's six-panel layout (dashboard:70-254)
 with the stdlib-only rasterizer in :mod:`rasterize`, the same bytes on
-every host; ``export_csv`` hands the same six relations to any external
-BI/plotting tool. The data side is always real and tested.
+every host and every shuffle layout; ``export_csv`` hands the same six
+relations to any external BI/plotting tool. The data side is always
+real and tested.
 """
 
 from __future__ import annotations
@@ -23,10 +29,22 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def chart_relations(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """The six chart-ready relations, straight from the registered
-    dashboard queries (each oracle-verified on its own)."""
+    """The six chart-ready relations: one shared cells pass plus two
+    standalone queries. The KPI, station, hourly and correlation panels
+    derive from one lazily checkpointed ``events_cells`` over the union
+    of their grouping sets, through the same derivations as their
+    registered queries (each oracle-verified on its own); the rolling
+    mean and day-of-week panels are their registered queries."""
     from .. import registry
+    from ..queries import q02_dash
+    from ..session import pin_oracle_compat
 
+    pin_oracle_compat(spark)
+    panels = q02_dash.CELL_PANELS
+    sets = list(dict.fromkeys(s for need, _ in panels.values() for s in need))
+    # lazy: the first panel's action fills the checkpoint, the other
+    # three read its blocks instead of the fact
+    cells = q02_dash.events_cells(spark, sf_dir, sets).localCheckpoint(eager=False)
     qs = registry.queries()
     names = [
         "dash_kpis",
@@ -36,7 +54,9 @@ def chart_relations(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         "dash_hourly_pattern",
         "dash_corr_matrix",
     ]
-    return {n: qs[n](spark, sf_dir) for n in names}
+    return {
+        n: panels[n][1](cells) if n in panels else qs[n](spark, sf_dir) for n in names
+    }
 
 
 def export_csv(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
@@ -56,12 +76,17 @@ def render_png(spark: SparkSession, sf_dir: str, out_path: str) -> str:
     rasterizer in :mod:`rasterize` from :func:`chart_relations`: KPI
     text panel, rolling-mean line, day-of-week bars, station bars,
     hourly line, correlation text grid. The rolling-mean panel draws
-    one value per event row, so only its ``rolling_mean`` column is
-    collected."""
+    one value per event row, so only its ``user_id`` and
+    ``rolling_mean`` columns are collected.
+
+    Every panel is drawn in an order fixed by the data, never by the
+    shuffle: day-of-week bars by ``day_of_week``, the first 20 station
+    bars by ``user_id``, the rolling-mean line user by user (a stable
+    sort keeps each user's window order, ``(ts, event_id)``)."""
     from . import rasterize as rz
 
     rels = chart_relations(spark, sf_dir)
-    rels["dash_rolling_mean"] = rels["dash_rolling_mean"].select("rolling_mean")
+    rels["dash_rolling_mean"] = rels["dash_rolling_mean"].select("user_id", "rolling_mean")
     rels = {k: v.toPandas() for k, v in rels.items()}
     W, H, cols, rows, pad = 900, 700, 2, 3, 10
     pw, ph = (W - pad * (cols + 1)) // cols, (H - pad * (rows + 1)) // rows
@@ -76,16 +101,16 @@ def render_png(spark: SparkSession, sf_dir: str, out_path: str) -> str:
     rz.draw_text_panel(
         c, *cell(0, 0), "KPIS", [f"{k} {v}" for k, v in kpi.items()]
     )
-    roll = rels["dash_rolling_mean"]
+    roll = rels["dash_rolling_mean"].sort_values("user_id", kind="stable")
     rz.draw_line_panel(
         c, *cell(0, 1), "ROLLING MEAN",
-        [float(v) for v in roll.iloc[:, -1].dropna().tolist()],
+        [float(v) for v in roll["rolling_mean"].dropna().tolist()],
     )
-    dow = rels["dash_dow_distribution"]
+    dow = rels["dash_dow_distribution"].sort_values("day_of_week")
     rz.draw_bar_panel(
         c, *cell(1, 0), "DAY OF WEEK", [float(v) for v in dow.iloc[:, 1].tolist()]
     )
-    st = rels["dash_station_compare"].head(20)
+    st = rels["dash_station_compare"].sort_values("user_id").head(20)
     rz.draw_bar_panel(
         c, *cell(1, 1), "STATIONS", [float(v) for v in st.iloc[:, 1].tolist()]
     )

@@ -1,9 +1,12 @@
-"""Dashboard analytics (SURVEY §2 #13-18) — registered queries, split out of registry.py
-(round 10, VERDICT r9 #8: 3.9k lines had become the merge-conflict
-magnet). PURELY MECHANICAL: bodies are byte-identical to the original
-section."""
+"""Dashboard analytics (SURVEY §2 #13-18) — the six registered dashboard
+queries. Four of them (KPIs, station compare, hourly pattern,
+correlation matrix) are derivations of one grouping-sets pass,
+:func:`events_cells`; ``plans.dashboard`` shares a single pass among
+all four through :data:`CELL_PANELS`."""
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
@@ -30,6 +33,44 @@ from ..registry import (  # noqa: F401
 from ..operators import analytics  # noqa: E402
 
 _EVENT_TYPES = ["purchase", "view", "click", "error", "signup"]
+_CORR_TYPES = ["purchase", "view", "click", "error"]
+
+
+def events_cells(spark: SparkSession, sf_dir: str, sets: Sequence[Sequence[str]]) -> DataFrame:
+    """The events table's :func:`analytics.dashboard_cells` for ``sets``."""
+    ev = load(spark, sf_dir, "events")
+    return analytics.dashboard_cells(
+        ev, "ts", "user_id", "value", "event_type", _EVENT_TYPES, sets
+    )
+
+
+def _corr_matrix(cells: DataFrame) -> DataFrame:
+    return analytics.corr_matrix_long(
+        analytics.group_day_type_means(cells, _CORR_TYPES),
+        [f"m_{t}" for t in _CORR_TYPES],
+    )
+
+
+# The panels derived from events_cells: name -> (the grouping sets the
+# panel reads, its derivation). Each registered query builds the cells
+# of its own sets; plans.dashboard builds the union once for all four.
+CELL_PANELS = {
+    "dash_kpis": (
+        (analytics.DATE, analytics.GROUP),
+        lambda cells: analytics.kpis(cells, unhealthy_threshold=82.0),
+    ),
+    "dash_station_compare": (
+        (analytics.GROUP,),
+        lambda cells: analytics.group_compare(cells, "user_id", _EVENT_TYPES),
+    ),
+    "dash_hourly_pattern": ((analytics.HOUR,), analytics.hourly_pattern),
+    "dash_corr_matrix": ((analytics.GROUP_DATE,), _corr_matrix),
+}
+
+
+def _cell_panel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    sets, derive = CELL_PANELS[name]
+    return derive(events_cells(spark, sf_dir, sets))
 
 
 @register(
@@ -38,8 +79,7 @@ _EVENT_TYPES = ["purchase", "view", "click", "error", "signup"]
 )
 def q_dash_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2 #13 — KPI row (ref dashboard:81-93)."""
-    ev = load(spark, sf_dir, "events")
-    return analytics.kpis(ev, "ts", "user_id", "value", unhealthy_threshold=82.0)
+    return _cell_panel(spark, sf_dir, "dash_kpis")
 
 
 @register(
@@ -95,8 +135,7 @@ def q_dash_dow_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dash_station_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2 #16 — per-group multi-metric comparison (ref dashboard:167-192)."""
-    ev = load(spark, sf_dir, "events")
-    return analytics.group_compare(ev, "user_id", "value", "event_type", _EVENT_TYPES)
+    return _cell_panel(spark, sf_dir, "dash_station_compare")
 
 
 @register(
@@ -112,8 +151,7 @@ def q_dash_station_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dash_hourly_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2 #17 — hour-of-day profile (ref dashboard:196-219)."""
-    ev = load(spark, sf_dir, "events")
-    return analytics.hourly_pattern(ev, "ts", "value")
+    return _cell_panel(spark, sf_dir, "dash_hourly_pattern")
 
 
 _CORR_PIVOT_SQL = """
@@ -149,16 +187,4 @@ def q_dash_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ref dashboard:223-243). Metrics are the day×station conditional
     means of each event type (the engine's pivot of the reference's
     pollutant columns)."""
-    ev = load(spark, sf_dir, "events")
-
-    def cavg(t: str):
-        return r4(F.avg(F.when(F.col("event_type") == t, F.col("value"))))
-
-    pivoted = ev.groupBy(
-        "user_id", F.to_date("ts").alias("d")
-    ).agg(*[cavg(t).alias(f"m_{t}") for t in ["purchase", "view", "click", "error"]])
-    return analytics.corr_matrix_long(
-        pivoted, ["m_purchase", "m_view", "m_click", "m_error"]
-    )
-
-
+    return _cell_panel(spark, sf_dir, "dash_corr_matrix")

@@ -5,9 +5,15 @@ from __future__ import annotations
 import csv
 import glob
 
+from calidad_del_aire_etl_spark import registry, session
 from calidad_del_aire_etl_spark.plans import dashboard
 
 SF = "/root/testdata/sf0.001"
+
+# Spark jobs per render_png: the shared cells' map stage (1), then per
+# panel kpis 2, rolling mean 2, day-of-week 2, stations 1, hourly 1,
+# correlations 2. Six standalone panel queries took 16.
+RENDER_JOBS = 11
 
 
 def test_chart_relations_are_chart_sized(spark):
@@ -23,6 +29,42 @@ def test_chart_relations_are_chart_sized(spark):
     assert rels["dash_kpis"].count() == 1
     assert rels["dash_dow_distribution"].count() == 7
     assert rels["dash_corr_matrix"].count() == 6
+
+
+def test_chart_relations_equal_their_registry_queries(spark):
+    """The four panels derived from the shared cells are the same rows
+    as their own registry queries (and the two standalone panels are
+    those queries)."""
+    rels = dashboard.chart_relations(spark, SF)
+    qs = registry.queries()
+    for name, df in rels.items():
+        got, want = df.toPandas(), qs[name](spark, SF).toPandas()
+        assert list(got.columns) == list(want.columns), name
+        assert list(got.dtypes) == list(want.dtypes), name
+        cols = list(got.columns)
+        got = got.sort_values(cols).reset_index(drop=True)
+        want = want.sort_values(cols).reset_index(drop=True)
+        assert got.equals(want), name
+
+
+def test_render_png_starts_the_benchmarked_job_count(spark, jobs_started, tmp_path):
+    out = str(tmp_path / "dash.png")
+    dashboard.render_png(spark, SF, out)  # warm-up: schema memo, codegen
+    _, jobs = jobs_started(lambda: dashboard.render_png(spark, SF, out))
+    assert len(jobs) == RENDER_JOBS < 16
+
+
+def test_render_png_bytes_do_not_depend_on_shuffle_layout(spark, tmp_path):
+    """Bars and lines are drawn in data order, not in the order the
+    shuffle emits rows: the PNG is byte-identical for any number of
+    shuffle partitions."""
+    pngs = set()
+    for n in (1, 3, 8):
+        out = tmp_path / f"dash-{n}.png"
+        with session.scoped_conf(spark, "spark.sql.shuffle.partitions", str(n)):
+            dashboard.render_png(spark, SF, str(out))
+        pngs.add(out.read_bytes())
+    assert len(pngs) == 1
 
 
 def test_export_csv_writes_all_panels(spark, tmp_path):

@@ -72,8 +72,8 @@ def main() -> None:
         "\nReading guide: a non-zero BNLJ/cartesian count is acceptable"
         "\nONLY for two sanctioned patterns. (1) scalar broadcast —"
         "\ncrossJoin(broadcast(«1-row relation»)) carrying a"
-        "\ntotal/threshold/codebook into the plan (dash_kpis, ann topk"
-        "\ncodebooks, tfidf N, heavy-hitters error bound, q11 threshold)."
+        "\ntotal/threshold/codebook into the plan (ann topk codebooks,"
+        "\ntfidf N, heavy-hitters error bound, q11 threshold)."
         "\n(2) broadcast query/hub set — crossJoin(broadcast(«k-row bounded"
         "\nrelation»)) scoring a streaming corpus against a small fixed set"
         "\n(ann_range_search, embed_matryoshka_recall, bruteforce scoring):"
