@@ -90,6 +90,9 @@ def kpis(cells: DataFrame, unhealthy_threshold: float = 35.4) -> DataFrame:
     whose values are all NULL (c = 0, so mean is NULL) never beats a
     group with a mean, which is what the twin's NULLS LAST does.
     An empty fact has no worst group and yields no row, as in the twin.
+    A day whose values are all NULL has a NULL ``sc``, so its unhealthy
+    test is NULL: ``count`` skips it and an all-NULL column gives 0
+    unhealthy days, as the twin's ``CASE ... ELSE 0`` does.
 
     Exact-cents arithmetic throughout (r12): per-cell sums ride as
     exact int64 cents, so every mean is the double nearest the same
@@ -111,9 +114,9 @@ def kpis(cells: DataFrame, unhealthy_threshold: float = 35.4) -> DataFrame:
             / F.lit(100.0)
         ).alias("avg_value"),
         r4(F.max(F.when(day, F.col("mx")))).alias("max_value"),
-        F.sum(
-            F.when(day, (F.col("sc") > F.lit(thr_c) * F.col("c")).cast("bigint"))
-        ).alias("days_unhealthy"),
+        F.count(F.when(day & (F.col("sc") > F.lit(thr_c) * F.col("c")), F.lit(1))).alias(
+            "days_unhealthy"
+        ),
         F.count(F.when(day, F.lit(1))).alias("total_days"),
         F.min_by(
             F.col("g"), F.when(grp, F.struct(mean.isNull(), -mean, F.col("g")))

@@ -9,10 +9,16 @@ frame, four panels derive from ONE grouping-sets pass over the fact
 (``analytics.dashboard_cells``, materialized once per call); the
 rolling mean (a window over every row) and the day-of-week quartiles
 (an exact percentile, which would push the shared pass onto a
-sort-based aggregate) stay standalone queries. Five panels reduce to a
-few hundred rows at any scale; the rolling-mean panel does not reduce —
-it collects one value per event row, so ``render_png`` collects only
-its group key and drawn ``rolling_mean`` column.
+sort-based aggregate) stay standalone queries.
+
+Five panels reduce to a few hundred rows at any scale, and
+``render_png`` collects those five in ONE action
+(:func:`collect_packed`): a union of the tagged relations, split back
+per panel driver-side, so the refresh pays one result job instead of
+five. The rolling-mean panel does not reduce — it collects one value
+per event row — so it stays a separate collect of only its group key
+and drawn ``rolling_mean`` column: packed into the union, every one of
+its rows would carry the other panels' (NULL) columns too.
 
 ``render_png`` draws the reference's six-panel layout (dashboard:70-254)
 with the stdlib-only rasterizer in :mod:`rasterize`, the same bytes on
@@ -24,8 +30,16 @@ real and tested.
 from __future__ import annotations
 
 import os
+from functools import reduce
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    import pandas as pd
+
+_PANEL = "__panel"
 
 
 def chart_relations(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -70,14 +84,45 @@ def export_csv(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]
     return paths
 
 
+def collect_packed(rels: dict[str, DataFrame]) -> dict[str, pd.DataFrame]:
+    """Collect several small relations with ONE action: tag each with
+    its index in ``rels``, union them by name (a column one relation
+    lacks is NULL in its rows) and collect the union as Arrow. Each
+    relation's rows are then its tag's slice, cut back to its own
+    columns and cast to its own Arrow schema, so each frame has the
+    columns, dtypes and rows of that relation's ``toPandas()``. The
+    slices keep each relation's row order: a union's partitions are its
+    children's partitions in order."""
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    tagged = [df.withColumn(_PANEL, F.lit(i)) for i, df in enumerate(rels.values())]
+    packed = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)
+    table = packed.toArrow()
+    out = {}
+    for i, (name, df) in enumerate(rels.items()):
+        part = table.filter(pc.equal(table[_PANEL], i)).select(df.columns)
+        # the options DataFrame.toPandas passes on its Arrow path
+        out[name] = part.cast(to_arrow_schema(df.schema)).to_pandas(
+            date_as_object=True, coerce_temporal_nanoseconds=True
+        )
+    return out
+
+
 def render_png(spark: SparkSession, sf_dir: str, out_path: str) -> str:
     """Multi-panel PNG like the reference's create_dashboard_plots
     (dashboard_calidad_aire.py:246-254), drawn by the stdlib-only
     rasterizer in :mod:`rasterize` from :func:`chart_relations`: KPI
     text panel, rolling-mean line, day-of-week bars, station bars,
-    hourly line, correlation text grid. The rolling-mean panel draws
-    one value per event row, so only its ``user_id`` and
-    ``rolling_mean`` columns are collected.
+    hourly line, correlation text grid.
+
+    Two actions collect the six panels: :func:`collect_packed` brings
+    the five chart-sized ones in one, and the rolling mean, which draws
+    one value per event row, is collected on its own with only its
+    ``user_id`` and ``rolling_mean`` columns (in the union each of its
+    rows would widen to every panel's columns). A NULL mean draws no
+    bar or point, and an empty KPI relation draws a titled panel with
+    no lines.
 
     Every panel is drawn in an order fixed by the data, never by the
     shuffle: day-of-week bars by ``day_of_week``, the first 20 station
@@ -86,8 +131,8 @@ def render_png(spark: SparkSession, sf_dir: str, out_path: str) -> str:
     from . import rasterize as rz
 
     rels = chart_relations(spark, sf_dir)
-    rels["dash_rolling_mean"] = rels["dash_rolling_mean"].select("user_id", "rolling_mean")
-    rels = {k: v.toPandas() for k, v in rels.items()}
+    roll = rels.pop("dash_rolling_mean").select("user_id", "rolling_mean").toPandas()
+    rels = collect_packed(rels)
     W, H, cols, rows, pad = 900, 700, 2, 3, 10
     pw, ph = (W - pad * (cols + 1)) // cols, (H - pad * (rows + 1)) // rows
     c = rz.Canvas(W, H)
@@ -97,11 +142,12 @@ def render_png(spark: SparkSession, sf_dir: str, out_path: str) -> str:
         y0 = pad + r * (ph + pad)
         return x0, y0, x0 + pw, y0 + ph
 
-    kpi = rels["dash_kpis"].iloc[0]
+    kpi = rels["dash_kpis"]
     rz.draw_text_panel(
-        c, *cell(0, 0), "KPIS", [f"{k} {v}" for k, v in kpi.items()]
+        c, *cell(0, 0), "KPIS",
+        [f"{k} {v}" for k, v in kpi.iloc[0].items()] if len(kpi) else [],
     )
-    roll = rels["dash_rolling_mean"].sort_values("user_id", kind="stable")
+    roll = roll.sort_values("user_id", kind="stable")
     rz.draw_line_panel(
         c, *cell(0, 1), "ROLLING MEAN",
         [float(v) for v in roll["rolling_mean"].dropna().tolist()],

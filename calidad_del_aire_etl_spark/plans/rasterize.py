@@ -153,9 +153,15 @@ def _scale_to(vals: list[float], lo_px: int, hi_px: int) -> list[int]:
     ]
 
 
+def _drawn(v) -> bool:
+    """False for the values a panel skips: None and NaN (a NULL mean)."""
+    return v is not None and v == v
+
+
 def draw_line_panel(c: Canvas, x0, y0, x1, y1, title: str, ys: list[float]) -> None:
     c.rect(x0, y0, x1, y1, _AXIS)
     c.text(x0 + 4, y0 + 3, title, _TITLE)
+    ys = [v for v in ys if _drawn(v)]
     if not ys:
         return
     px0, px1, py0, py1 = x0 + 4, x1 - 4, y0 + 14, y1 - 4
@@ -179,16 +185,18 @@ def draw_line_panel(c: Canvas, x0, y0, x1, y1, title: str, ys: list[float]) -> N
 def draw_bar_panel(c: Canvas, x0, y0, x1, y1, title: str, ys: list[float]) -> None:
     c.rect(x0, y0, x1, y1, _AXIS)
     c.text(x0 + 4, y0 + 3, title, _TITLE)
-    if not ys:
+    # a None/NaN value keeps its slot but draws no bar
+    drawn = [(i, v) for i, v in enumerate(ys) if _drawn(v)]
+    if not drawn:
         return
     px0, px1, py0, py1 = x0 + 4, x1 - 4, y0 + 14, y1 - 4
     # include 0 in the scale domain so bars draw FROM the zero line in
     # either direction (negative bars hang below it); an all-positive
     # series keeps the panel bottom as its baseline
-    pts = _scale_to(ys + [0.0], py1, py0)
+    pts = _scale_to([v for _, v in drawn] + [0.0], py1, py0)
     tops, zero = pts[:-1], pts[-1]
     slot = max(1, (px1 - px0) // max(1, len(ys)))
-    for i, t in enumerate(tops):
+    for (i, _), t in zip(drawn, tops):
         bx0 = px0 + i * slot
         bx1 = min(px1, bx0 + max(1, slot - 2))
         c.fill_rect(bx0, min(t, zero), bx1, max(t, zero), _BAR)

@@ -4,16 +4,53 @@ from __future__ import annotations
 
 import csv
 import glob
+import os
 
-from calidad_del_aire_etl_spark import registry, session
+import pytest
+
+from calidad_del_aire_etl_spark import oracle, registry, session
 from calidad_del_aire_etl_spark.plans import dashboard
 
 SF = "/root/testdata/sf0.001"
 
-# Spark jobs per render_png: the shared cells' map stage (1), then per
-# panel kpis 2, rolling mean 2, day-of-week 2, stations 1, hourly 1,
-# correlations 2. Six standalone panel queries took 16.
-RENDER_JOBS = 11
+# Spark jobs per render_png: the shared cells' map stage (1), the packed
+# collect of the five chart-sized panels (4: the kpis, day-of-week and
+# correlation exchanges' map stages plus one result job) and the
+# rolling-mean collect (2). Six standalone panel queries took 16, and
+# one action per panel took 11.
+RENDER_JOBS = 7
+
+
+def _events_variant(tmp_path_factory, name, edit):
+    """A copy of SF whose events table is ``edit(table)``; the other
+    tables are symlinked."""
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp(name)
+    for t in oracle.TABLES:
+        src = f"{SF}/{t}.parquet"
+        if t != "events" and os.path.exists(src):
+            os.symlink(src, d / f"{t}.parquet")
+    pq.write_table(edit(pq.read_table(f"{SF}/events.parquet")), d / "events.parquet")
+    return str(d)
+
+
+@pytest.fixture(scope="module")
+def null_value_sf(tmp_path_factory):
+    """SF with every ``events.value`` NULL."""
+    import pyarrow as pa
+
+    def edit(tbl):
+        i = tbl.schema.get_field_index("value")
+        return tbl.set_column(i, tbl.schema.field(i), pa.nulls(len(tbl), pa.float64()))
+
+    return _events_variant(tmp_path_factory, "sf_null_value", edit)
+
+
+@pytest.fixture(scope="module")
+def empty_sf(tmp_path_factory):
+    """SF with a zero-row events table."""
+    return _events_variant(tmp_path_factory, "sf_empty", lambda tbl: tbl.slice(0, 0))
 
 
 def test_chart_relations_are_chart_sized(spark):
@@ -47,11 +84,59 @@ def test_chart_relations_equal_their_registry_queries(spark):
         assert got.equals(want), name
 
 
+@pytest.mark.parametrize("table", ["sf_dir", "null_value_sf"])
+def test_collect_packed_equals_each_relations_to_pandas(spark, table, request):
+    """The one-action collect of the five chart-sized panels (all but
+    the rolling mean) yields, per panel, that relation's own
+    toPandas(): same columns, dtypes and rows (sorted, since each
+    collect may order rows differently)."""
+    rels = dashboard.chart_relations(spark, request.getfixturevalue(table))
+    del rels["dash_rolling_mean"]
+    packed = dashboard.collect_packed(rels)
+    assert list(packed) == list(rels)
+    for name, got in packed.items():
+        want = rels[name].toPandas()
+        assert list(got.columns) == list(want.columns), name
+        assert list(got.dtypes) == list(want.dtypes), name
+        cols = list(got.columns)
+        got = got.sort_values(cols).reset_index(drop=True)
+        want = want.sort_values(cols).reset_index(drop=True)
+        assert got.equals(want), name
+
+
+def test_kpis_match_the_twin_on_an_all_null_value_column(spark, null_value_sf):
+    """Every day's mean is NULL, so no day is unhealthy: 0 days and
+    0.0 %, as the twin's CASE ... ELSE 0 gives (not NULL)."""
+    con = oracle.duck_connection(null_value_sf)
+    try:
+        n, problems = oracle.compare_query(
+            spark, con, registry.queries()["dash_kpis"],
+            registry.oracle_sql()["dash_kpis"], null_value_sf,
+        )
+    finally:
+        con.close()
+    assert problems == [], problems
+    assert n == 1
+
+
+@pytest.mark.parametrize("table", ["null_value_sf", "empty_sf"])
+def test_render_png_draws_null_and_empty_tables(spark, table, request, tmp_path):
+    """NULL means draw no bar or point, and a KPI relation without a
+    row draws a titled panel: the PNG still decodes at full size."""
+    from calidad_del_aire_etl_spark.plans import rasterize as rz
+
+    sf = request.getfixturevalue(table)
+    out = dashboard.render_png(spark, sf, str(tmp_path / "dash.png"))
+    data = open(out, "rb").read()
+    assert rz.parse_png_header(data) == (900, 700)
+    assert len(rz.decode_png_pixels(data)) == 900 * 700 * 3
+
+
 def test_render_png_starts_the_benchmarked_job_count(spark, jobs_started, tmp_path):
     out = str(tmp_path / "dash.png")
     dashboard.render_png(spark, SF, out)  # warm-up: schema memo, codegen
     _, jobs = jobs_started(lambda: dashboard.render_png(spark, SF, out))
-    assert len(jobs) == RENDER_JOBS < 16
+    assert len(jobs) == RENDER_JOBS < 11
 
 
 def test_render_png_bytes_do_not_depend_on_shuffle_layout(spark, tmp_path):
