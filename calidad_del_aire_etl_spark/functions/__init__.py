@@ -38,15 +38,10 @@ def r4(col: Column) -> Column:
     """Round to 4 decimals — pins float results for cross-engine hashing.
 
     The +1e-9 nudge moves exact .00005 ties off the boundary so Spark's
-    BigDecimal HALF_UP and DuckDB's C-style round agree; oracle SQL uses
-    the same ``ROUND(x + 1e-9, 4)`` (see ``r4_sql``).
+    BigDecimal HALF_UP and DuckDB's C-style round agree; the oracle SQL
+    twins write the same ``ROUND(x + 1e-9, 4)`` inline.
     """
     return F.round(col + F.lit(1e-9), 4)
-
-
-def r4_sql(expr: str) -> str:
-    """DuckDB twin of :func:`r4`."""
-    return f"ROUND({expr} + 1e-9, 4)"
 
 
 def aqi_from_pm25(pm25: Column) -> Column:

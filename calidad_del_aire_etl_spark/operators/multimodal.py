@@ -222,55 +222,6 @@ def frame_sample(
     return df.select(*names).mapInPandas(sample, schema=FRAME_SCHEMA)
 
 
-RESIZE_SCHEMA = "doc_id bigint, ok boolean, thumb_len bigint, thumb_hex string"
-
-
-def resize_thumbnail(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str = "payload",
-    target_bytes: int = 16,
-    resizer=None,
-) -> DataFrame:
-    """Image-resize plumbing: decode → downsample → re-encode, stubbed
-    with a deterministic byte-stride subsample. ``resizer`` is the
-    real-decoder seam: a callable ``bytes -> bytes`` (e.g. PIL
-    ``Image.thumbnail`` + re-encode) that replaces the stub without
-    touching the Spark side. Errors are per-row flags, never job
-    failures."""
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            oks, lens, hexes = [], [], []
-            for payload in pdf[payload_col]:
-                data = bytes(payload)
-                try:
-                    if not data:
-                        raise NotImplementedError("real decoder required")
-                    if resizer is not None:
-                        thumb = bytes(resizer(data))
-                    else:
-                        stride = max(len(data) // target_bytes, 1)
-                        thumb = data[::stride][:target_bytes]
-                    oks.append(True)
-                    lens.append(len(thumb))
-                    hexes.append(thumb.hex())
-                except Exception:
-                    oks.append(False)
-                    lens.append(0)
-                    hexes.append("")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "ok": oks,
-                    "thumb_len": pd.Series(lens, dtype="int64"),
-                    "thumb_hex": hexes,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(resize, schema=RESIZE_SCHEMA)
-
-
 COGROUP_SCHEMA = (
     "user_id bigint, n_left bigint, n_right bigint, "
     "mean_gap_s double, aligned_pairs bigint"

@@ -127,345 +127,18 @@ def prepare_bucketed_facts(
     return built
 
 
-def write_parquet_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str],
-    partition_by: list[str] | None = None,
-    max_records_per_file: int = 1_000_000,
-    mode: str = "overwrite",
-) -> None:
-    """Layout-optimized parquet: rows sorted by ``cluster_cols`` WITHIN
-    each task partition before writing (no global sort, no extra
-    shuffle), bounding per-file value ranges so parquet column
-    min/max statistics prune row groups on ``cluster_cols`` predicates —
-    the poor man's Z-order, and the single biggest scan-cost lever at
-    100 TB after partition pruning. ``max_records_per_file`` caps file
-    size so a skewed task can't emit a multi-GB straggler file."""
-    w = (
-        df.sortWithinPartitions(*cluster_cols)
-        .write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
-    )
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_mb: int = 128,
-    partition_by: list[str] | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet dataset into files of
-    roughly ``target_mb`` each. Streaming ingests and fine-grained
-    incremental writes accumulate kilobyte files; at scale every file
-    costs a task + an object-store round trip, so scan latency degrades
-    linearly in file COUNT even when bytes are constant. Returns the
-    output file target used.
-
-    The rewrite stages into a sibling directory, then swaps via TWO
-    renames (path → .__old__, staging → path). The window between them
-    is NOT atomic: a crash there leaves no dataset at ``path`` — the
-    data survives intact in ``.__old__``, and the next compaction run
-    (or a reader finding ``path`` missing) recovers it automatically by
-    renaming ``.__old__`` back. Leftover staging/backup dirs from a
-    prior crash are reconciled before the swap, so reruns never fail on
-    residue. LOCAL-FILESYSTEM ONLY: os.rename/os.walk assume a posix
-    dir tree; object stores have no atomic rename at all — there the
-    correct primitive is a manifest/table-format commit (Delta/Iceberg
-    metadata swap), not this directory dance."""
-    import math
-    import os
-    import shutil
-
-    staging = path.rstrip("/") + ".__compact__"
-    backup = path.rstrip("/") + ".__old__"
-    # crash recovery: a previous run may have died mid-swap
-    if os.path.exists(backup):
-        if not os.path.exists(path):
-            os.rename(backup, path)  # died between the two renames
-        else:
-            shutil.rmtree(backup)  # died before deleting the old copy
-    if os.path.exists(staging):
-        shutil.rmtree(staging)  # stale staging from an aborted rewrite
-
-    size_bytes = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(math.ceil(size_bytes / (target_mb * 1024 * 1024)), 1)
-    df = spark.read.parquet(path)
-    w = df.repartition(n_files).write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(staging)
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
-    return n_files
-
-
 def write_jdbc(
     df: DataFrame, url: str, table: str, mode: str = "append", **options
 ) -> None:
-    """JDBC sink (reference dag:323-348's PostgreSQL path). Requires a
-    driver jar; raises a clear error when absent. Integration-tested
-    against embedded Derby (shipped in Spark's jars) in
-    tests/test_jdbc.py — overwrite and append round-trips."""
-    try:
-        w = df.write.format("jdbc").option("url", url).option("dbtable", table).mode(mode)
-        for k, v in options.items():
-            w = w.option(k, v)
-        w.save()
-    except Exception as e:  # pragma: no cover - driver genuinely absent
-        raise RuntimeError(
-            "JDBC sink unavailable (no driver jar on the classpath); "
-            "add e.g. postgresql.jar via spark.jars"
-        ) from e
-
-
-def write_orc(
-    df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None
-) -> None:
-    """ORC sink (zlib default; snappy for read-heavy warehouses). Same
-    partition-directory contract as the parquet writer."""
-    w = df.write.mode(mode).format("orc")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(path)
-
-
-def zorder_key(df: DataFrame, cols: list[str], bits: int = 16):
-    """Z-order (Morton) key column for up to 4 numeric columns: each
-    column min-max-quantized to ``bits`` levels, then bit-interleaved —
-    a locality-preserving 1-D ordering where a range predicate on ANY
-    participating column maps to few key ranges. The whole key is one
-    JVM expression (shifts and ORs inside codegen); the only driver
-    traffic is the 2x|cols| min/max scalars.
-
-    Returns the key Column. Quantization uses the CURRENT relation's
-    min/max — recompute when appending, or pin the domain externally
-    for stable keys across writes.
-
-    The interleaved key lives in a signed bigint, so the total width is
-    capped at 63 bits (``bits`` is clamped to ``63 // len(cols)``):
-    letting a bit land on position 63 would set the sign bit and make
-    the highest-quantile rows of the last column sort FIRST, silently
-    inverting the most-significant bit of the ordering."""
-    from pyspark.sql import functions as F
-
-    stats = df.agg(
-        *[F.min(c).cast("double").alias(f"__min_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"__max_{c}") for c in cols],
-    ).collect()[0]
-    n = len(cols)
-    bits = min(bits, 63 // n)
-    terms = []
-    for ci, c in enumerate(cols):
-        lo, hi = stats[f"__min_{c}"], stats[f"__max_{c}"]
-        span = (hi - lo) or 1.0
-        q = (
-            F.least(
-                F.lit(2**bits - 1),
-                F.floor((F.col(c).cast("double") - F.lit(lo)) / F.lit(span) * (2**bits - 1)),
-            )
-            .cast("bigint")
-        )
-        for b in range(bits):
-            # bit b of column ci lands at interleaved position b*n + ci
-            terms.append(
-                F.shiftleft(F.shiftright(q, b).bitwiseAND(F.lit(1)), b * n + ci)
-            )
-    key = terms[0]
-    for t in terms[1:]:
-        key = key.bitwiseOR(t)
-    return key.alias("__zkey")
-
-
-def write_parquet_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    num_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered parquet: range-partition + sort by the Morton
-    key of ``cols``, so EVERY participating column has tight per-file
-    min/max spans and parquet stats prune files/row-groups for
-    predicates on any of them — `write_parquet_clustered` only achieves
-    that for the leading sort column. One range shuffle (sampled
-    boundaries), the standard cost of OPTIMIZE ZORDER-style layout
-    jobs. Clustering quality is asserted in tests/test_bucketing.py."""
-    key = zorder_key(df, cols, bits)
-    clustered = df.withColumn("__zkey", key)
-    if num_files:
-        clustered = clustered.repartitionByRange(num_files, "__zkey")
-    else:
-        clustered = clustered.repartitionByRange("__zkey")
-    clustered.sortWithinPartitions("__zkey").drop("__zkey").write.mode(mode).parquet(
-        path
-    )
-
-
-def hilbert_key(df: DataFrame, cols: list[str], bits: int = 16):
-    """Hilbert-curve key column for exactly TWO numeric columns: each
-    min-max-quantized to ``bits`` levels, then mapped through the
-    classic xy→d rotation walk. Hilbert beats Z-order on locality —
-    consecutive keys are always grid-adjacent (no Morton "seams" where
-    the curve jumps across the domain), so per-file min/max spans on
-    the participating columns are tighter at the same file count.
-
-    The whole walk is ONE SQL ``aggregate`` fold over bit positions
-    (high→low) carrying a (d, x, y) struct accumulator — the standard
-    iterative algorithm with its quadrant rotations, executed JVM-side
-    per row with zero Python and zero extra scans. Driver traffic is
-    the four min/max scalars. The key fits 2·bits ≤ 62 bits — no
-    sign-bit hazard (cf. the zorder_key cap).
-
-    d-dimensional Hilbert generalizations exist (Hamilton's compact
-    algorithm) but 2-D covers the dominant layout case (time × id,
-    lat × lon); for >2 columns use ``zorder_key``.
-    """
-    from pyspark.sql import functions as F
-
-    assert len(cols) == 2, "hilbert_key is 2-D; use zorder_key for more columns"
-    bits = min(bits, 31)
-    stats = df.agg(
-        *[F.min(c).cast("double").alias(f"__min_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"__max_{c}") for c in cols],
-    ).collect()[0]
-
-    def q(c: str) -> str:
-        lo, hi = stats[f"__min_{c}"], stats[f"__max_{c}"]
-        span = (hi - lo) or 1.0
-        return (
-            f"least(cast({2**bits - 1} as bigint), cast(floor((cast({c} as double) - {lo!r}D) "
-            f"/ {span!r}D * {2**bits - 1}) as bigint))"
-        )
-
-    # rx/ry: quadrant bits at level i; rotation per the standard walk:
-    # ry=0 -> (flip if rx=1, then swap x/y); ry=1 -> unchanged.
-    step = (
-        "named_struct("
-        "'d', acc.d + shiftleft(cast(1 as bigint), 2 * i) * "
-        "((3 * ((acc.x >> i) & 1)) ^ ((acc.y >> i) & 1)), "
-        "'x', CASE WHEN ((acc.y >> i) & 1) = 0 THEN "
-        "(CASE WHEN ((acc.x >> i) & 1) = 1 THEN shiftleft(cast(1 as bigint), i) - 1 - acc.y ELSE acc.y END) "
-        "ELSE acc.x END, "
-        "'y', CASE WHEN ((acc.y >> i) & 1) = 0 THEN "
-        "(CASE WHEN ((acc.x >> i) & 1) = 1 THEN shiftleft(cast(1 as bigint), i) - 1 - acc.x ELSE acc.x END) "
-        "ELSE acc.y END)"
-    )
-    expr = (
-        f"aggregate(sequence({bits - 1}, 0, -1), "
-        f"named_struct('d', cast(0 as bigint), 'x', {q(cols[0])}, 'y', {q(cols[1])}), "
-        f"(acc, i) -> {step}).d"
-    )
-    return F.expr(expr).alias("__hkey")
-
-
-def write_parquet_hilbert(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    num_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Hilbert-clustered parquet — same contract and plan shape as
-    :func:`write_parquet_zordered` (one sampled range shuffle, sort
-    within files, key dropped before write), tighter 2-D locality."""
-    key = hilbert_key(df, cols, bits)
-    clustered = df.withColumn("__hkey", key)
-    if num_files:
-        clustered = clustered.repartitionByRange(num_files, "__hkey")
-    else:
-        clustered = clustered.repartitionByRange("__hkey")
-    (
-        clustered.sortWithinPartitions("__hkey")
-        .drop("__hkey")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def write_parquet_manifest(
-    df: DataFrame,
-    path: str,
-    stats_cols: list[str],
-    num_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Parquet with a Delta-style file-skipping manifest: data is
-    range-clustered on ``stats_cols[0]`` (tight per-file spans), and a
-    ``_manifest/`` side table records per-file min/max for every stats
-    column. Readers prune FILES from the manifest before Spark ever
-    lists/opens them — coarser than parquet row-group stats but paid at
-    the driver from a manifest thousands of times smaller than the
-    footers, which is the difference between a 100 TB scan planning in
-    milliseconds vs minutes. The ``_``-prefixed dir is invisible to
-    normal ``spark.read.parquet(path)`` (Spark's file index skips
-    ``_``/``.`` names), so the layout stays a plain parquet dataset.
-
-    The manifest is built from ONE distributed scan of the written
-    files (groupBy input_file_name), not from driver-side footer reads.
-    """
-    from pyspark.sql import functions as F
-
-    clustered = (
-        df.repartitionByRange(num_files, stats_cols[0])
-        if num_files
-        else df.repartitionByRange(stats_cols[0])
-    )
-    clustered.sortWithinPartitions(stats_cols[0]).write.mode(mode).parquet(path)
-    spark = df.sparkSession
-    written = spark.read.parquet(path)
-    aggs = []
-    for c in stats_cols:
-        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-    manifest = (
-        written.groupBy(F.input_file_name().alias("file"))
-        .agg(F.count(F.lit(1)).alias("n_rows"), *aggs)
-    )
-    manifest.coalesce(1).write.mode("overwrite").parquet(f"{path}/_manifest")
-
-
-def manifest_pruned_files(
-    spark, path: str, col: str, lo, hi
-) -> tuple[list[str], int]:
-    """(files whose [min_col, max_col] overlaps [lo, hi], total files)
-    — the pruning decision, exposed for tests and for readers."""
-    m = spark.read.parquet(f"{path}/_manifest").select(
-        "file", f"min_{col}", f"max_{col}"
-    ).collect()
-    # NULL stats (a file whose column is entirely NULL) mean "cannot
-    # prune" — keep the file; comparing None would raise instead
-    keep = [
-        r["file"]
-        for r in m
-        if r[f"max_{col}"] is None
-        or r[f"min_{col}"] is None
-        or (r[f"max_{col}"] >= lo and r[f"min_{col}"] <= hi)
-    ]
-    return keep, len(m)
-
-
-def read_parquet_manifest_pruned(spark, path: str, col: str, lo, hi) -> DataFrame:
-    """Range read over a manifest dataset: open ONLY the overlapping
-    files, then apply the exact predicate (manifest pruning is a
-    superset guarantee, the predicate is still the contract)."""
-    from pyspark.sql import functions as F
-
-    files, _total = manifest_pruned_files(spark, path, col, lo, hi)
-    src = spark.read.parquet(*files) if files else spark.read.parquet(path)
-    out = src.filter(F.col(col).between(lo, hi))
-    return out if files else out.limit(0)
-
+    """JDBC sink (reference dag:323-348's PostgreSQL path). Needs the
+    database's driver jar on the classpath; Spark's own error (e.g.
+    "No suitable driver", an existing table under ``mode="error"``)
+    propagates unchanged. Integration-tested against embedded Derby
+    (shipped in Spark's jars) in tests/test_jdbc.py."""
+    w = df.write.format("jdbc").option("url", url).option("dbtable", table).mode(mode)
+    for k, v in options.items():
+        w = w.option(k, v)
+    w.save()
 
 class CommitConflictError(RuntimeError):
     """A concurrent writer committed the snapshot version this writer
@@ -622,7 +295,7 @@ def _split_on_keys(
     spark, path: str, version: int, keys: DataFrame, key_cols: list[str],
     broadcast_keys: bool,
 ) -> tuple[list[str], DataFrame | None]:
-    """The affected-file discovery of MERGE and DELETE (see
+    """The affected-file discovery of MERGE (see
     :func:`merge_versioned_parquet`) against snapshot ``version``:
     (untouched files, the affected files' rows anti-joined on the keys —
     None when no file holds a key)."""
@@ -648,7 +321,7 @@ def _split_on_keys(
 
 
 def _commit_loop(spark, path: str, verb: str, max_retries: int, plan) -> int:
-    """The optimistic commit of append, MERGE and DELETE. Each attempt
+    """The optimistic commit of append and MERGE. Each attempt
     asks ``plan(latest version)`` for (files carried over, rows to write
     as new files or None) and publishes their union as the next version.
     A lost race or a :func:`_vanished_file_race` deletes the attempt's
@@ -963,33 +636,6 @@ def vacuum_versioned_parquet(
             if not live and swept_all and not fresh:
                 fs.delete(commit.getPath(), True)
     return deleted
-
-
-def delete_versioned_parquet(
-    spark,
-    path: str,
-    keys: DataFrame,
-    key_cols: list[str],
-    broadcast_keys: bool = True,
-    max_retries: int = 3,
-) -> int:
-    """Copy-on-write DELETE — the third DML verb next to append and
-    MERGE (TPC-H's RF2 shape: retire a batch of keys): rows matching
-    ``keys`` disappear from the new snapshot, rewriting ONLY the data
-    files that contain a matched key; untouched files carry over by
-    reference, and time travel still shows the pre-delete versions.
-    Same affected-file discovery as :func:`merge_versioned_parquet`
-    (semi-join on ``input_file_name``), same optimistic-concurrency
-    commit: a lost race deletes the stale survivor rewrite and re-runs
-    the delete against the new latest snapshot. Returns the new
-    version."""
-
-    def plan(current):
-        if current is None:
-            raise ValueError(f"no snapshots at {path}")
-        return _split_on_keys(spark, path, current, keys, key_cols, broadcast_keys)
-
-    return _commit_loop(spark, path, "delete_versioned_parquet", max_retries, plan)
 
 
 # Spark SQL simpleString -> DDL type, per dialect. The reference DAG

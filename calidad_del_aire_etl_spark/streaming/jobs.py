@@ -1,27 +1,30 @@
-"""Structured Streaming jobs (SURVEY §2 #38-40).
+"""Structured Streaming jobs (SURVEY §2 #38, #40e-#40r).
 
 The reference's "real-time alternative" is a 15-minute Airflow cron
-(README §Scheduling). Spark-first that's a streaming query: file-source
-ingest → watermark → windowed aggregation, with
-``applyInPandasWithState`` for the custom stateful operator the DSL
-can't express. Tests drive these with the file source +
-``processAllAvailable()`` so semantics (late data, state carry-over
-across batches) are asserted synchronously.
+(README §Scheduling). Spark-first that is a file-source stream
+(:func:`read_events_stream`) driven into exactly-once ``foreachBatch``
+sinks:
+
+- the incremental daily rollup (:func:`run_incremental_rollup`, the
+  ``stream_ingest`` benchmark workload);
+- the idempotent ``batch_id=N/`` parquet sink;
+- the CDC MERGE into a versioned parquet table;
+- the MinHash near-dup filter with a persisted band store;
+- the graph-ANN index with its view, search and compaction.
+
+Each at-least-once epoch is made exactly-once by an idempotent
+overwrite or by an ``_once_per_epoch`` marker. Tests drive these with
+the file source + ``processAllAvailable()`` and kill queries at the
+``_crash_point`` sites to assert replay convergence.
 """
 
 from __future__ import annotations
 
-import math
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as PSWindow
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.sketches import mg_fold
 from ..session import scoped_conf
 
 EVENTS_SCHEMA = T.StructType(
@@ -78,174 +81,6 @@ def read_events_stream(spark: SparkSession, input_dir: str) -> DataFrame:
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
-    )
-
-
-def windowed_value_agg(
-    stream: DataFrame,
-    window: str = "5 minutes",
-    slide: str | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """#39 — watermarked (sliding) window aggregation: late rows beyond
-    the watermark are dropped, the streaming-correctness contract."""
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(win, "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
-def streaming_dedup(
-    stream: DataFrame,
-    key_cols: list[str] | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """#38b — streaming exact dedup within the watermark horizon:
-    ``dropDuplicatesWithinWatermark`` keeps per-key state only until the
-    watermark passes, so state is bounded by (arrival rate × horizon) —
-    the streaming analog of the batch `etl_dedup_exact` operator. A
-    duplicate arriving after the horizon is a (documented) miss; that is
-    the bounded-state trade every streaming dedup makes."""
-    key_cols = key_cols or ["user_id", "event_type", "ts"]
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(key_cols)
-
-
-SESSION_OUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double, batches int"
-SESSION_STATE_SCHEMA = "n bigint, s double, batches int"
-
-
-def _session_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Running per-user aggregate that survives across micro-batches —
-    the state is the engine's, not the batch's."""
-    n, s, batches = state.get if state.exists else (0, 0.0, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        s += float(pdf["value"].sum())
-    batches += 1
-    state.update((n, s, batches))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "sum_value": [round(s, 4)], "batches": [batches]}
-    )
-
-
-def stateful_user_totals(stream: DataFrame) -> DataFrame:
-    """#40 — applyInPandasWithState: arbitrary per-key state (running
-    totals + batch counter) with Arrow-batched group input."""
-    return stream.groupBy("user_id").applyInPandasWithState(
-        _session_fn,
-        outputStructType=SESSION_OUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def enrich_stream_with_dim(stream: DataFrame, dim: DataFrame, key: str) -> DataFrame:
-    """#40b — stream-static enrichment join: every micro-batch hash-joins
-    against the (broadcast) static dimension. No streaming state at all —
-    the dim is re-resolvable per batch, so slowly-changing dims are
-    picked up on re-read; the 100 TB-stream shape for reference-data
-    joins (vs. a stateful stream-stream join, which this deliberately
-    is not)."""
-    return stream.join(F.broadcast(dim), key, "left")
-
-
-def session_window_agg(
-    stream: DataFrame, gap: str = "5 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """#40c — native session windows: gap-based sessionization as a
-    first-class streaming aggregation (merging windows state-side).
-    The streaming twin of the batch `sessionize` operator — watermark
-    bounds the state exactly as in the windowed agg."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "user_id",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "update"):
-    """Drive a streaming DataFrame into an in-memory table synchronously."""
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    return q
-
-
-def stream_stream_interval_join(
-    clicks: DataFrame, purchases: DataFrame, within_minutes: int = 30
-) -> DataFrame:
-    """#40d — stream-stream inner interval join: each purchase matched
-    to the same user's click events in the preceding ``within_minutes``.
-
-    Both sides carry watermarks so Spark can BOUND the join state: a
-    buffered click is dropped once the purchase-side watermark passes
-    click_ts + within_minutes (state eviction is what makes this run
-    forever at 100 TB/day — an unwatermarked stream-stream join grows
-    state without bound). The equi-key (user_id) routes both streams
-    through one hash partitioning; the time-interval predicate prunes
-    within each key group."""
-    c = (
-        clicks.withWatermark("ts", f"{within_minutes * 2} minutes")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-    )
-    p = (
-        purchases.withWatermark("ts", f"{within_minutes} minutes")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("value").alias("amount"),
-        )
-    )
-    return p.join(
-        c,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (
-            F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr(f"INTERVAL {within_minutes} MINUTES")
-        ),
-        "inner",
-    ).select(
-        F.col("p_user").alias("user_id"),
-        "purchase_id",
-        "purchase_ts",
-        "click_id",
-        "click_ts",
-        "amount",
     )
 
 
@@ -361,404 +196,6 @@ def run_incremental_rollup(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-MG_STREAM_OUT = "shard int, item string, est long, decr long"
-MG_STREAM_STATE = "ks array<string>, vs array<long>, decr long"
-
-
-def streaming_heavy_hitters(
-    stream: DataFrame, col: str, shards: int = 8, capacity: int = 64
-) -> DataFrame:
-    """#40g — streaming Misra-Gries top items: per-SHARD bounded sketch
-    state (capacity+decrement total) carried across micro-batches via
-    applyInPandasWithState. Values hash into ``shards`` state keys, so
-    state size is shards x capacity regardless of stream cardinality —
-    the streaming twin of operators/sketches.heavy_hitters, with the
-    same guarantee (per-shard est <= true <= est + decr; shards
-    partition the value space, so per-item bounds survive the final
-    cross-shard merge, which is a plain groupBy downstream)."""
-
-    def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            ks, vs, decr = state.get
-            counts = dict(zip(ks, vs))
-        else:
-            counts, decr = {}, 0
-        for pdf in pdfs:
-            counts, decr = mg_fold(counts, decr, pdf["v"], capacity)
-        state.update((list(counts.keys()), list(counts.values()), decr))
-        items = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        yield pd.DataFrame(
-            {
-                "shard": [key[0]] * len(items),
-                "item": [v for v, _ in items],
-                "est": [c for _, c in items],
-                "decr": [decr] * len(items),
-            }
-        )
-
-    keyed = stream.select(
-        F.col(col).cast("string").alias("v"),
-        F.pmod(F.xxhash64(F.col(col).cast("string")), F.lit(shards))
-        .cast("int")
-        .alias("shard"),
-    )
-    return keyed.groupBy("shard").applyInPandasWithState(
-        update,
-        outputStructType=MG_STREAM_OUT,
-        stateStructType=MG_STREAM_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-GAP_OUT_SCHEMA = (
-    "user_id bigint, gap_start timestamp, gap_end timestamp, gap_minutes double"
-)
-GAP_STATE_SCHEMA = "last_us bigint"
-
-
-def _make_gap_fn(max_gap_minutes: int):
-    """Build the per-sensor gap detector with the threshold bound in
-    (closure, so the streaming twin matches the batch operator at ANY
-    threshold, not just the default — r3 ADVICE)."""
-    threshold_us = max_gap_minutes * 60 * 1_000_000
-
-    def _gap_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Per-sensor gap detector: state is one integer — the last seen
-        event time in epoch-micros. State is O(1) per key forever (vs
-        buffering readings), the shape that keeps a million-sensor
-        fleet's state store flat.
-
-        applyInPandasWithState delivers a group's micro-batch rows as
-        MULTIPLE Arrow chunks with no ordering guarantee, so all chunks
-        are concatenated and sorted ONCE before the scan — sorting each
-        chunk independently can miss gaps or emit wrong bounds when
-        events split across chunks arrive out of event-time order
-        (r3 ADVICE)."""
-        import pandas as pd
-
-        last = state.get[0] if state.exists else None
-        ts_sorted = sorted(t for pdf in pdfs for t in pdf["ts"])
-        rows = []
-        for ts in ts_sorted:
-            cur = int(pd.Timestamp(ts).value // 1_000)  # ns -> us
-            if last is not None and cur - last > threshold_us:
-                rows.append(
-                    (
-                        key[0],
-                        pd.Timestamp(last * 1_000),
-                        pd.Timestamp(cur * 1_000),
-                        round((cur - last) / 60e6, 4),
-                    )
-                )
-            last = cur if last is None else max(last, cur)
-        state.update((last,))
-        yield pd.DataFrame(
-            rows, columns=["user_id", "gap_start", "gap_end", "gap_minutes"]
-        )
-
-    return _gap_fn
-
-
-def streaming_sensor_gaps(stream: DataFrame, max_gap_minutes: int = 120) -> DataFrame:
-    """#40c — streaming twin of the batch ``etl_sensor_gaps`` operator
-    (operators/cleaning.py): per-sensor reading-gap rows as they become
-    detectable, across micro-batch boundaries (the gap between the last
-    event of batch N and the first of batch N+1 is found via the
-    carried state, which a per-batch window could never see)."""
-    return stream.groupBy("user_id").applyInPandasWithState(
-        _make_gap_fn(max_gap_minutes),
-        outputStructType=GAP_OUT_SCHEMA,
-        stateStructType=GAP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def windowed_agg_with_late_audit(
-    stream: DataFrame,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """#40e — the watermarked window agg instrumented for late-data
-    observability: an ``observe`` metric stream counts every input row
-    and the minimum/maximum event time per micro-batch, and the state
-    store reports rows dropped by the watermark via
-    ``StreamingQueryProgress.stateOperators[].numRowsDroppedByWatermark``
-    (read with :func:`late_drop_metrics`). This is the production answer
-    to "how much data are we silently losing to lateness" — the input
-    that sizes the watermark, instead of guessing it.
-    """
-    audited = stream.observe(
-        "late_audit",
-        F.count(F.lit(1)).alias("n_input_rows"),
-        F.min("ts").alias("min_event_ts"),
-        F.max("ts").alias("max_event_ts"),
-    )
-    return windowed_value_agg(audited, window=window, watermark=watermark)
-
-
-def late_drop_metrics(query) -> dict:
-    """Totals from a running/finished query's progress history:
-    rows dropped by the watermark (state operators) and rows observed
-    (the ``late_audit`` metric). Call after ``processAllAvailable``."""
-    import json
-
-    dropped = 0
-    observed = 0
-    for p in query.recentProgress:
-        d = json.loads(p.json) if hasattr(p, "json") else p
-        for op in d.get("stateOperators", []):
-            dropped += op.get("numRowsDroppedByWatermark", 0)
-        obs = d.get("observedMetrics", {}).get("late_audit")
-        if obs:
-            observed += obs.get("n_input_rows", 0) or 0
-    return {"rows_dropped_late": dropped, "rows_observed": observed}
-
-
-HLL_STREAM_OUT = "shard int, est_distinct double, n_registers int"
-HLL_STREAM_STATE = "regs binary"
-
-
-def streaming_distinct_hll(
-    stream: DataFrame, col: str, shards: int = 4, p: int = 12
-) -> DataFrame:
-    """#40m — streaming approximate distinct count: per-shard HyperLogLog
-    register state (2^p bytes, FIXED — the whole point) carried across
-    micro-batches via applyInPandasWithState. Values route to shards by
-    hash; each shard's registers max-merge new observations (HLL's
-    merge = elementwise max, so replays/duplicates are idempotent by
-    construction); the global estimate is the HLL union of shard
-    registers downstream.
-
-    This is the unbounded-cardinality counterpart of
-    ``dropDuplicatesWithinWatermark`` + count: exact streaming distinct
-    needs per-key state that grows with cardinality forever; HLL state
-    is shards × 2^p bytes for the life of the stream.
-    """
-    import numpy as np
-
-    m = 1 << p
-
-    def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        regs = (
-            np.frombuffer(state.get[0], dtype=np.uint8).copy()
-            if state.exists
-            else np.zeros(m, dtype=np.uint8)
-        )
-        from pandas.util import hash_array
-
-        for pdf in pdfs:
-            vals = pdf["v"].astype("str").to_numpy()
-            if not len(vals):
-                continue
-            h = hash_array(vals)
-            idx = (h & np.uint64(m - 1)).astype(np.int64)
-            rest = (h >> np.uint64(p)).astype(np.uint64)
-            # rank = leading-zero count of the remaining 64-p bits + 1;
-            # computed as position of the highest set bit
-            nbits = 64 - p
-            rank = np.full(len(rest), nbits + 1, dtype=np.uint8)
-            nz = rest != 0
-            hi = np.zeros(len(rest), dtype=np.int64)
-            hi[nz] = np.frexp(rest[nz].astype(np.float64))[1]  # ≈ bit length
-            rank[nz] = (nbits - hi[nz] + 1).astype(np.uint8)
-            np.maximum.at(regs, idx, rank)
-        state.update((regs.tobytes(),))
-        alpha = 0.7213 / (1 + 1.079 / m)
-        est = alpha * m * m / np.sum(np.power(2.0, -regs.astype(np.float64)))
-        zeros = int(np.sum(regs == 0))
-        if est <= 2.5 * m and zeros:
-            est = m * np.log(m / zeros)  # small-range correction
-        yield pd.DataFrame(
-            {
-                "shard": [key[0]],
-                "est_distinct": [float(est)],
-                "n_registers": [m],
-            }
-        )
-
-    keyed = stream.select(
-        F.col(col).cast("string").alias("v"),
-        F.pmod(F.xxhash64(F.col(col).cast("string")), F.lit(shards))
-        .cast("int")
-        .alias("shard"),
-    )
-    return keyed.groupBy("shard").applyInPandasWithState(
-        update,
-        outputStructType=HLL_STREAM_OUT,
-        stateStructType=HLL_STREAM_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-QH_STREAM_OUT = "event_type string, p50_est double, p95_est double, n_rows long"
-QH_STREAM_STATE = "counts binary"
-
-
-def streaming_quantile_bands(
-    stream: DataFrame,
-    value_col: str = "value",
-    lo: float = 0.0,
-    hi: float = 1000.0,
-    bins: int = 256,
-) -> DataFrame:
-    """#40n — streaming p50/p95 per event type from FIXED-SIZE histogram
-    state: each group carries ``bins`` int64 counts (2 KiB at 256 bins —
-    constant for the life of the stream, the same bounded-state argument
-    as the HLL job) across micro-batches via applyInPandasWithState,
-    emitting interpolated percentile estimates each batch. The batch
-    twin is ``sketches.quantile_histogram_rollup`` — same binning, same
-    ceil-target in-bin interpolation, error ≤ one bin width against the
-    exact percentile (pytest-pinned on both).
-
-    The [lo, hi] range is a declared parameter (a stream can't take a
-    global min/max first); out-of-range values clamp into the edge bins.
-    Counting state is NOT replay-idempotent (counts add) — exactly-once
-    sinks or upstream dedup are the contract, as for every counting
-    stream."""
-    import numpy as np
-
-    width = (hi - lo) / bins
-
-    def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        counts = (
-            np.frombuffer(state.get[0], dtype=np.int64).copy()
-            if state.exists
-            else np.zeros(bins, dtype=np.int64)
-        )
-        for pdf in pdfs:
-            v = pdf["v"].to_numpy(dtype=np.float64)
-            if not len(v):
-                continue
-            idx = np.clip(
-                np.floor((v - lo) / width).astype(np.int64), 0, bins - 1
-            )
-            np.add.at(counts, idx, 1)
-        state.update((counts.tobytes(),))
-        n = int(counts.sum())
-        cum = counts.cumsum()
-
-        def est(p: float) -> float:
-            target = int(np.ceil(p * n))
-            b = int(np.searchsorted(cum, target))
-            cum_before = int(cum[b] - counts[b])
-            v = lo + width * (b + (target - cum_before) / float(counts[b]))
-            # repo r4 convention: HALF_UP away from zero with the 1e-9
-            # nudge — Python round() is HALF_EVEN and diverges from the
-            # batch twin (quantile_histogram_rollup's F.round) at
-            # boundary values
-            y = v + 1e-9
-            return float(math.copysign(math.floor(abs(y) * 1e4 + 0.5) / 1e4, y))
-
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "p50_est": [est(0.5) if n else None],
-                "p95_est": [est(0.95) if n else None],
-                "n_rows": [n],
-            }
-        )
-
-    keyed = stream.select("event_type", F.col(value_col).alias("v"))
-    return keyed.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=QH_STREAM_OUT,
-        stateStructType=QH_STREAM_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# #40o streaming z-score anomaly detector
-# ---------------------------------------------------------------------------
-
-ANOMALY_OUT_SCHEMA = "user_id bigint, ts timestamp, value double, z double, is_anomaly int"
-ANOMALY_STATE_SCHEMA = "n bigint, mean double, m2 double"
-
-
-def _make_anomaly_fn(z_thresh: float, min_n: int):
-    def _anomaly_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        """Streaming twin of ``etl_anomaly_flags``: per-user Welford
-        state (n, mean, M2) — O(1) per key forever. Each micro-batch is
-        scored against the stats of all PRIOR batches (a stable,
-        replay-deterministic baseline; z is reported with the repo's
-        r4 rounding, the flag compares unrounded |z| like the batch
-        twin — scoring row-by-row against a
-        shifting intra-batch mean would make results depend on Arrow
-        chunking), then merged into the state via Chan's parallel
-        update. Until ``min_n`` observations exist the detector stays
-        silent (z NULL) instead of flagging against noise.
-
-        All chunks are concatenated before any math (a group's batch can
-        arrive as several Arrow chunks in arbitrary order — the
-        round-3-advice gap-detector lesson)."""
-        n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values("ts")
-        vals = pdf["value"].astype(float)
-        if n >= min_n and m2 > 0:
-            std = math.sqrt(m2 / (n - 1)) if n > 1 else 0.0
-            z = (vals - mean) / std if std > 0 else vals * 0.0
-            # repo rounding convention (r4): HALF_UP away from zero with
-            # the 1e-9 nudge — pandas .round is HALF_EVEN and diverges
-            # from the batch twin at boundary values. The FLAG compares
-            # the unrounded z, exactly as etl_anomaly_flags does.
-            y = z + 1e-9
-            import numpy as _np
-
-            zr = pd.Series(
-                _np.sign(y) * _np.floor(_np.abs(y) * 1e4 + 0.5) / 1e4,
-                index=vals.index,
-            )
-            flag = (z.abs() > z_thresh).astype(int)
-        else:
-            zr = pd.Series([None] * len(pdf), dtype="object")
-            flag = pd.Series([0] * len(pdf), dtype="int64")
-        # Chan et al. merge of (n, mean, m2) with the batch's moments
-        nb = int(len(vals))
-        if nb:
-            mb = float(vals.mean())
-            m2b = float(((vals - mb) ** 2).sum())
-            delta = mb - mean
-            tot = n + nb
-            mean = mean + delta * nb / tot
-            m2 = m2 + m2b + delta * delta * n * nb / tot
-            n = tot
-        state.update((n, mean, m2))
-        yield pd.DataFrame(
-            {
-                "user_id": pdf["user_id"],
-                "ts": pdf["ts"],
-                "value": pdf["value"],
-                "z": zr,
-                "is_anomaly": flag,
-            }
-        )
-
-    return _anomaly_fn
-
-
-def streaming_anomaly(
-    stream: DataFrame, z_thresh: float = 3.0, min_n: int = 10
-) -> DataFrame:
-    """#40o — streaming anomaly flags: each event scored against its
-    user's running Welford baseline; state is three scalars per user
-    regardless of stream length."""
-    return stream.groupBy("user_id").applyInPandasWithState(
-        _make_anomaly_fn(z_thresh, min_n),
-        outputStructType=ANOMALY_OUT_SCHEMA,
-        stateStructType=ANOMALY_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

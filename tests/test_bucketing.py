@@ -71,61 +71,6 @@ def test_salted_join_splits_hot_keys(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
 
-def test_clustered_write_bounds_file_ranges_and_size(spark, tmp_path):
-    """sortWithinPartitions + maxRecordsPerFile: every output file's
-    [min,max] on the cluster column must be narrow enough to prune —
-    here: with 4 partitions each sorted, per-file ranges don't all span
-    the full domain — and no file exceeds the record cap."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from calidad_del_aire_etl_spark.sinks import writers
-
-    df = (
-        spark.range(0, 40_000)
-        .withColumn("k", (F.col("id") * 2654435761) % 40_000)  # scrambled
-        .repartition(4)
-    )
-    out = str(tmp_path / "clustered")
-    writers.write_parquet_clustered(df, out, ["k"], max_records_per_file=5_000)
-    files = glob.glob(f"{out}/part-*.parquet")
-    assert len(files) >= 8  # 40k rows / 5k cap
-    import pyarrow.parquet as pq
-
-    spans = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        assert md.num_rows <= 5_000
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = next(
-                md.row_group(rg).column(i)
-                for i in range(md.row_group(rg).num_columns)
-                if md.row_group(rg).column(i).path_in_schema == "k"
-            )
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        spans.append((max(maxs) - min(mins)) / 40_000)
-    # sorted-within-partition files cover ~1/8 of the domain each, not all of it
-    assert sorted(spans)[len(spans) // 2] < 0.5
-
-
-def test_compact_parquet_reduces_file_count_preserves_rows(spark, tmp_path):
-    from calidad_del_aire_etl_spark.sinks import writers
-    import glob
-
-    path = str(tmp_path / "many")
-    spark.range(0, 10_000).repartition(64).write.parquet(path)  # 64 tiny files
-    before = len(glob.glob(f"{path}/part-*.parquet"))
-    assert before == 64
-    writers.compact_parquet(spark, path, target_mb=128)
-    after = glob.glob(f"{path}/part-*.parquet")
-    assert len(after) <= 4  # far fewer, larger files
-    assert spark.read.parquet(path).count() == 10_000  # nothing lost
-    assert not glob.glob(f"{path}.__*")  # staging/backup cleaned up
-
-
 def test_partitioned_write_prunes_at_read(spark, tmp_path):
     """date-partitioned layout must show PartitionFilters (not a full
     scan + post-filter) when read back with a date predicate."""
@@ -140,175 +85,6 @@ def test_partitioned_write_prunes_at_read(spark, tmp_path):
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "2024-01-02" in plan
     assert back.count() == 100
-
-
-def test_compact_parquet_recovers_from_crashed_swap(spark, tmp_path):
-    """Simulated crash between the two swap renames (dataset sits in
-    .__old__, nothing at path) plus a stale staging dir: the next run
-    must restore the backup, clear residue, and compact normally."""
-    import os
-    import shutil
-
-    path = str(tmp_path / "ds")
-    spark.range(1000).selectExpr("id", "id % 7 AS k").repartition(10).write.parquet(path)
-    before = spark.read.parquet(path).count()
-    # simulate the crash window: path renamed away, staging left behind
-    os.rename(path, path + ".__old__")
-    os.makedirs(path + ".__compact__/junk")
-    writers.compact_parquet(spark, path, target_mb=128)
-    assert spark.read.parquet(path).count() == before
-    assert not os.path.exists(path + ".__old__")
-    assert not os.path.exists(path + ".__compact__")
-
-    # residue variant: backup left over but dataset present (crash after
-    # the second rename, before backup delete) => backup is discarded
-    shutil.copytree(path, path + ".__old__")
-    writers.compact_parquet(spark, path, target_mb=128)
-    assert spark.read.parquet(path).count() == before
-    assert not os.path.exists(path + ".__old__")
-
-
-@pytest.mark.slow
-def test_zorder_tightens_per_file_spans_on_both_dims(spark, tmp_path):
-    """Z-order vs single-column clustering: with a lexicographic sort on
-    (a) the secondary dim (b) has full-range spans per file; the Morton
-    layout must tighten BOTH dims' per-file spans, which is what lets
-    parquet min/max stats prune on either predicate."""
-    import glob
-
-    df = (
-        spark.range(40000)
-        .selectExpr("cast(id % 200 as double) a", "cast(cast(id / 200 as int) as double) b")
-    )
-    zpath, lpath = str(tmp_path / "z"), str(tmp_path / "lex")
-    writers.write_parquet_zordered(df, zpath, ["a", "b"], num_files=16)
-    writers.write_parquet_clustered(df.repartition(16), lpath, ["a"])
-
-    def mean_span(path, col):
-        spans = []
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            r = spark.read.parquet(f).agg(
-                F.min(col).alias("lo"), F.max(col).alias("hi")
-            ).collect()[0]
-            spans.append(r.hi - r.lo)
-        return sum(spans) / len(spans)
-
-    # dim b: z-order must beat the a-sorted layout by a wide margin
-    assert mean_span(zpath, "b") < 0.5 * mean_span(lpath, "b")
-    # and dim a must still be far tighter than the global span (200)
-    assert mean_span(zpath, "a") < 100
-
-
-def test_zorder_key_never_negative_at_four_cols(spark):
-    """4 columns at the default bits would put a bit on position 63 — the
-    bigint sign bit — making top-quantile rows of the last column sort
-    before everything else. The width cap (bits <= 63 // n_cols) keeps
-    the key non-negative for any documented column count (ADVICE r2)."""
-    df = spark.range(5000).selectExpr(
-        "cast(id as double) a",
-        "cast(id % 977 as double) b",
-        "cast(id % 131 as double) c",
-        "cast(id % 29 as double) d",
-    )
-    key = writers.zorder_key(df, ["a", "b", "c", "d"])  # default bits=16
-    lo = df.select(key).agg(F.min("__zkey").alias("lo")).collect()[0].lo
-    assert lo >= 0
-
-
-def test_hilbert_walk_matches_reference_and_is_continuous(spark):
-    """The SQL aggregate fold must reproduce the classic xy→d walk
-    bit-for-bit, and the curve must be CONTINUOUS: consecutive d values
-    map to grid-adjacent cells (Manhattan distance 1) — the property
-    Z-order lacks (Morton seams) and the reason Hilbert clusters
-    tighter."""
-
-    def hilbert_py(x, y, bits):
-        d = 0
-        for i in range(bits - 1, -1, -1):
-            s = 1 << i
-            rx = (x >> i) & 1
-            ry = (y >> i) & 1
-            d += s * s * ((3 * rx) ^ ry)
-            if ry == 0:
-                if rx == 1:
-                    x, y = s - 1 - x, s - 1 - y
-                x, y = y, x
-        return d
-
-    bits = 4
-    n = 1 << bits
-    # full grid: quantization is identity when values are 0..n-1
-    rows = [(y * n + x, float(x), float(y)) for x in range(n) for y in range(n)]
-    df = spark.createDataFrame(rows, "id long, a double, b double")
-    key = writers.hilbert_key(df, ["a", "b"], bits=bits)
-    got = {r["id"]: r["__hkey"] for r in df.select("id", key).collect()}
-    cell_of = {}
-    for i, x, y in rows:
-        assert got[i] == hilbert_py(int(x), int(y), bits)
-        cell_of[got[i]] = (int(x), int(y))
-    assert sorted(cell_of) == list(range(n * n))  # a bijection (space-filling)
-    for d in range(1, n * n):
-        (x0, y0), (x1, y1) = cell_of[d - 1], cell_of[d]
-        assert abs(x0 - x1) + abs(y0 - y1) == 1, f"curve jumps at d={d}"
-
-
-@pytest.mark.slow
-def test_hilbert_write_tightens_spans_like_zorder(spark, tmp_path):
-    """Same contract as the Z-order layout test: both dims' per-file
-    spans must be far tighter than a single-column sort's secondary
-    dim."""
-    import glob
-
-    df = (
-        spark.range(40000)
-        .selectExpr("cast(id % 200 as double) a", "cast(cast(id / 200 as int) as double) b")
-    )
-    hpath, lpath = str(tmp_path / "h"), str(tmp_path / "lex")
-    writers.write_parquet_hilbert(df, hpath, ["a", "b"], num_files=16)
-    writers.write_parquet_clustered(df.repartition(16), lpath, ["a"])
-
-    def mean_span(path, col):
-        spans = []
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            r = spark.read.parquet(f).agg(
-                F.min(col).alias("lo"), F.max(col).alias("hi")
-            ).collect()[0]
-            spans.append(r.hi - r.lo)
-        return sum(spans) / len(spans)
-
-    assert mean_span(hpath, "b") < 0.5 * mean_span(lpath, "b")
-    assert mean_span(hpath, "a") < 100
-
-
-def test_manifest_pruning_skips_files_and_keeps_answers_exact(spark, tmp_path):
-    """File-skipping contract: a narrow range predicate over a
-    range-clustered manifest dataset opens a strict subset of files,
-    and returns exactly the rows a full scan + filter returns."""
-    from pyspark.sql import functions as F
-
-    from calidad_del_aire_etl_spark.sinks import writers
-
-    df = spark.range(10_000).select(
-        F.col("id"), (F.col("id") % 977).alias("k"), (F.col("id") * 3).alias("v")
-    )
-    path = str(tmp_path / "mfst")
-    writers.write_parquet_manifest(df, path, ["id", "k"], num_files=16)
-    lo, hi = 2_000, 2_499
-    files, total = writers.manifest_pruned_files(spark, path, "id", lo, hi)
-    assert total == 16
-    assert 0 < len(files) < total, f"no pruning: {len(files)}/{total}"
-    got = sorted(
-        r["id"]
-        for r in writers.read_parquet_manifest_pruned(spark, path, "id", lo, hi).collect()
-    )
-    assert got == list(range(lo, hi + 1))
-    # plain readers must not see the manifest side table
-    assert spark.read.parquet(path).count() == 10_000
-    # fully-disjoint range → empty result, no error
-    assert (
-        writers.read_parquet_manifest_pruned(spark, path, "id", 50_000, 60_000).count()
-        == 0
-    )
 
 
 def test_versioned_parquet_time_travel(spark, tmp_path):
@@ -434,70 +210,6 @@ def test_vacuum_versioned_drops_unreferenced_files(spark, tmp_path):
     assert writers.latest_version(spark, path) == 2
     # idempotent: second vacuum deletes nothing
     assert writers.vacuum_versioned_parquet(spark, path, keep_last=1) == 0
-
-
-def test_versioned_tpch_refresh_cycle(spark, tmp_path):
-    """The TPC-H refresh-stream shape on the versioned table: RF1
-    (insert a new order batch via MERGE), RF2 (retire old orders via
-    copy-on-write DELETE) — every verb leaves prior snapshots readable
-    and rewrites only touched files."""
-    from pyspark.sql import functions as F
-
-    from calidad_del_aire_etl_spark.sinks import writers
-
-    path = str(tmp_path / "orders_v")
-    d = lambda lo, hi: spark.range(lo, hi).select(
-        F.col("id").alias("o_orderkey"), (F.col("id") % 5).alias("o_status")
-    ).repartition(4)
-    writers.write_versioned_parquet(d(0, 300), path, mode="append")
-    # RF1: insert 50 new orders
-    v1 = writers.merge_versioned_parquet(spark, path, d(300, 350), ["o_orderkey"])
-    # RF2: retire the oldest 40
-    v2 = writers.delete_versioned_parquet(
-        spark, path, spark.range(0, 40).select(F.col("id").alias("o_orderkey")),
-        ["o_orderkey"],
-    )
-    assert (v1, v2) == (1, 2)
-    ids = lambda v=None: sorted(
-        r["o_orderkey"]
-        for r in writers.read_versioned_parquet(spark, path, v).collect()
-    )
-    assert ids(0) == list(range(0, 300))
-    assert ids(1) == list(range(0, 350))
-    assert ids(2) == list(range(40, 350))
-    # deleting keys that hit no file still commits a consistent snapshot
-    v3 = writers.delete_versioned_parquet(
-        spark, path, spark.range(900, 910).select(F.col("id").alias("o_orderkey")),
-        ["o_orderkey"],
-    )
-    assert ids(v3) == list(range(40, 350))
-
-
-def test_manifest_pruning_survives_all_null_stat_files(spark, tmp_path):
-    """A file whose stats column is entirely NULL gets NULL min/max in
-    the manifest; pruning must keep such files (can't prune) instead of
-    raising on a None comparison."""
-    from pyspark.sql import functions as F
-
-    from calidad_del_aire_etl_spark.sinks import writers
-
-    path = str(tmp_path / "mnull")
-    # 300 NULLs > one range partition's ~200 rows, so at least one file
-    # is ALL-NULL in k and records NULL min/max in the manifest
-    df = spark.range(1000).select(
-        F.when(F.col("id") < 300, None).otherwise(F.col("id")).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    writers.write_parquet_manifest(df, path, ["k"], num_files=5)
-    stats = spark.read.parquet(f"{path}/_manifest").collect()
-    assert any(r["min_k"] is None for r in stats)  # the path is exercised
-    files, total = writers.manifest_pruned_files(spark, path, "k", 500, 600)
-    assert total == 5 and files  # no TypeError, null-stat file retained
-    got = sorted(
-        r["k"]
-        for r in writers.read_parquet_manifest_pruned(spark, path, "k", 500, 600).collect()
-    )
-    assert got == list(range(500, 601))
 
 
 def test_bucketed_fact_posture_is_transparent_and_shuffle_light(

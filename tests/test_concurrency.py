@@ -135,27 +135,6 @@ def test_append_conflict_rebases_file_list_without_rewrite(spark, tmp_path):
     assert _data_files_on_disk(path) == referenced
 
 
-def test_delete_conflict_retries_on_new_snapshot(spark, tmp_path):
-    path = str(tmp_path / "del")
-    _mk_base(spark, path)
-    kill_a = spark.createDataFrame([(i,) for i in range(0, 10)], "id long")
-    ups_b = spark.createDataFrame([(50, "B")], "id long, v string")
-
-    def competing_merge_b():
-        assert writers.merge_versioned_parquet(spark, path, ups_b, ["id"]) == 1
-
-    writers._test_pre_publish_hook = competing_merge_b
-    try:
-        va = writers.delete_versioned_parquet(spark, path, kill_a, ["id"])
-    finally:
-        writers._test_pre_publish_hook = None
-
-    assert va == 2
-    got = {r["id"]: r["v"] for r in writers.read_versioned_parquet(spark, path).collect()}
-    # The retried delete ran against B's snapshot: both effects visible.
-    assert len(got) == 90 and 0 not in got and got[50] == "B"
-
-
 @pytest.mark.slow
 def test_threaded_merges_both_land(spark, tmp_path):
     """True concurrency (no injected interleave): two threads MERGE

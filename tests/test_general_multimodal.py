@@ -111,19 +111,6 @@ def test_frame_sample_offsets_and_rowcount(spark):
     assert by_doc[2][0]["frame_sha256"] == hashlib.sha256(b"b" * 64).hexdigest()
 
 
-def test_resize_thumbnail_deterministic_and_error_flagged(spark):
-    from calidad_del_aire_etl_spark.operators import multimodal
-
-    df = spark.createDataFrame(
-        [(1, "x" * 160), (2, "")], "doc_id bigint, text string"
-    )
-    wb = multimodal.with_binary_payload(df, "text")
-    out = {r["doc_id"]: r for r in multimodal.resize_thumbnail(wb, "doc_id", target_bytes=16).collect()}
-    assert out[1]["ok"] and out[1]["thumb_len"] == 16
-    assert out[1]["thumb_hex"] == ("78" * 16)  # 'x' bytes survive the stride
-    assert not out[2]["ok"] and out[2]["thumb_len"] == 0  # empty → flagged, not fatal
-
-
 def test_cogroup_align_greedy_forward_matching(spark):
     import datetime as dt
 
@@ -149,29 +136,6 @@ def test_cogroup_align_greedy_forward_matching(spark):
     # u3: left only, no match; u9: right only, zero left
     assert out[3]["aligned_pairs"] == 0 and out[3]["mean_gap_s"] is None
     assert out[9]["n_left"] == 0 and out[9]["n_right"] == 1
-
-
-def test_json_quarantine_splits_good_and_bad(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from calidad_del_aire_etl_spark.sources import readers
-
-    p = tmp_path / "in.json"
-    p.write_text(
-        '{"id": 1, "v": 2.5}\n'
-        'not json at all\n'
-        '{"id": "boom", "v": 1.0}\n'   # id wrong type → quarantined
-        '{"id": 3, "v": 4.0}\n'
-    )
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.DoubleType())]
-    )
-    good, bad = readers.read_json_with_quarantine(spark, str(p), schema)
-    assert sorted(r["id"] for r in good.collect()) == [1, 3]
-    bad_rows = [r["_corrupt_record"] for r in bad.collect()]
-    assert len(bad_rows) == 2
-    assert any("not json" in b for b in bad_rows)
-    assert any("boom" in b for b in bad_rows)  # replayable raw line
 
 
 def test_corpus_is_ascii_for_frame_oracle(spark, sf_dir):
@@ -205,49 +169,6 @@ def test_feature_extract_batch_path_matches_rowwise_decode(spark):
             assert out[i]["ok"]
             assert out[i]["features"] == multimodal._fake_decode(t.encode())
             assert out[i]["byte_len"] == len(t.encode())
-
-
-def test_read_csv_with_quarantine(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from calidad_del_aire_etl_spark.sources import readers
-
-    p = tmp_path / "in.csv"
-    p.write_text(
-        "id,v\n"
-        "1,2.5\n"
-        "boom,1.0\n"      # id wrong type -> quarantined
-        "3,4.0\n"
-    )
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.DoubleType())]
-    )
-    good, bad = readers.read_csv_with_quarantine(spark, str(p), schema)
-    assert sorted(r["id"] for r in good.collect()) == [1, 3]
-    bad_rows = [r["_corrupt_record"] for r in bad.collect()]
-    assert len(bad_rows) == 1 and "boom" in bad_rows[0]
-
-
-def test_quarantine_readers_leave_no_cache_entries(spark, tmp_path):
-    """Each quarantine read over a distinct file must not pin a
-    CacheManager entry for the rest of the session."""
-    from pyspark.sql import types as T
-
-    from calidad_del_aire_etl_spark.sources import readers
-
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("v", T.DoubleType())]
-    )
-    pj, pc = tmp_path / "a.json", tmp_path / "b.csv"
-    pj.write_text('{"id": 1, "v": 2.5}\nnot json\n')
-    pc.write_text("id,v\n1,2.5\nboom,1.0\n")
-    spark.catalog.clearCache()
-    for good, bad in (
-        readers.read_json_with_quarantine(spark, str(pj), schema),
-        readers.read_csv_with_quarantine(spark, str(pc), schema),
-    ):
-        assert (good.count(), bad.count()) == (1, 1)
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_phash_band_join_is_exact_for_hamming_le_3(spark):

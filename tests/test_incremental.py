@@ -59,45 +59,6 @@ def test_static_mode_restored_after_write(spark, tmp_path):
     )
 
 
-def test_orc_round_trip_with_pushdown(spark, tmp_path):
-    """ORC write → read preserves values; predicate reaches the ORC scan."""
-    from calidad_del_aire_etl_spark.sinks import writers
-    from calidad_del_aire_etl_spark.sources import readers
-    from calidad_del_aire_etl_spark.registry import load
-
-    ev = load(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "event_type", "value"
-    )
-    path = str(tmp_path / "ev_orc")
-    writers.write_orc(ev, path)
-    back = readers.read_orc(spark, path, columns=["event_id", "value"])
-    assert back.count() == ev.count()
-    filtered = readers.read_orc(spark, path).filter("event_type = 'purchase'")
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "event_type" in plan
-    assert filtered.count() == ev.filter("event_type = 'purchase'").count()
-
-
-def test_text_corpus_reader_stable_keys(spark, tmp_path):
-    """Line-mode text ingest: stable doc keys, per-file line numbering."""
-    from calidad_del_aire_etl_spark.sources import readers
-
-    (tmp_path / "a.txt").write_text("alpha\nbeta\n")
-    (tmp_path / "b.txt").write_text("gamma\n")
-    df = readers.read_text_corpus(spark, str(tmp_path))
-    rows = df.collect()
-    assert len(rows) == 3
-    assert len({r.doc_key for r in rows}) == 3
-    by_file = {}
-    for r in rows:
-        by_file.setdefault(r.source_file.rsplit("/", 1)[-1], []).append(r)
-    assert sorted(r.line_no for r in by_file["a.txt"]) == [0, 1]
-    assert {r.text for r in by_file["a.txt"]} == {"alpha", "beta"}
-    # re-read produces identical keys (reproducible corpus ids)
-    again = {r.doc_key for r in readers.read_text_corpus(spark, str(tmp_path)).collect()}
-    assert again == {r.doc_key for r in rows}
-
-
 def test_expectations_report_flags_bad_column(spark):
     """A rule over a column with nulls fails; the clean columns pass."""
     from pyspark.sql import functions as F

@@ -356,25 +356,6 @@ def test_multimodal_wrong_arity_decoder_flags_rows(spark):
         assert got[i]["features"] == [0.0] * multimodal.FEATURE_DIM
 
 
-def test_multimodal_resizer_seam_preserves_contract(spark):
-    from calidad_del_aire_etl_spark.operators import multimodal
-
-    def resizer(data: bytes) -> bytes:
-        return data[:4][::-1]
-
-    rows = [(0, b"abcdefgh"), (1, b""), (2, b"xy")]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {
-        r["doc_id"]: r
-        for r in multimodal.resize_thumbnail(
-            df, "doc_id", resizer=resizer
-        ).collect()
-    }
-    assert got[0]["ok"] is True and got[0]["thumb_hex"] == b"dcba".hex()
-    assert got[1]["ok"] is False and got[1]["thumb_len"] == 0
-    assert got[2]["ok"] is True and got[2]["thumb_hex"] == b"yx".hex()
-
-
 def test_arrow_tokenizer_matches_java_split_semantics():
     """Direct kernel-level pin: Arrow split_pattern_regex under
     utf8_trim(' ') reproduces split(lower(trim(s)), '\\s+') for every

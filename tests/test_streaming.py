@@ -6,7 +6,6 @@ import datetime as dt
 import shutil
 import tempfile
 
-from pyspark.sql import functions as F
 
 from calidad_del_aire_etl_spark.streaming import jobs
 
@@ -34,145 +33,6 @@ def _write_batch(spark, d, rows, idx):
 
 def _t(minute):
     return dt.datetime(2024, 1, 1, 10, minute)
-
-
-def test_windowed_agg_over_file_stream(spark, input_dir):
-    rows = [
-        (1, _t(0), 1, "click", 10.0),
-        (2, _t(1), 1, "click", 20.0),
-        (3, _t(6), 2, "view", 5.0),
-    ]
-    _write_batch(spark, input_dir, rows, 0)
-    stream = jobs.read_events_stream(spark, input_dir)
-    agg = jobs.windowed_value_agg(stream, window="5 minutes")
-    q = jobs.run_to_memory(agg, "win_out", output_mode="update")
-    try:
-        out = spark.sql("SELECT * FROM win_out").collect()
-    finally:
-        q.stop()
-    got = {(r["window_start"].minute, r["event_type"]): (r["n"], r["sum_value"]) for r in out}
-    assert got[(0, "click")] == (2, 30.0)
-    assert got[(5, "view")] == (1, 5.0)
-
-
-def test_stateful_totals_carry_state_across_batches(spark, input_dir):
-    _write_batch(spark, input_dir, [(1, _t(0), 7, "click", 1.5)], 0)
-    stream = jobs.read_events_stream(spark, input_dir)
-    totals = jobs.stateful_user_totals(stream)
-    q = jobs.run_to_memory(totals, "state_out", output_mode="update")
-    try:
-        _write_batch(spark, input_dir, [(2, _t(1), 7, "click", 2.5)], 1)
-        q.processAllAvailable()
-        out = spark.sql(
-            "SELECT * FROM state_out ORDER BY batches DESC LIMIT 1"
-        ).collect()[0]
-    finally:
-        q.stop()
-    assert out["user_id"] == 7
-    assert out["n_events"] == 2  # state survived the batch boundary
-    assert out["sum_value"] == 4.0
-    assert out["batches"] == 2
-
-
-def test_streaming_dedup_within_watermark(spark, input_dir):
-    """Same (user, type, ts) arriving twice — across micro-batches —
-    must survive exactly once; a distinct ts passes through."""
-    _write_batch(spark, input_dir, [
-        (1, _t(0), 1, "click", 10.0),
-        (2, _t(0), 1, "click", 10.0),   # in-batch duplicate key
-        (3, _t(1), 1, "click", 7.0),
-    ], 0)
-    _write_batch(spark, input_dir, [
-        (4, _t(0), 1, "click", 10.0),   # cross-batch duplicate key
-        (5, _t(2), 2, "view", 1.0),
-    ], 1)
-    stream = jobs.read_events_stream(spark, input_dir)
-    deduped = jobs.streaming_dedup(stream, ["user_id", "event_type", "ts"])
-    q = jobs.run_to_memory(deduped, "dedup_out", output_mode="append")
-    try:
-        out = spark.sql("SELECT user_id, event_type, ts FROM dedup_out").collect()
-    finally:
-        q.stop()
-    keys = [(r["user_id"], r["event_type"], r["ts"].minute) for r in out]
-    assert sorted(keys) == [(1, "click", 0), (1, "click", 1), (2, "view", 2)]
-
-
-def test_stream_static_enrich_broadcast_join(spark, input_dir):
-    _write_batch(spark, input_dir, [
-        (1, _t(0), 1, "click", 10.0),
-        (2, _t(1), 2, "view", 5.0),
-        (3, _t(2), 9, "view", 1.0),   # no dim row → left join keeps it
-    ], 0)
-    dim = spark.createDataFrame(
-        [(1, "madrid"), (2, "bogota")], "user_id bigint, station string"
-    )
-    stream = jobs.read_events_stream(spark, input_dir)
-    enriched = jobs.enrich_stream_with_dim(stream, dim, "user_id")
-    q = jobs.run_to_memory(enriched, "enrich_out", output_mode="append")
-    try:
-        out = spark.sql("SELECT user_id, station FROM enrich_out").collect()
-    finally:
-        q.stop()
-    got = {r["user_id"]: r["station"] for r in out}
-    assert got == {1: "madrid", 2: "bogota", 9: None}
-
-
-def test_session_window_agg_merges_by_gap(spark, input_dir):
-    # u1: events at minute 0,2 (same session, 5m gap), then 20 (new session)
-    _write_batch(spark, input_dir, [
-        (1, _t(0), 1, "click", 1.0),
-        (2, _t(2), 1, "click", 2.0),
-        (3, _t(20), 1, "click", 4.0),
-    ], 0)
-    stream = jobs.read_events_stream(spark, input_dir)
-    sess = jobs.session_window_agg(stream, gap="5 minutes")
-    # session-window aggs only support append (watermark-finalized) or
-    # complete; complete lets the test read all sessions immediately
-    q = jobs.run_to_memory(sess, "sess_out", output_mode="complete")
-    try:
-        out = spark.sql("SELECT * FROM sess_out").collect()
-    finally:
-        q.stop()
-    got = sorted((r["session_start"].minute, r["n_events"], r["sum_value"]) for r in out)
-    assert got == [(0, 2, 3.0), (20, 1, 4.0)]
-
-
-def test_stream_stream_interval_join_bounds_state(spark, input_dir, tmp_path):
-    """Purchases join preceding clicks of the same user within 30 min,
-    across two micro-batches (the click arrives a batch before the
-    purchase, proving the join buffers watermarked state)."""
-    import datetime as dtm
-
-    clicks_dir = str(tmp_path / "clicks")
-    purch_dir = str(tmp_path / "purchases")
-    (tmp_path / "clicks").mkdir()
-    (tmp_path / "purchases").mkdir()
-    t0 = dtm.datetime(2024, 1, 1, 10, 0)
-    m = lambda k: dtm.timedelta(minutes=k)
-    # clicks: user 1 at 10:00 (in window); user 2 at 08:59 (too early)
-    _write_batch(
-        spark,
-        clicks_dir,
-        [(1, t0, 1, "click", 0.0), (2, t0 - m(61), 2, "click", 0.0)],
-        0,
-    )
-    # purchases at 10:10: user 1 joins, user 2's click is outside the window
-    _write_batch(
-        spark,
-        purch_dir,
-        [(10, t0 + m(10), 1, "purchase", 9.99), (11, t0 + m(10), 2, "purchase", 5.0)],
-        0,
-    )
-    clicks = jobs.read_events_stream(spark, clicks_dir)
-    purchases = jobs.read_events_stream(spark, purch_dir)
-    joined = jobs.stream_stream_interval_join(clicks, purchases, within_minutes=30)
-    q = jobs.run_to_memory(joined, "ssj", output_mode="append")
-    try:
-        q.processAllAvailable()
-        got = {r.purchase_id: r.click_id for r in spark.sql("select * from ssj").collect()}
-    finally:
-        q.stop()
-    assert got == {10: 1}  # user 1 joined; user 2's click was outside the window
 
 
 def test_foreach_batch_sink_is_idempotent(spark, input_dir, tmp_path):
@@ -265,258 +125,6 @@ def test_incremental_rollup_stream_replay_leaves_partitions_unchanged(
     ]
 
 
-@pytest.mark.slow
-def test_streaming_heavy_hitters_state_accumulates_across_batches(
-    spark, input_dir, tmp_path
-):
-    """The per-shard Misra-Gries state must carry across micro-batches:
-    after a second batch, the hot value's estimate covers BOTH batches,
-    and per-shard summaries stay capacity-bounded."""
-    rows1 = [(i, _t(0), 1, "hot", 1.0) for i in range(30)] + [
-        (100 + i, _t(1), 1, f"t{i}", 1.0) for i in range(6)
-    ]
-    _write_batch(spark, input_dir, rows1, 0)
-    stream = jobs.read_events_stream(spark, input_dir)
-    hh = jobs.streaming_heavy_hitters(stream, "event_type", shards=2, capacity=4)
-    q = (
-        hh.writeStream.format("memory")
-        .queryName("hh_out")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        _write_batch(
-            spark, input_dir, [(200 + i, _t(2), 1, "hot", 1.0) for i in range(20)], 1
-        )
-        q.processAllAvailable()
-        out = spark.sql(
-            "SELECT * FROM hh_out WHERE item = 'hot' ORDER BY est DESC LIMIT 1"
-        ).collect()
-        assert out, "hot item missing from streaming summary"
-        r = out[0]
-        assert r.est <= 50 <= r.est + r.decr  # MG bound over both batches
-        per_shard = (
-            spark.sql("SELECT shard, COUNT(DISTINCT item) c FROM hh_out GROUP BY 1")
-            .collect()
-        )
-        assert all(row.c <= 4 + 6 for row in per_shard)  # update-mode history, bounded
-    finally:
-        q.stop()
-
-
-def test_streaming_sensor_gaps_across_batches(spark, input_dir):
-    """A 5-hour silence spanning a micro-batch boundary must surface as
-    one gap row — provable only with carried state, not per-batch
-    windows. In-threshold arrivals emit nothing."""
-    _write_batch(spark, input_dir, [
-        (1, _t(0), 7, "click", 1.0),
-        (2, _t(30), 7, "click", 1.0),     # 30 min: under threshold
-    ], 0)
-    stream = jobs.read_events_stream(spark, input_dir)
-    gaps = jobs.streaming_sensor_gaps(stream)
-    q = jobs.run_to_memory(gaps, "gap_out", output_mode="append")
-    try:
-        late = dt.datetime(2024, 1, 1, 15, 35)  # 5h05 after _t(30)
-        _write_batch(spark, input_dir, [(3, late, 7, "click", 1.0)], 1)
-        q.processAllAvailable()
-        out = spark.sql("SELECT * FROM gap_out").collect()
-    finally:
-        q.stop()
-    assert len(out) == 1
-    g = out[0]
-    assert g["user_id"] == 7 and g["gap_minutes"] == 305.0
-    assert g["gap_start"] == dt.datetime(2024, 1, 1, 10, 30)
-    assert g["gap_end"] == late
-
-
-class _FakeState:
-    """Minimal GroupState stand-in for driving state functions directly."""
-
-    def __init__(self, value=None):
-        self._v = value
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-
-
-def test_gap_fn_multi_chunk_out_of_order():
-    """applyInPandasWithState may deliver a group's rows as several Arrow
-    chunks in ANY order; the detector must concatenate and sort across
-    chunks, or an early event arriving in a later chunk is absorbed by
-    the max() guard and its gap is missed / mis-bounded (r3 ADVICE)."""
-    import pandas as pd
-
-    fn = jobs._make_gap_fn(60)  # custom threshold: 60 min
-    # chunk 1 holds the LATER events, chunk 2 the earlier one.
-    chunk1 = pd.DataFrame({"ts": [dt.datetime(2024, 1, 1, 5, 0),
-                                  dt.datetime(2024, 1, 1, 9, 0)]})
-    chunk2 = pd.DataFrame({"ts": [dt.datetime(2024, 1, 1, 0, 0)]})
-    state = _FakeState()
-    out = pd.concat(list(fn((7,), iter([chunk1, chunk2]), state)))
-    # correct event-time order 00:00 -> 05:00 -> 09:00: two gaps (300, 240 min)
-    assert list(out["gap_minutes"]) == [300.0, 240.0]
-    assert list(out["gap_start"]) == [dt.datetime(2024, 1, 1, 0, 0),
-                                      dt.datetime(2024, 1, 1, 5, 0)]
-    assert state.get == (int(pd.Timestamp(dt.datetime(2024, 1, 1, 9, 0)).value // 1_000),)
-
-
-def test_gap_fn_threshold_parameter():
-    """The closure threshold matches the batch operator's parameter: a
-    45-minute silence is a gap at max_gap_minutes=30, not at 120."""
-    import pandas as pd
-
-    chunk = pd.DataFrame({"ts": [dt.datetime(2024, 1, 1, 0, 0),
-                                 dt.datetime(2024, 1, 1, 0, 45)]})
-    tight = pd.concat(list(jobs._make_gap_fn(30)((7,), iter([chunk]), _FakeState())))
-    loose = pd.concat(list(jobs._make_gap_fn(120)((7,), iter([chunk]), _FakeState())))
-    assert list(tight["gap_minutes"]) == [45.0]
-    assert len(loose) == 0
-
-
-def test_late_data_audit_counts_watermark_drops(spark, input_dir):
-    """A row far older than the advanced watermark must be counted in
-    numRowsDroppedByWatermark (surfaced by late_drop_metrics), while the
-    observe metric sees every input row — the observability pair that
-    sizes a production watermark."""
-    stream = jobs.read_events_stream(spark, input_dir)
-    agg = jobs.windowed_agg_with_late_audit(stream, window="5 minutes",
-                                            watermark="10 minutes")
-    _write_batch(spark, input_dir, [
-        (1, _t(0), 1, "click", 1.0),
-        (2, dt.datetime(2024, 1, 1, 11, 0), 1, "click", 1.0),  # watermark → ~10:50
-    ], 0)
-    q = (agg.writeStream.outputMode("append").format("memory")
-         .queryName("late_out").start())
-    try:
-        q.processAllAvailable()
-        # hours late relative to the watermark
-        _write_batch(spark, input_dir, [(3, dt.datetime(2024, 1, 1, 0, 0), 1, "click", 1.0)], 1)
-        q.processAllAvailable()
-        m = jobs.late_drop_metrics(q)
-    finally:
-        q.stop()
-    assert m["rows_observed"] == 3
-    assert m["rows_dropped_late"] >= 1
-
-
-@pytest.mark.slow
-def test_streaming_hll_distinct_estimates_and_is_idempotent(spark, input_dir):
-    """The per-shard HLL state must estimate the true distinct count
-    within sketch tolerance across micro-batches, and REPLAYED rows
-    must not move the estimate (register merge = max → idempotent)."""
-    import math
-
-    stream = jobs.read_events_stream(spark, input_dir)
-    hll = jobs.streaming_distinct_hll(stream, "user_id", shards=4, p=12)
-    rows1 = [(i, _t(i % 50), i, "click", 1.0) for i in range(120)]
-    _write_batch(spark, input_dir, rows1, 0)
-    q = jobs.run_to_memory(hll, "hll_out", output_mode="update")
-    try:
-        _write_batch(spark, input_dir,
-                     [(200 + i, _t(i % 50), 120 + i, "click", 1.0) for i in range(80)], 1)
-        q.processAllAvailable()
-        est_after_batches = spark.sql(
-            "SELECT SUM(est) FROM (SELECT shard, MAX(est_distinct) est "
-            "FROM hll_out GROUP BY shard)"
-        ).collect()[0][0]
-        # replay batch 1 verbatim (same user_ids) — estimate must not move
-        _write_batch(spark, input_dir, rows1, 2)
-        q.processAllAvailable()
-        est_after_replay = spark.sql(
-            "SELECT SUM(est) FROM (SELECT shard, MAX(est_distinct) est "
-            "FROM hll_out GROUP BY shard)"
-        ).collect()[0][0]
-    finally:
-        q.stop()
-    true_n = 200
-    assert abs(est_after_batches - true_n) / true_n < 0.15
-    assert math.isclose(est_after_batches, est_after_replay, rel_tol=1e-9)
-
-
-def test_streaming_quantile_bands_tracks_exact_within_bin(spark, input_dir):
-    """Histogram state accumulates across micro-batches and the final
-    p50/p95 estimates land within one bin width of the exact percentile
-    over ALL rows seen — the batch twin's guarantee, held by the
-    stream."""
-    import numpy as np
-
-    lo, hi, bins = 0.0, 100.0, 200
-    stream = jobs.read_events_stream(spark, input_dir)
-    qb = jobs.streaming_quantile_bands(stream, "value", lo=lo, hi=hi, bins=bins)
-    vals1 = [float((7 * i) % 100) for i in range(150)]
-    vals2 = [float((13 * i) % 100) for i in range(100)]
-    _write_batch(
-        spark, input_dir,
-        [(i, _t(i % 50), i, "click", v) for i, v in enumerate(vals1)], 0,
-    )
-    q = jobs.run_to_memory(qb, "qb_out", output_mode="update")
-    try:
-        _write_batch(
-            spark, input_dir,
-            [(1000 + i, _t(i % 50), i, "click", v) for i, v in enumerate(vals2)], 1,
-        )
-        q.processAllAvailable()
-        last = spark.sql(
-            "SELECT p50_est, p95_est, n_rows FROM qb_out "
-            "WHERE event_type = 'click' ORDER BY n_rows DESC LIMIT 1"
-        ).collect()[0]
-    finally:
-        q.stop()
-    allv = np.sort(np.array(vals1 + vals2))
-    assert last["n_rows"] == len(allv)
-    width = (hi - lo) / bins
-    for p, got in ((0.5, last["p50_est"]), (0.95, last["p95_est"])):
-        exact = float(allv[min(int(np.ceil(p * len(allv))) - 1, len(allv) - 1)])
-        assert abs(got - exact) <= width + 1e-6, f"p{int(p*100)}: {got} vs {exact}"
-
-
-def test_streaming_anomaly_welford_state(spark, input_dir):
-    """Batch 0 builds the baseline (silent: below min_n then absorbed);
-    batch 1's outlier is scored against the PRIOR-batch stats and
-    flagged; its normal neighbor is not."""
-    base = [(i, _t(i % 50), 7, "click", 10.0 + (i % 5)) for i in range(20)]
-    _write_batch(spark, input_dir, base, 0)
-    stream = jobs.read_events_stream(spark, input_dir)
-    out = jobs.streaming_anomaly(stream, z_thresh=3.0, min_n=10)
-    q = jobs.run_to_memory(out, "anom_out", output_mode="append")
-    try:
-        q.processAllAvailable()
-        warmup = spark.sql("SELECT * FROM anom_out").collect()
-        assert len(warmup) == 20
-        assert all(r["z"] is None and r["is_anomaly"] == 0 for r in warmup)
-        # batch-1 values are distinct from every warmup value (10-14),
-        # so the value-keyed lookup below is unambiguous
-        _write_batch(
-            spark,
-            input_dir,
-            [(100, _t(55), 7, "click", 100.0), (101, _t(56), 7, "click", 11.5)],
-            1,
-        )
-        q.processAllAvailable()
-        rows = {
-            r["event_id"]: r
-            for r in spark.sql(
-                "SELECT e.event_id, a.z, a.is_anomaly FROM anom_out a "
-                "JOIN (VALUES (100, 100.0), (101, 11.5)) e(event_id, v) "
-                "ON a.value = e.v"
-            ).collect()
-        }
-    finally:
-        q.stop()
-    assert rows[100]["is_anomaly"] == 1 and rows[100]["z"] > 3
-    assert rows[101]["is_anomaly"] == 0 and abs(rows[101]["z"]) <= 3
-
-
 def test_streaming_cdc_merge_versioned(spark, input_dir, tmp_path):
     """Change stream MERGEs into the versioned table: latest change per
     key wins within a batch, cross-batch upserts land as snapshots, and
@@ -556,116 +164,6 @@ def test_streaming_cdc_merge_versioned(spark, input_dir, tmp_path):
     got = {r["user_id"]: r["value"]
            for r in writers.read_versioned_parquet(spark, table).collect()}
     assert got[1] == 12.0
-
-
-# ---------------------------------------------------------------------------
-# batch ↔ streaming twin parity (round-5 verdict #6): identical data fed
-# through both forms must agree — exactly for the histogram family
-# (counts add, so the merged stream state IS the batch histogram), and
-# modulo the documented prior-batch baseline for the anomaly detector.
-# ---------------------------------------------------------------------------
-
-
-@pytest.mark.slow
-def test_streaming_quantile_bands_matches_batch_rollup(spark, input_dir):
-    """The same 200 rows through (a) streaming histogram state split
-    across three micro-batches and (b) the batch
-    quantile_histogram_rollup must yield identical p50/p95/n per group:
-    binning, ceil-target interpolation, and r4 rounding are the same
-    text on both paths. The stream's declared [lo, hi] matches the
-    batch operator's data-derived range because the min/max values are
-    planted in the data."""
-    import random
-
-    from calidad_del_aire_etl_spark.operators import sketches
-
-    rng = random.Random(42)
-    rows = []
-    eid = 0
-    for et in ("click", "view"):
-        vals = [0.0, 100.0] + [round(rng.uniform(1, 99), 2) for _ in range(98)]
-        for v in vals:
-            rows.append((eid, _t(eid % 60), eid % 5, et, v))
-            eid += 1
-    bins = 64
-
-    _write_batch(spark, input_dir, rows[0::3], 0)
-    stream = jobs.read_events_stream(spark, input_dir)
-    qb = jobs.streaming_quantile_bands(stream, "value", lo=0.0, hi=100.0, bins=bins)
-    q = jobs.run_to_memory(qb, "qb_parity", output_mode="update")
-    try:
-        q.processAllAvailable()
-        _write_batch(spark, input_dir, rows[1::3], 1)
-        q.processAllAvailable()
-        _write_batch(spark, input_dir, rows[2::3], 2)
-        q.processAllAvailable()
-        final = {
-            r["event_type"]: (r["p50_est"], r["p95_est"], r["n_rows"])
-            for r in spark.sql(
-                "SELECT * FROM qb_parity WHERE n_rows = 100"
-            ).collect()
-        }
-    finally:
-        q.stop()
-
-    bdf = spark.createDataFrame(rows, jobs.EVENTS_SCHEMA)
-    batch = {
-        r["event_type"]: (r["p50_est"], r["p95_est"], r["n_rows"])
-        for r in sketches.quantile_histogram_rollup(
-            bdf, "ts", "event_type", "value", bins=bins
-        ).collect()
-    }
-    assert set(final) == {"click", "view"} == set(batch)
-    assert final == batch
-
-
-def test_streaming_anomaly_matches_batch_formula_on_prior_stats(spark, input_dir):
-    """Prior-batch semantics made explicit: micro-batch 2's rows are
-    scored against batch-1 state, so the batch z formula (same r4
-    rounding, same unrounded |z| flag compare as etl_anomaly_flags)
-    evaluated with per-user aggregates over batch 1 must reproduce the
-    streaming output row for row."""
-    from calidad_del_aire_etl_spark.functions import r4
-
-    hist_vals = [10.0, 12.0, 11.0, 9.0, 10.0, 11.0, 10.0, 12.0, 9.0, 11.0, 10.0, 10.0]
-    hist = [(i, _t(i), 7, "click", v) for i, v in enumerate(hist_vals)]
-    score = [
-        (100, _t(40), 7, "click", 10.5),
-        (101, _t(41), 7, "click", 25.0),   # far outlier → flagged
-        (102, _t(42), 7, "click", 9.0),
-    ]
-
-    _write_batch(spark, input_dir, hist, 0)
-    stream = jobs.read_events_stream(spark, input_dir)
-    out = jobs.streaming_anomaly(stream, z_thresh=3.0, min_n=10)
-    q = jobs.run_to_memory(out, "anom_parity", output_mode="append")
-    try:
-        q.processAllAvailable()          # batch 1: builds state, z NULL
-        _write_batch(spark, input_dir, score, 1)
-        q.processAllAvailable()
-        got = {
-            r["ts"]: (r["z"], r["is_anomaly"])
-            for r in spark.sql(
-                "SELECT * FROM anom_parity WHERE z IS NOT NULL"
-            ).collect()
-        }
-    finally:
-        q.stop()
-
-    h = spark.createDataFrame(hist, jobs.EVENTS_SCHEMA)
-    s = spark.createDataFrame(score, jobs.EVENTS_SCHEMA)
-    stats = h.groupBy("user_id").agg(
-        F.avg("value").alias("mu"), F.stddev_samp("value").alias("sd")
-    )
-    z = (F.col("value") - F.col("mu")) / F.col("sd")
-    expected = {
-        r["ts"]: (r["z"], r["flag"])
-        for r in s.join(stats, "user_id")
-        .select("ts", r4(z).alias("z"), (F.abs(z) > 3).cast("int").alias("flag"))
-        .collect()
-    }
-    assert len(got) == 3
-    assert got == expected
 
 
 def test_streaming_minhash_dedup_band_store(spark, input_dir, tmp_path):
