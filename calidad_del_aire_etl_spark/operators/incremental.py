@@ -14,9 +14,10 @@ warehouse-style backfills work. The streaming sink
 (streaming/jobs.incremental_rollup_sink) meets it by feeding
 :func:`date_slice` of its staged history.
 
-The write is the only Spark job: the touched dates come back from an
-``Observation`` riding on the write (:func:`observe_dates`), not from a
-second scan of the batch.
+The write is the only action: the touched dates come back from an
+``Observation`` riding on it (:func:`observe_dates`), not from a second
+scan of the batch. Under AQE that action is two Spark jobs, the
+aggregation's map stage and the write.
 """
 
 from __future__ import annotations
@@ -47,12 +48,28 @@ def write_daily_full(summary: DataFrame, path: str) -> None:
     summary.write.mode("overwrite").partitionBy("date").parquet(path)
 
 
-def observe_dates(df: DataFrame, date: Column) -> tuple[DataFrame, Observation]:
-    """Attach the distinct values of the string ``date`` column to
-    ``df``'s next action. ``obs.get["dates"]`` is ready once that action
-    (a write, say) has finished; it costs no job of its own."""
+def observe_dates(
+    df: DataFrame, date: Column, **more: Column
+) -> tuple[DataFrame, Observation]:
+    """Attach the distinct values of the string ``date`` column, and
+    each aggregate in ``more`` under its keyword, to ``df``'s next
+    action. ``obs.get["dates"]`` is ready once that action (a write,
+    say) has finished; it costs no job of its own."""
     obs = Observation()
-    return df.observe(obs, F.collect_set(date).alias("dates")), obs
+    aggs = [F.collect_set(date).alias("dates")] + [c.alias(k) for k, c in more.items()]
+    return df.observe(obs, *aggs), obs
+
+
+def _day_runs(dates: list[str]) -> list[list[dt.date]]:
+    """``dates`` as half-open runs of consecutive days, ``[first, day
+    after the last)``, in order."""
+    runs: list[list[dt.date]] = []
+    for d in sorted(dt.date.fromisoformat(d) for d in set(dates)):
+        if runs and d == runs[-1][1]:
+            runs[-1][1] = d + dt.timedelta(days=1)
+        else:
+            runs.append([d, d + dt.timedelta(days=1)])
+    return runs
 
 
 def date_slice(events: DataFrame, dates: list[str]) -> DataFrame:
@@ -64,20 +81,30 @@ def date_slice(events: DataFrame, dates: list[str]) -> DataFrame:
     outside them (``to_date(ts) IN (...)`` cannot be pushed down). The
     bounds are string casts of the local midnights, which follow DST: a
     23 h or 25 h day keeps exactly its own rows."""
-    days = sorted(dt.date.fromisoformat(d) for d in set(dates))
-    runs: list[list[dt.date]] = []
-    for d in days:
-        if runs and d == runs[-1][1]:
-            runs[-1][1] = d + dt.timedelta(days=1)
-        else:
-            runs.append([d, d + dt.timedelta(days=1)])
     cond = F.lit(False)
-    for lo, hi in runs:
+    for lo, hi in _day_runs(dates):
         cond = cond | (
             (F.col("ts") >= F.lit(lo.isoformat()).cast("timestamp"))
             & (F.col("ts") < F.lit(hi.isoformat()).cast("timestamp"))
         )
     return events.filter(cond)
+
+
+def date_slice_micros(spark: SparkSession, dates: list[str]) -> list[tuple[int, int]]:
+    """:func:`date_slice`'s ``ts`` ranges as half-open epoch-microsecond
+    pairs, computed driver-side with no job. The local midnights come
+    from the JVM's zone rules for the session time zone, the ones the
+    string-to-timestamp casts in :func:`date_slice` apply."""
+    jvm = spark._jvm
+    zone = jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+        spark.conf.get("spark.sql.session.timeZone")
+    )
+
+    def micros(d: dt.date) -> int:
+        start = jvm.java.time.LocalDate.of(d.year, d.month, d.day).atStartOfDay(zone)
+        return start.toEpochSecond() * 1_000_000
+
+    return [(micros(lo), micros(hi)) for lo, hi in _day_runs(dates)]
 
 
 def incremental_daily_update(
@@ -91,7 +118,9 @@ def incremental_daily_update(
     directories, not ~1100."""
     summary, obs = observe_dates(daily_rollup(events_batch), F.col("date"))
     with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        summary.write.mode("overwrite").partitionBy("date").parquet(path)
+        summary.write.mode("overwrite").partitionBy("date").option(
+            "compression", "zstd"
+        ).parquet(path)
     return sorted(obs.get["dates"])
 
 

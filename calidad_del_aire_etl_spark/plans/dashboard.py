@@ -22,14 +22,12 @@ its rows would carry the other panels' (NULL) columns too.
 
 ``render_png`` draws the reference's six-panel layout (dashboard:70-254)
 with the stdlib-only rasterizer in :mod:`rasterize`, the same bytes on
-every host and every shuffle layout; ``export_csv`` hands the same six
-relations to any external BI/plotting tool. The data side is always
-real and tested.
+every host and every shuffle layout. The data side is always real and
+tested.
 """
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 from typing import TYPE_CHECKING
 
@@ -71,17 +69,6 @@ def chart_relations(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {
         n: panels[n][1](cells) if n in panels else qs[n](spark, sf_dir) for n in names
     }
-
-
-def export_csv(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
-    """Write each chart relation as a single CSV (these are tiny,
-    chart-sized outputs — coalesce(1) is correct here, not a smell)."""
-    paths = {}
-    for name, df in chart_relations(spark, sf_dir).items():
-        p = os.path.join(out_dir, name)
-        df.coalesce(1).write.mode("overwrite").option("header", True).csv(p)
-        paths[name] = p
-    return paths
 
 
 def collect_packed(rels: dict[str, DataFrame]) -> dict[str, pd.DataFrame]:

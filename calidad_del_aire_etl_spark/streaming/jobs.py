@@ -51,6 +51,13 @@ def _crash_point(site: str, batch_id: int) -> None:
         _test_crash_hook(site, batch_id)
 
 
+def _hadoop_fs(spark: SparkSession, root: str):
+    """The Hadoop FileSystem that holds ``root``."""
+    return spark._jvm.org.apache.hadoop.fs.Path(root).getFileSystem(
+        spark._jsc.hadoopConfiguration()
+    )
+
+
 def _once_per_epoch(root: str, marker_dir: str, site: str, apply):
     """foreachBatch function that runs ``apply(batch_df, batch_id, fs)``
     at most once per epoch: a ``<root>/<marker_dir>/batch-N`` marker is
@@ -60,11 +67,8 @@ def _once_per_epoch(root: str, marker_dir: str, site: str, apply):
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(root).getFileSystem(
-            spark._jsc.hadoopConfiguration()
-        )
-        marker = jvm.org.apache.hadoop.fs.Path(f"{root}/{marker_dir}/batch-{batch_id}")
+        fs = _hadoop_fs(spark, root)
+        marker = spark._jvm.org.apache.hadoop.fs.Path(f"{root}/{marker_dir}/batch-{batch_id}")
         if fs.exists(marker):
             return  # epoch replay — already applied
         apply(batch_df, batch_id, fs)
@@ -120,6 +124,49 @@ def run_foreach_batch(stream_df: DataFrame, out_dir: str, checkpoint_dir: str):
     )
 
 
+# Range entries of the rollup sink's staged batches: one empty directory
+# per batch, ``<staged>/_ts_ranges/<batch_id>_<lo>_<hi>``, where lo and hi
+# are the batch's min and max ``ts`` in epoch microseconds, or ``null``.
+_TS_RANGES = "_ts_ranges"
+
+
+def _staged_overlapping(
+    spark: SparkSession, staged_dir: str, ranges: list[tuple[int, int]]
+) -> list[str]:
+    """The staged ``batch_id=N`` dirs, in batch order, that may hold rows
+    in one of the half-open epoch-microsecond ``ranges``: each batch with
+    a range entry that overlaps one, and each batch with no entry or a
+    NULL bound. A staged root reused under a new checkpoint can hold an
+    older run's entry for the same batch id, so any overlapping entry
+    keeps the batch. Two directory listings on the driver; no file is
+    read."""
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = _hadoop_fs(spark, staged_dir)
+    entries: dict[str, list[tuple[str, str]]] = {}
+    ranges_dir = path(f"{staged_dir}/{_TS_RANGES}")
+    if fs.exists(ranges_dir):
+        for st in fs.listStatus(ranges_dir):
+            b, lo, hi = st.getPath().getName().split("_")
+            entries.setdefault(b, []).append((lo, hi))
+
+    def keep(b: str) -> bool:
+        if b not in entries:
+            return True
+        return any(
+            lo == "null"
+            or hi == "null"
+            or any(int(lo) < r_hi and int(hi) >= r_lo for r_lo, r_hi in ranges)
+            for lo, hi in entries[b]
+        )
+
+    batches = {}
+    for st in fs.listStatus(path(staged_dir)):
+        key, _, b = st.getPath().getName().partition("=")
+        if key == "batch_id" and keep(b):
+            batches[int(b)] = st.getPath().toString()
+    return [batches[b] for b in sorted(batches)]
+
+
 def incremental_rollup_sink(spark, staged_dir: str, rollup_dir: str):
     """#40f — streaming ≫ incremental-rollup unification: foreachBatch
     drives operators/incremental.py's dynamic-partition-overwrite daily
@@ -129,17 +176,24 @@ def incremental_rollup_sink(spark, staged_dir: str, rollup_dir: str):
 
     1. stage the batch's RAW rows under ``batch_id=<epoch>/`` with
        overwrite — the idempotent-staging half (a replayed epoch
-       rewrites identical files, never appends). An ``Observation`` on
-       this write yields the batch's touched dates, so collecting them
-       costs no job. ``ts`` is staged as TIMESTAMP_MICROS: INT96 columns
-       carry no parquet statistics;
-    2. open the staged history with the batch's schema (no inference
-       job) and keep the touched dates' rows as ``ts`` ranges
-       (operators/incremental.date_slice). Staging is partitioned by
-       ``batch_id``, not ``date``, so no directory is pruned, but the
-       ``ts`` min/max statistics skip every row group outside the
-       touched dates: the scan reads those dates' rows, not the whole
-       history;
+       rewrites identical files, never appends). Each partition is
+       sorted by ``(ts, event_id)`` and written zstd-compressed, so a
+       redelivered epoch stages the same rows in the same order, with
+       no exchange. ``ts`` is staged as TIMESTAMP_MICROS: INT96 columns
+       carry no parquet statistics. An ``Observation`` on this write
+       yields the batch's touched dates and its min/max ``ts``, so
+       collecting them costs no job. After the data, the range is
+       recorded as an empty ``_ts_ranges/<batch_id>_<lo>_<hi>``
+       directory; a replayed epoch records the same name;
+    2. open only the staged batches whose range overlaps the touched
+       dates (:func:`_staged_overlapping`: one driver-side listing of
+       the range entries and one of the staged root), with the batch's
+       schema (no inference job), and keep the touched dates' rows as
+       ``ts`` ranges (operators/incremental.date_slice). The ``ts``
+       min/max statistics then skip every row group outside the touched
+       dates in the batches that are opened. A batch with no entry (a
+       crash between its data and its entry, or a history staged by an
+       older version) or with a NULL bound is always opened;
     3. recompute those dates' rollup partitions and
        dynamic-partition-overwrite only them
        (operators/incremental.incremental_daily_update; two jobs under
@@ -151,14 +205,13 @@ def incremental_rollup_sink(spark, staged_dir: str, rollup_dir: str):
     any single batch), and an epoch replay recomputes byte-identical
     partition contents: exactly-once END-TO-END on an at-least-once
     foreachBatch. Staged dirs written INT96 by earlier versions still
-    read correctly; they are just never skipped. Opening a staged root
-    of more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
-    (32) ``batch_id`` dirs adds one parallel-listing job."""
+    read correctly; they are just never skipped."""
     from ..operators import incremental
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        ts_us = F.unix_micros("ts")
         observed, obs = incremental.observe_dates(
-            batch_df, F.to_date("ts").cast("string")
+            batch_df, F.to_date("ts").cast("string"), lo=F.min(ts_us), hi=F.max(ts_us)
         )
         # foreachBatch runs in a clone of the query's session: the conf
         # must go on the batch's own session to reach this write
@@ -167,16 +220,27 @@ def incremental_rollup_sink(spark, staged_dir: str, rollup_dir: str):
             "spark.sql.parquet.outputTimestampType",
             "TIMESTAMP_MICROS",
         ):
-            observed.write.mode("overwrite").parquet(
-                f"{staged_dir}/batch_id={batch_id}"
+            observed.sortWithinPartitions("ts", "event_id").write.mode(
+                "overwrite"
+            ).option("compression", "zstd").parquet(f"{staged_dir}/batch_id={batch_id}")
+        _crash_point("rollup:post_stage", batch_id)
+        got = obs.get
+        lo, hi = ("null" if v is None else v for v in (got["lo"], got["hi"]))
+        _hadoop_fs(spark, staged_dir).mkdirs(
+            spark._jvm.org.apache.hadoop.fs.Path(
+                f"{staged_dir}/{_TS_RANGES}/{batch_id}_{lo}_{hi}"
             )
-        dates = obs.get["dates"]
+        )
+        dates = got["dates"]
         if not dates:
             return
+        paths = _staged_overlapping(
+            spark, staged_dir, incremental.date_slice_micros(spark, dates)
+        )
         staged = (
             spark.read.schema(batch_df.schema)
             .option("basePath", staged_dir)
-            .parquet(staged_dir)
+            .parquet(*paths)
         )
         incremental.incremental_daily_update(
             spark, incremental.date_slice(staged, dates).drop("batch_id"), rollup_dir

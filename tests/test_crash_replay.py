@@ -256,3 +256,49 @@ def test_foreach_batch_crash_after_write_replays_identically(spark, input_dir, t
 
     assert rows(out) == rows(out_u)
     assert len(rows(out)) == 5  # replay rewrote, not appended
+
+
+def test_rollup_crash_between_stage_and_range_entry_converges(spark, input_dir, tmp_path):
+    """Kill the query after epoch 1 staged its rows, before its range
+    entry landed: the staged batch has no entry, so any reader of the
+    staged history must open it. The restart from the same checkpoint
+    restages the epoch, records its entry and ends with the rollup equal
+    to ``daily_rollup`` over every landed row."""
+    from calidad_del_aire_etl_spark.operators import incremental
+
+    staged, rollup, ckpt = (str(tmp_path / p) for p in ("staged", "rollup", "ckpt"))
+    _write_batch(spark, input_dir, ROWS0, 0)
+    _write_batch(spark, input_dir, ROWS1, 1)
+
+    def run():
+        return jobs.run_incremental_rollup(
+            jobs.read_events_stream(spark, input_dir), staged, rollup, ckpt
+        )
+
+    jobs._test_crash_hook = _crash_on("rollup:post_stage", 1)
+    _run_until_crash(run())
+    assert os.path.exists(f"{staged}/batch_id=1")
+    entries = sorted(os.listdir(f"{staged}/_ts_ranges"))
+    assert [e.split("_")[0] for e in entries] == ["0"]
+    # a range that overlaps neither batch still opens the one with no entry
+    assert [p.rsplit("/", 1)[1] for p in jobs._staged_overlapping(spark, staged, [(0, 1)])] == [
+        "batch_id=1"
+    ]
+
+    jobs._test_crash_hook = None
+    q2 = run()
+    try:
+        assert q2.awaitTermination(120)
+        assert q2.exception() is None
+    finally:
+        q2.stop()
+
+    assert [e.split("_")[0] for e in sorted(os.listdir(f"{staged}/_ts_ranges"))] == ["0", "1"]
+
+    def rows(df):
+        return sorted(
+            (str(r.date), r.user_id, r.n_events, r.sum_value, r.avg_value) for r in df.collect()
+        )
+
+    landed = spark.createDataFrame(ROWS0 + ROWS1, jobs.EVENTS_SCHEMA)
+    assert rows(spark.read.parquet(rollup)) == rows(incremental.daily_rollup(landed))

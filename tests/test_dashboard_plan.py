@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import csv
-import glob
 import os
 
 import pytest
@@ -150,16 +148,6 @@ def test_render_png_bytes_do_not_depend_on_shuffle_layout(spark, tmp_path):
             dashboard.render_png(spark, SF, str(out))
         pngs.add(out.read_bytes())
     assert len(pngs) == 1
-
-
-def test_export_csv_writes_all_panels(spark, tmp_path):
-    paths = dashboard.export_csv(spark, SF, str(tmp_path))
-    assert len(paths) == 6
-    for p in paths.values():
-        files = glob.glob(f"{p}/part-*.csv")
-        assert len(files) == 1  # chart-sized single CSV
-        with open(files[0]) as f:
-            assert len(list(csv.reader(f))) >= 2  # header + data
 
 
 def test_render_png_produces_real_png_without_matplotlib(spark, tmp_path):

@@ -1,30 +1,41 @@
 """streaming.jobs.incremental_rollup_sink called directly on batch
 DataFrames: three Spark jobs per micro-batch, a rollup scan bounded by
-the touched dates, exact results over a mixed INT96/TIMESTAMP_MICROS
-staged history, and a prompt return on an empty batch."""
+the touched dates, sorted zstd staging that a redelivered epoch
+reproduces, a per-tick cost that stays flat over a long staged history,
+exact results over a mixed INT96/TIMESTAMP_MICROS staged history, and a
+prompt return on an empty batch."""
 
 from __future__ import annotations
 
 import datetime as dt
 import glob
+import os
+import random
 import threading
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from calidad_del_aire_etl_spark import session
 from calidad_del_aire_etl_spark.operators import incremental
 from calidad_del_aire_etl_spark.streaming import jobs
 
 
-def _rows_read(spark, job_ids) -> int:
-    """Input records over every stage of the given jobs."""
+def _stage_sum(spark, job_ids, metric: str) -> int:
+    """``metric`` of the last attempt of every stage of the given jobs,
+    summed (``inputRecords``, ``inputBytes``, ``numTasks``)."""
     store = spark.sparkContext._jsc.sc().statusStore()
     total = 0
     for j in job_ids:
         stages = store.job(j).stageIds()
         for k in range(stages.size()):
-            total += store.lastStageAttempt(stages.apply(k)).inputRecords()
+            total += getattr(store.lastStageAttempt(stages.apply(k)), metric)()
     return total
+
+
+def _rows_read(spark, job_ids) -> int:
+    """Input records over every stage of the given jobs."""
+    return _stage_sum(spark, job_ids, "inputRecords")
 
 
 def _day_batches(spark, n_batches: int):
@@ -87,6 +98,117 @@ def test_rollup_sink_three_jobs_flat_scan_exact_and_replay_safe(
     # at-least-once redelivery of an epoch leaves the rollup unchanged
     sink(batches[2], 2)
     assert _rollup(spark, rollup) == first
+
+
+def test_rollup_sink_stages_sorted_zstd_and_replays_in_the_same_order(spark, tmp_path):
+    """Staged files are zstd-compressed with ``ts`` non-decreasing in
+    each file, rollup files are zstd-compressed, and an epoch redelivered
+    with its rows permuted stages the same rows in the same order: ties
+    on ``ts`` are broken by ``event_id``."""
+    staged, rollup = str(tmp_path / "staged"), str(tmp_path / "rollup")
+    sink = jobs.incremental_rollup_sink(spark, staged, rollup)
+    batches = _day_batches(spark, 2)
+    # a third batch whose rows share five ts values, shuffled
+    rows = [
+        (1000 + i, dt.datetime(2024, 1, 2, i % 5), i % 3, "view", float(i)) for i in range(40)
+    ]
+    random.Random(3).shuffle(rows)
+    batches.append(spark.createDataFrame(rows, jobs.EVENTS_SCHEMA).coalesce(1))
+    for b, df in enumerate(batches):
+        sink(df, b)
+
+    def codecs(files):
+        out = set()
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            for g in range(md.num_row_groups):
+                out |= {md.row_group(g).column(c).compression for c in range(md.num_columns)}
+        return out
+
+    staged_files = glob.glob(f"{staged}/batch_id=*/*.parquet")
+    assert len(staged_files) == 3
+    assert codecs(staged_files) == {"ZSTD"}
+    for f in staged_files:
+        ts = pq.read_table(f).column("ts").to_pylist()
+        assert ts == sorted(ts), f
+    assert codecs(glob.glob(f"{rollup}/date=*/*.parquet")) == {"ZSTD"}
+
+    def staged_rows(b):
+        return [
+            r
+            for f in sorted(glob.glob(f"{staged}/batch_id={b}/*.parquet"))
+            for r in pq.read_table(f).to_pylist()
+        ]
+
+    first = staged_rows(2)
+    assert [r["event_id"] for r in first] != [r[0] for r in rows]
+    random.Random(4).shuffle(rows)
+    sink(spark.createDataFrame(rows, jobs.EVENTS_SCHEMA).coalesce(1), 2)
+    assert staged_rows(2) == first
+
+
+_JAN_1 = int(dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc).timestamp())
+
+
+def _events(spark, n: int, event_id, epoch_s, user_id, value):
+    """An ``n``-row, one-partition events batch whose columns are
+    literals or expressions of ``id`` (no Python rows to ship):
+    ``epoch_s`` is the UTC instant in seconds."""
+    return spark.range(n, numPartitions=1).select(
+        F.lit(event_id).cast("bigint"),
+        F.timestamp_seconds(F.lit(epoch_s)),
+        F.lit(user_id).cast("bigint"),
+        F.lit("click"),
+        F.lit(value).cast("double"),
+    ).toDF(*jobs.EVENTS_SCHEMA.fieldNames())
+
+
+def _tiny_batch(spark, b: int):
+    """Batch b carries 4 rows of UTC day b of 2024 and, from b=1 on, one
+    late row of the day before."""
+    i = F.col("id")
+    eid = i + 5 * b
+    day = F.when(i < 4, b).otherwise(b - 1)
+    secs = F.lit(_JAN_1) + day * 86400 + ((5 * i + 3) % 24) * 3600 + 7 * i * 60
+    return _events(spark, 5 if b else 4, eid, secs, eid % 3, (eid % 13) + 0.25)
+
+
+def test_rollup_sink_cost_stays_flat_over_a_long_history(spark, tmp_path, jobs_started):
+    """44 tiny daily batches, the reference's 90-day shape in small, in a
+    session time zone of UTC+9. Every call runs three jobs, and from batch
+    33 on the tasks, input bytes and rows read per call stay flat: each
+    tick opens only the staged batches whose range entry overlaps its
+    dates, not every staged footer, and starts no parallel-listing job.
+    A batch whose range entry is missing is still read, and the overlap
+    test uses local midnights: a batch staged an hour before a UTC
+    midnight belongs to the next local date and is read for it."""
+    staged, rollup = str(tmp_path / "staged"), str(tmp_path / "rollup")
+    with session.scoped_conf(spark, "spark.sql.session.timeZone", "Asia/Tokyo"):
+        sink = jobs.incremental_rollup_sink(spark, staged, rollup)
+        landed = [_tiny_batch(spark, b) for b in range(44)]
+        # batch 20's entry goes missing; a late row then lands at the
+        # instant of batch 20's first row
+        landed.append(_events(spark, 1, 900, _JAN_1 + 20 * 86400 + 3 * 3600, 1, 7.5))
+        # 2024-03-01 23:00Z is 08:00 on 2024-03-02 in Tokyo, and so is
+        # the next batch's row at 2024-03-02 01:00Z
+        march_2 = _JAN_1 + 61 * 86400
+        landed.append(_events(spark, 1, 901, march_2 - 3600, 1, 1.5))
+        landed.append(_events(spark, 1, 902, march_2 + 3600, 1, 2.5))
+        n_jobs, tasks, in_bytes, rows_read = [], [], [], []
+        for b, df in enumerate(landed):
+            if b == 44:
+                (entry,) = glob.glob(f"{staged}/_ts_ranges/20_*")
+                os.rmdir(entry)
+            _, ids = jobs_started(lambda: sink(df, b))
+            n_jobs.append(len(ids))
+            tasks.append(_stage_sum(spark, ids, "numTasks"))
+            in_bytes.append(_stage_sum(spark, ids, "inputBytes"))
+            rows_read.append(_rows_read(spark, ids))
+        assert n_jobs == [3] * len(landed)
+        assert len(set(tasks[33:44])) == 1, tasks
+        assert max(in_bytes[33:44]) <= 1.1 * min(in_bytes[33:44]), in_bytes
+        assert len(set(rows_read[33:44])) == 1, rows_read
+        assert _rollup(spark, rollup) == _expected(landed)
 
 
 def _grid(spark, start_utc: str, hours: int):
