@@ -25,7 +25,7 @@ def daily_summary(
     """Daily per-group rollup: mean/max/min of the reading plus volume and
     rush-hour counts (reference dag:243-253, generalized to one metric
     column; the reference's multi-pollutant variant is
-    ``plans.air_quality.daily_pollutant_summary``)."""
+    ``plans.air_quality.daily_summary``)."""
     return (
         df.groupBy(
             F.to_date(F.col(ts_col)).alias("date"),

@@ -11,8 +11,9 @@ Contract: the incoming batch must carry ALL rows for each date it
 touches (the reprocess-the-partition pattern); late rows for an old date
 mean re-feeding that date's full slice, which is exactly how
 warehouse-style backfills work. The streaming sink
-(streaming/jobs.incremental_rollup_sink) meets it by feeding
-:func:`date_slice` of its staged history.
+(streaming/jobs.incremental_rollup_sink) meets it by feeding every
+staged row of the touched dates: its history is staged partitioned by
+the same date string, so those rows are whole ``date=`` directories.
 
 The write is the only action: the touched dates come back from an
 ``Observation`` riding on it (:func:`observe_dates`), not from a second
@@ -22,18 +23,22 @@ aggregation's map stage and the write.
 
 from __future__ import annotations
 
-import datetime as dt
-
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import scoped_conf
 
 
+def event_date() -> Column:
+    """``to_date(ts)`` as a string, in the session time zone: the
+    rollup's partition key, and the streaming sink's staging key."""
+    return F.to_date("ts").cast("string")
+
+
 def daily_rollup(events: DataFrame) -> DataFrame:
     """Per (date, user) daily aggregate, partition-keyed by date."""
     return (
-        events.withColumn("date", F.to_date("ts").cast("string"))
+        events.withColumn("date", event_date())
         .groupBy("date", "user_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
@@ -48,63 +53,12 @@ def write_daily_full(summary: DataFrame, path: str) -> None:
     summary.write.mode("overwrite").partitionBy("date").parquet(path)
 
 
-def observe_dates(
-    df: DataFrame, date: Column, **more: Column
-) -> tuple[DataFrame, Observation]:
-    """Attach the distinct values of the string ``date`` column, and
-    each aggregate in ``more`` under its keyword, to ``df``'s next
-    action. ``obs.get["dates"]`` is ready once that action (a write,
-    say) has finished; it costs no job of its own."""
+def observe_dates(df: DataFrame, date: Column) -> tuple[DataFrame, Observation]:
+    """Attach the distinct values of the string ``date`` column to
+    ``df``'s next action. ``obs.get["dates"]`` is ready once that action
+    (a write, say) has finished; it costs no job of its own."""
     obs = Observation()
-    aggs = [F.collect_set(date).alias("dates")] + [c.alias(k) for k, c in more.items()]
-    return df.observe(obs, *aggs), obs
-
-
-def _day_runs(dates: list[str]) -> list[list[dt.date]]:
-    """``dates`` as half-open runs of consecutive days, ``[first, day
-    after the last)``, in order."""
-    runs: list[list[dt.date]] = []
-    for d in sorted(dt.date.fromisoformat(d) for d in set(dates)):
-        if runs and d == runs[-1][1]:
-            runs[-1][1] = d + dt.timedelta(days=1)
-        else:
-            runs.append([d, d + dt.timedelta(days=1)])
-    return runs
-
-
-def date_slice(events: DataFrame, dates: list[str]) -> DataFrame:
-    """The rows of ``events`` whose ``to_date(ts)`` is in ``dates``.
-
-    Written as half-open ``ts`` ranges, ``[midnight of d, midnight of
-    the day after)`` in the session time zone, one per run of
-    consecutive dates, so parquet min/max statistics can skip row groups
-    outside them (``to_date(ts) IN (...)`` cannot be pushed down). The
-    bounds are string casts of the local midnights, which follow DST: a
-    23 h or 25 h day keeps exactly its own rows."""
-    cond = F.lit(False)
-    for lo, hi in _day_runs(dates):
-        cond = cond | (
-            (F.col("ts") >= F.lit(lo.isoformat()).cast("timestamp"))
-            & (F.col("ts") < F.lit(hi.isoformat()).cast("timestamp"))
-        )
-    return events.filter(cond)
-
-
-def date_slice_micros(spark: SparkSession, dates: list[str]) -> list[tuple[int, int]]:
-    """:func:`date_slice`'s ``ts`` ranges as half-open epoch-microsecond
-    pairs, computed driver-side with no job. The local midnights come
-    from the JVM's zone rules for the session time zone, the ones the
-    string-to-timestamp casts in :func:`date_slice` apply."""
-    jvm = spark._jvm
-    zone = jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
-        spark.conf.get("spark.sql.session.timeZone")
-    )
-
-    def micros(d: dt.date) -> int:
-        start = jvm.java.time.LocalDate.of(d.year, d.month, d.day).atStartOfDay(zone)
-        return start.toEpochSecond() * 1_000_000
-
-    return [(micros(lo), micros(hi)) for lo, hi in _day_runs(dates)]
+    return df.observe(obs, F.collect_set(date).alias("dates")), obs
 
 
 def incremental_daily_update(

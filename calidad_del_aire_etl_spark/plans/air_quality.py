@@ -66,8 +66,7 @@ def daily_summary(df: DataFrame) -> DataFrame:
 
 def load(df: DataFrame, daily: DataFrame, out_dir: str) -> None:
     """LOAD (dag:287-359): snappy parquet partitioned by month + CSV."""
-    writers.write_parquet(df.withColumn("month", F.col("month")), f"{out_dir}/hourly",
-                          partition_by=["month"])
+    writers.write_parquet(df, f"{out_dir}/hourly", partition_by=["month"])
     writers.write_csv(daily, f"{out_dir}/daily_csv")
     writers.write_parquet(daily, f"{out_dir}/daily")
 

@@ -124,126 +124,85 @@ def run_foreach_batch(stream_df: DataFrame, out_dir: str, checkpoint_dir: str):
     )
 
 
-# Range entries of the rollup sink's staged batches: one empty directory
-# per batch, ``<staged>/_ts_ranges/<batch_id>_<lo>_<hi>``, where lo and hi
-# are the batch's min and max ``ts`` in epoch microseconds, or ``null``.
-_TS_RANGES = "_ts_ranges"
-
-
-def _staged_overlapping(
-    spark: SparkSession, staged_dir: str, ranges: list[tuple[int, int]]
-) -> list[str]:
-    """The staged ``batch_id=N`` dirs, in batch order, that may hold rows
-    in one of the half-open epoch-microsecond ``ranges``: each batch with
-    a range entry that overlaps one, and each batch with no entry or a
-    NULL bound. A staged root reused under a new checkpoint can hold an
-    older run's entry for the same batch id, so any overlapping entry
-    keeps the batch. Two directory listings on the driver; no file is
-    read."""
-    path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = _hadoop_fs(spark, staged_dir)
-    entries: dict[str, list[tuple[str, str]]] = {}
-    ranges_dir = path(f"{staged_dir}/{_TS_RANGES}")
-    if fs.exists(ranges_dir):
-        for st in fs.listStatus(ranges_dir):
-            b, lo, hi = st.getPath().getName().split("_")
-            entries.setdefault(b, []).append((lo, hi))
-
-    def keep(b: str) -> bool:
-        if b not in entries:
-            return True
-        return any(
-            lo == "null"
-            or hi == "null"
-            or any(int(lo) < r_hi and int(hi) >= r_lo for r_lo, r_hi in ranges)
-            for lo, hi in entries[b]
-        )
-
-    batches = {}
-    for st in fs.listStatus(path(staged_dir)):
-        key, _, b = st.getPath().getName().partition("=")
-        if key == "batch_id" and keep(b):
-            batches[int(b)] = st.getPath().toString()
-    return [batches[b] for b in sorted(batches)]
-
-
 def incremental_rollup_sink(spark, staged_dir: str, rollup_dir: str):
     """#40f — streaming ≫ incremental-rollup unification: foreachBatch
     drives operators/incremental.py's dynamic-partition-overwrite daily
     rollup, epoch-replay-safe.
 
-    Per micro-batch, three Spark jobs:
+    The staged history is the batches' RAW rows under
+    ``date=<d>/batch_id=<epoch>/``, where ``d`` is the rollup's own key
+    (operators/incremental.event_date, in the session time zone); like
+    the rollup, a staged root must keep one session time zone. Per
+    micro-batch, three Spark jobs:
 
-    1. stage the batch's RAW rows under ``batch_id=<epoch>/`` with
-       overwrite — the idempotent-staging half (a replayed epoch
-       rewrites identical files, never appends). Each partition is
-       sorted by ``(ts, event_id)`` and written zstd-compressed, so a
-       redelivered epoch stages the same rows in the same order, with
-       no exchange. ``ts`` is staged as TIMESTAMP_MICROS: INT96 columns
-       carry no parquet statistics. An ``Observation`` on this write
-       yields the batch's touched dates and its min/max ``ts``, so
-       collecting them costs no job. After the data, the range is
-       recorded as an empty ``_ts_ranges/<batch_id>_<lo>_<hi>``
-       directory; a replayed epoch records the same name;
-    2. open only the staged batches whose range overlaps the touched
-       dates (:func:`_staged_overlapping`: one driver-side listing of
-       the range entries and one of the staged root), with the batch's
-       schema (no inference job), and keep the touched dates' rows as
-       ``ts`` ranges (operators/incremental.date_slice). The ``ts``
-       min/max statistics then skip every row group outside the touched
-       dates in the batches that are opened. A batch with no entry (a
-       crash between its data and its entry, or a history staged by an
-       older version) or with a NULL bound is always opened;
+    1. stage the batch with one partitioned write under dynamic
+       partition overwrite, so a replayed epoch rewrites exactly the
+       ``(date, epoch)`` directories it wrote and never appends. Rows
+       are sorted by ``(date, ts, event_id)`` within each partition, so
+       a redelivered epoch stages the same rows in the same order, with
+       no exchange; files are zstd, with ``ts`` as TIMESTAMP_MICROS. An
+       ``Observation`` on this write yields the touched dates, so
+       collecting them costs no job;
+    2. open the touched dates' ``date=<d>`` directories with the batch's
+       schema (no inference job), drop the partition columns, and
     3. recompute those dates' rollup partitions and
        dynamic-partition-overwrite only them
        (operators/incremental.incremental_daily_update; two jobs under
        AQE).
 
     Because the staged set — not the batch — is the aggregation input,
-    late rows for an old date just extend that date's staged slice and
-    the next recompute folds them in (no all-rows-per-date contract on
-    any single batch), and an epoch replay recomputes byte-identical
-    partition contents: exactly-once END-TO-END on an at-least-once
-    foreachBatch. Staged dirs written INT96 by earlier versions still
-    read correctly; they are just never skipped."""
+    late rows for an old date just add a ``batch_id`` directory under
+    that date and the next recompute folds them in (no all-rows-per-date
+    contract on any single batch), and an epoch replay recomputes
+    byte-identical partition contents: exactly-once END-TO-END on an
+    at-least-once foreachBatch. Rows with a NULL ``ts`` have no date:
+    they are staged but never read.
+
+    A ``staged_dir`` that holds top-level ``batch_id=N`` directories
+    from an older, unpartitioned layout raises ``ValueError``: those
+    rows would never be read again, so the rollup would silently lose
+    them."""
     from ..operators import incremental
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ts_us = F.unix_micros("ts")
-        observed, obs = incremental.observe_dates(
-            batch_df, F.to_date("ts").cast("string"), lo=F.min(ts_us), hi=F.max(ts_us)
+    legacy = _hadoop_fs(spark, staged_dir).globStatus(
+        spark._jvm.org.apache.hadoop.fs.Path(f"{staged_dir}/batch_id=*")
+    )
+    if legacy:
+        raise ValueError(
+            f"{legacy[0].getPath()} is staged in the old batch_id=N layout; "
+            "the rollup sink needs a staged root of date=<d>/batch_id=N dirs"
         )
-        # foreachBatch runs in a clone of the query's session: the conf
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        session = batch_df.sparkSession
+        date = incremental.event_date()
+        # observe before the sort: over an observation, the planned
+        # write swaps this sort for its own (date, batch_id) one
+        observed, obs = incremental.observe_dates(batch_df, date)
+        staging = (
+            observed.withColumn("date", date)
+            .withColumn("batch_id", F.lit(batch_id))
+            .sortWithinPartitions("date", "ts", "event_id")
+        )
+        # foreachBatch runs in a clone of the query's session: the confs
         # must go on the batch's own session to reach this write
         with scoped_conf(
-            batch_df.sparkSession,
-            "spark.sql.parquet.outputTimestampType",
-            "TIMESTAMP_MICROS",
-        ):
-            observed.sortWithinPartitions("ts", "event_id").write.mode(
-                "overwrite"
-            ).option("compression", "zstd").parquet(f"{staged_dir}/batch_id={batch_id}")
+            session, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+        ), scoped_conf(session, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+            staging.write.mode("overwrite").partitionBy("date", "batch_id").option(
+                "compression", "zstd"
+            ).parquet(staged_dir)
         _crash_point("rollup:post_stage", batch_id)
-        got = obs.get
-        lo, hi = ("null" if v is None else v for v in (got["lo"], got["hi"]))
-        _hadoop_fs(spark, staged_dir).mkdirs(
-            spark._jvm.org.apache.hadoop.fs.Path(
-                f"{staged_dir}/{_TS_RANGES}/{batch_id}_{lo}_{hi}"
-            )
-        )
-        dates = got["dates"]
+        dates = obs.get["dates"]
         if not dates:
             return
-        paths = _staged_overlapping(
-            spark, staged_dir, incremental.date_slice_micros(spark, dates)
-        )
         staged = (
             spark.read.schema(batch_df.schema)
             .option("basePath", staged_dir)
-            .parquet(*paths)
+            .parquet(*[f"{staged_dir}/date={d}" for d in dates])
         )
         incremental.incremental_daily_update(
-            spark, incremental.date_slice(staged, dates).drop("batch_id"), rollup_dir
+            spark, staged.drop("date", "batch_id"), rollup_dir
         )
 
     return write_batch

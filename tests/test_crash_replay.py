@@ -15,7 +15,6 @@ converges to the state an UNINTERRUPTED run produces on the same input.
 from __future__ import annotations
 
 import datetime as dt
-import glob
 import os
 import shutil
 import tempfile
@@ -37,15 +36,6 @@ def input_dir(spark):
 def _clear_hook():
     yield
     jobs._test_crash_hook = None
-
-
-def _write_batch(spark, d, rows, idx, schema=None):
-    tmp = f"{d}/.staging{idx}"
-    df = spark.createDataFrame(rows, schema or jobs.EVENTS_SCHEMA)
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = glob.glob(f"{tmp}/part-*.parquet")[0]
-    os.replace(part, f"{d}/batch{idx}.parquet")
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _t(minute):
@@ -89,7 +79,9 @@ ROWS1 = [
 
 
 @pytest.mark.slow
-def test_cdc_merge_crash_between_commit_and_marker_converges(spark, input_dir, tmp_path):
+def test_cdc_merge_crash_between_commit_and_marker_converges(
+    spark, input_dir, tmp_path, land_batch
+):
     """Kill the query after epoch 1's MERGE committed but before its
     marker landed; the restart re-merges the same compacted batch —
     content-idempotent (one redundant snapshot at most), ending in the
@@ -97,8 +89,8 @@ def test_cdc_merge_crash_between_commit_and_marker_converges(spark, input_dir, t
     from calidad_del_aire_etl_spark.sinks import writers
 
     table, ckpt = str(tmp_path / "cdc"), str(tmp_path / "ckpt")
-    _write_batch(spark, input_dir, ROWS0, 0)
-    _write_batch(spark, input_dir, ROWS1, 1)
+    land_batch(input_dir, ROWS0, 0)
+    land_batch(input_dir, ROWS1, 1)
 
     jobs._test_crash_hook = _crash_on("cdc_merge:pre_marker", 1)
     q = jobs.run_cdc_merge(jobs.read_events_stream(spark, input_dir), table, ["user_id"], ckpt)
@@ -136,7 +128,9 @@ def test_cdc_merge_crash_between_commit_and_marker_converges(spark, input_dir, t
 
 
 @pytest.mark.slow
-def test_cdc_merge_crash_on_bootstrap_epoch_converges(spark, input_dir, tmp_path):
+def test_cdc_merge_crash_on_bootstrap_epoch_converges(
+    spark, input_dir, tmp_path, land_batch
+):
     """Crash on epoch 0 — the empty-table bootstrap commit — after its
     merge landed v0 but before its marker. The restart redelivers epoch
     0 against a now NON-empty table (the bootstrap became an ordinary
@@ -144,8 +138,8 @@ def test_cdc_merge_crash_on_bootstrap_epoch_converges(spark, input_dir, tmp_path
     from calidad_del_aire_etl_spark.sinks import writers
 
     table, ckpt = str(tmp_path / "cdc"), str(tmp_path / "ckpt")
-    _write_batch(spark, input_dir, ROWS0, 0)
-    _write_batch(spark, input_dir, ROWS1, 1)
+    land_batch(input_dir, ROWS0, 0)
+    land_batch(input_dir, ROWS1, 1)
 
     jobs._test_crash_hook = _crash_on("cdc_merge:pre_marker", 0)
     q = jobs.run_cdc_merge(jobs.read_events_stream(spark, input_dir), table, ["user_id"], ckpt)
@@ -165,7 +159,9 @@ def test_cdc_merge_crash_on_bootstrap_epoch_converges(spark, input_dir, tmp_path
     assert os.path.exists(f"{table}/_commits/batch-1")
 
 
-def test_minhash_dedup_crash_between_bands_and_marker_converges(spark, input_dir, tmp_path):
+def test_minhash_dedup_crash_between_bands_and_marker_converges(
+    spark, input_dir, tmp_path, land_batch
+):
     """Kill the query after epoch 1's band partition landed but before
     its marker; the restarted epoch must not probe its own partial
     bands (self-match) and must end with decisions and band store
@@ -175,8 +171,8 @@ def test_minhash_dedup_crash_between_bands_and_marker_converges(spark, input_dir
     novel = "completely different text about databases and distributed query engines"
     docs0 = [(1, base), (2, base + " tail"), (3, novel)]
     docs1 = [(4, base + " coda"), (5, "unrelated fresh content about sailing ships")]
-    _write_batch(spark, input_dir, docs0, 0, schema=jobs.DOCS_SCHEMA)
-    _write_batch(spark, input_dir, docs1, 1, schema=jobs.DOCS_SCHEMA)
+    land_batch(input_dir, docs0, 0, jobs.DOCS_SCHEMA)
+    land_batch(input_dir, docs1, 1, jobs.DOCS_SCHEMA)
 
     jobs._test_crash_hook = _crash_on("minhash:pre_marker", 1)
     q = jobs.run_minhash_dedup(jobs.read_docs_stream(spark, input_dir), store, ckpt)
@@ -221,13 +217,15 @@ def test_minhash_dedup_crash_between_bands_and_marker_converges(spark, input_dir
     assert os.path.exists(f"{store}/_epochs/batch-1")
 
 
-def test_foreach_batch_crash_after_write_replays_identically(spark, input_dir, tmp_path):
+def test_foreach_batch_crash_after_write_replays_identically(
+    spark, input_dir, tmp_path, land_batch
+):
     """Kill the query after epoch 1's partition write, before the epoch
     commits; restart rewrites the identical batch_id=1 partition —
     rows equal to an uninterrupted run, no duplicates."""
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    _write_batch(spark, input_dir, ROWS0, 0)
-    _write_batch(spark, input_dir, ROWS1, 1)
+    land_batch(input_dir, ROWS0, 0)
+    land_batch(input_dir, ROWS1, 1)
 
     jobs._test_crash_hook = _crash_on("foreach_batch:post_write", 1)
     q = jobs.run_foreach_batch(jobs.read_events_stream(spark, input_dir), out, ckpt)
@@ -258,17 +256,18 @@ def test_foreach_batch_crash_after_write_replays_identically(spark, input_dir, t
     assert len(rows(out)) == 5  # replay rewrote, not appended
 
 
-def test_rollup_crash_between_stage_and_range_entry_converges(spark, input_dir, tmp_path):
-    """Kill the query after epoch 1 staged its rows, before its range
-    entry landed: the staged batch has no entry, so any reader of the
-    staged history must open it. The restart from the same checkpoint
-    restages the epoch, records its entry and ends with the rollup equal
-    to ``daily_rollup`` over every landed row."""
+def test_rollup_crash_between_stage_and_rollup_update_converges(
+    spark, input_dir, tmp_path, land_batch
+):
+    """Kill the query after epoch 1 staged its rows, before the rollup
+    recompute that reads them. The restart from the same checkpoint
+    restages the epoch over its own ``(date, batch_id)`` dirs and ends
+    with the rollup equal to ``daily_rollup`` over every landed row."""
     from calidad_del_aire_etl_spark.operators import incremental
 
     staged, rollup, ckpt = (str(tmp_path / p) for p in ("staged", "rollup", "ckpt"))
-    _write_batch(spark, input_dir, ROWS0, 0)
-    _write_batch(spark, input_dir, ROWS1, 1)
+    land_batch(input_dir, ROWS0, 0)
+    land_batch(input_dir, ROWS1, 1)
 
     def run():
         return jobs.run_incremental_rollup(
@@ -277,13 +276,7 @@ def test_rollup_crash_between_stage_and_range_entry_converges(spark, input_dir, 
 
     jobs._test_crash_hook = _crash_on("rollup:post_stage", 1)
     _run_until_crash(run())
-    assert os.path.exists(f"{staged}/batch_id=1")
-    entries = sorted(os.listdir(f"{staged}/_ts_ranges"))
-    assert [e.split("_")[0] for e in entries] == ["0"]
-    # a range that overlaps neither batch still opens the one with no entry
-    assert [p.rsplit("/", 1)[1] for p in jobs._staged_overlapping(spark, staged, [(0, 1)])] == [
-        "batch_id=1"
-    ]
+    assert os.path.exists(f"{staged}/date=2024-01-01/batch_id=1")
 
     jobs._test_crash_hook = None
     q2 = run()
@@ -292,8 +285,6 @@ def test_rollup_crash_between_stage_and_range_entry_converges(spark, input_dir, 
         assert q2.exception() is None
     finally:
         q2.stop()
-
-    assert [e.split("_")[0] for e in sorted(os.listdir(f"{staged}/_ts_ranges"))] == ["0", "1"]
 
     def rows(df):
         return sorted(

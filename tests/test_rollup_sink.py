@@ -2,8 +2,9 @@
 DataFrames: three Spark jobs per micro-batch, a rollup scan bounded by
 the touched dates, sorted zstd staging that a redelivered epoch
 reproduces, a per-tick cost that stays flat over a long staged history,
-exact results over a mixed INT96/TIMESTAMP_MICROS staged history, and a
-prompt return on an empty batch."""
+dates that follow the session time zone across DST, the refusal of a
+staged root in the old ``batch_id=N`` layout, and a prompt return on an
+empty batch."""
 
 from __future__ import annotations
 
@@ -11,9 +12,12 @@ import datetime as dt
 import glob
 import os
 import random
+import re
 import threading
 
+import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from calidad_del_aire_etl_spark import session
@@ -38,19 +42,32 @@ def _rows_read(spark, job_ids) -> int:
     return _stage_sum(spark, job_ids, "inputRecords")
 
 
+_JAN_1 = int(dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc).timestamp())
+
+
+def _events(spark, n: int, event_id, epoch_s, user_id, value):
+    """An ``n``-row, one-partition events batch whose columns are
+    literals or expressions of ``id`` (no Python rows to ship):
+    ``epoch_s`` is the UTC instant in seconds."""
+    return spark.range(n, numPartitions=1).select(
+        F.lit(event_id).cast("bigint"),
+        F.timestamp_seconds(F.lit(epoch_s)),
+        F.lit(user_id).cast("bigint"),
+        F.lit("click"),
+        F.lit(value).cast("double"),
+    ).toDF(*jobs.EVENTS_SCHEMA.fieldNames())
+
+
 def _day_batches(spark, n_batches: int):
     """Batch b carries 100 rows of 2024-01-(b+1) plus, from b=1 on, 10
     late rows of the day before. Each batch is one partition, so it
-    stages as one file whose ts statistics span the batch's days."""
-    batches, eid = [], 0
+    stages one file per date it touches."""
+    i, batches = F.col("id"), []
     for b in range(n_batches):
-        rows = []
-        for i in range(110 if b else 100):
-            eid += 1
-            day = b + 1 if i < 100 else b
-            ts = dt.datetime(2024, 1, day, i % 24, (7 * i) % 60)
-            rows.append((eid, ts, eid % 7, "click", float(eid % 13) + 0.25))
-        batches.append(spark.createDataFrame(rows, jobs.EVENTS_SCHEMA).coalesce(1))
+        eid = i + 1 + (100 + 110 * (b - 1) if b else 0)
+        day = F.when(i < 100, b).otherwise(b - 1)
+        secs = F.lit(_JAN_1) + day * 86400 + (i % 24) * 3600 + ((7 * i) % 60) * 60
+        batches.append(_events(spark, 110 if b else 100, eid, secs, eid % 7, (eid % 13) + 0.25))
     return batches
 
 
@@ -84,13 +101,15 @@ def test_rollup_sink_three_jobs_flat_scan_exact_and_replay_safe(
     for b, df in enumerate(batches):
         _, ids = jobs_started(lambda: sink(df, b))
         n_jobs.append(len(ids))
-        reads.append(_rows_read(spark, ids))
+        # the jobs after the staged write, whose own input is the batch
+        reads.append(_rows_read(spark, sorted(ids)[1:]))
     # staged write + the rollup write's two AQE jobs: no date collect,
     # no schema inference, no closing rescan
     assert n_jobs == [3, 3, 3, 3]
-    # each scan reads the touched dates' staged files only: the previous
-    # batch (its day's rows) and this one — not the whole history
-    assert reads == [100, 210, 220, 220]
+    # each scan reads the touched dates' staged rows only: the previous
+    # day's 100 plus its 10 late rows, and this day's 100 — not the whole
+    # history, and no other date's rows
+    assert reads == [100, 210, 210, 210]
 
     first = _rollup(spark, rollup)
     assert first == _expected(batches)
@@ -98,6 +117,16 @@ def test_rollup_sink_three_jobs_flat_scan_exact_and_replay_safe(
     # at-least-once redelivery of an epoch leaves the rollup unchanged
     sink(batches[2], 2)
     assert _rollup(spark, rollup) == first
+
+
+def _staged_rows(pattern: str) -> list[dict]:
+    """The rows of the staged files in the dirs ``pattern`` matches, file
+    by file in path order."""
+    return [
+        r
+        for f in sorted(glob.glob(f"{pattern}/*.parquet"))
+        for r in pq.ParquetFile(f).read().to_pylist()
+    ]
 
 
 def test_rollup_sink_stages_sorted_zstd_and_replays_in_the_same_order(spark, tmp_path):
@@ -125,42 +154,20 @@ def test_rollup_sink_stages_sorted_zstd_and_replays_in_the_same_order(spark, tmp
                 out |= {md.row_group(g).column(c).compression for c in range(md.num_columns)}
         return out
 
-    staged_files = glob.glob(f"{staged}/batch_id=*/*.parquet")
-    assert len(staged_files) == 3
+    # batch 1's late rows stage under 2024-01-01, the rest under their day
+    staged_files = glob.glob(f"{staged}/date=*/batch_id=*/*.parquet")
+    assert len(staged_files) == 4
     assert codecs(staged_files) == {"ZSTD"}
     for f in staged_files:
-        ts = pq.read_table(f).column("ts").to_pylist()
+        ts = pq.ParquetFile(f).read().column("ts").to_pylist()
         assert ts == sorted(ts), f
     assert codecs(glob.glob(f"{rollup}/date=*/*.parquet")) == {"ZSTD"}
 
-    def staged_rows(b):
-        return [
-            r
-            for f in sorted(glob.glob(f"{staged}/batch_id={b}/*.parquet"))
-            for r in pq.read_table(f).to_pylist()
-        ]
-
-    first = staged_rows(2)
+    first = _staged_rows(f"{staged}/date=*/batch_id=2")
     assert [r["event_id"] for r in first] != [r[0] for r in rows]
     random.Random(4).shuffle(rows)
     sink(spark.createDataFrame(rows, jobs.EVENTS_SCHEMA).coalesce(1), 2)
-    assert staged_rows(2) == first
-
-
-_JAN_1 = int(dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc).timestamp())
-
-
-def _events(spark, n: int, event_id, epoch_s, user_id, value):
-    """An ``n``-row, one-partition events batch whose columns are
-    literals or expressions of ``id`` (no Python rows to ship):
-    ``epoch_s`` is the UTC instant in seconds."""
-    return spark.range(n, numPartitions=1).select(
-        F.lit(event_id).cast("bigint"),
-        F.timestamp_seconds(F.lit(epoch_s)),
-        F.lit(user_id).cast("bigint"),
-        F.lit("click"),
-        F.lit(value).cast("double"),
-    ).toDF(*jobs.EVENTS_SCHEMA.fieldNames())
+    assert _staged_rows(f"{staged}/date=*/batch_id=2") == first
 
 
 def _tiny_batch(spark, b: int):
@@ -177,17 +184,16 @@ def test_rollup_sink_cost_stays_flat_over_a_long_history(spark, tmp_path, jobs_s
     """44 tiny daily batches, the reference's 90-day shape in small, in a
     session time zone of UTC+9. Every call runs three jobs, and from batch
     33 on the tasks, input bytes and rows read per call stay flat: each
-    tick opens only the staged batches whose range entry overlaps its
-    dates, not every staged footer, and starts no parallel-listing job.
-    A batch whose range entry is missing is still read, and the overlap
-    test uses local midnights: a batch staged an hour before a UTC
-    midnight belongs to the next local date and is read for it."""
+    tick opens only its dates' ``date=`` dirs, not every staged footer,
+    and starts no parallel-listing job. A late row for an old date is
+    folded into that date, and dates are local: a row an hour before a
+    UTC midnight belongs to the next local date and is staged and read
+    with it."""
     staged, rollup = str(tmp_path / "staged"), str(tmp_path / "rollup")
     with session.scoped_conf(spark, "spark.sql.session.timeZone", "Asia/Tokyo"):
         sink = jobs.incremental_rollup_sink(spark, staged, rollup)
         landed = [_tiny_batch(spark, b) for b in range(44)]
-        # batch 20's entry goes missing; a late row then lands at the
-        # instant of batch 20's first row
+        # a late row lands at the instant of batch 20's first row
         landed.append(_events(spark, 1, 900, _JAN_1 + 20 * 86400 + 3 * 3600, 1, 7.5))
         # 2024-03-01 23:00Z is 08:00 on 2024-03-02 in Tokyo, and so is
         # the next batch's row at 2024-03-02 01:00Z
@@ -196,9 +202,6 @@ def test_rollup_sink_cost_stays_flat_over_a_long_history(spark, tmp_path, jobs_s
         landed.append(_events(spark, 1, 902, march_2 + 3600, 1, 2.5))
         n_jobs, tasks, in_bytes, rows_read = [], [], [], []
         for b, df in enumerate(landed):
-            if b == 44:
-                (entry,) = glob.glob(f"{staged}/_ts_ranges/20_*")
-                os.rmdir(entry)
             _, ids = jobs_started(lambda: sink(df, b))
             n_jobs.append(len(ids))
             tasks.append(_stage_sum(spark, ids, "numTasks"))
@@ -208,90 +211,51 @@ def test_rollup_sink_cost_stays_flat_over_a_long_history(spark, tmp_path, jobs_s
         assert len(set(tasks[33:44])) == 1, tasks
         assert max(in_bytes[33:44]) <= 1.1 * min(in_bytes[33:44]), in_bytes
         assert len(set(rows_read[33:44])) == 1, rows_read
+        assert sorted(os.listdir(f"{staged}/date=2024-03-02")) == ["batch_id=45", "batch_id=46"]
         assert _rollup(spark, rollup) == _expected(landed)
 
 
-def _grid(spark, start_utc: str, hours: int):
-    """One row every 30 minutes from ``start_utc``, plus a null ts."""
-    t0 = dt.datetime.fromisoformat(start_utc).replace(tzinfo=dt.timezone.utc).timestamp()
-    grid = spark.range(hours * 2).select(
-        "id", F.timestamp_seconds(F.lit(int(t0)) + F.col("id") * 1800).alias("ts")
-    )
-    null = spark.range(1).select(
-        F.lit(-1).cast("bigint").alias("id"), F.lit(None).cast("timestamp").alias("ts")
-    )
-    return grid.unionByName(null)
+def _half_hours(spark, first_id: int, start_utc: str, hours: int):
+    """One row every 30 minutes for ``hours`` hours from ``start_utc``."""
+    t0 = int(dt.datetime.fromisoformat(start_utc).replace(tzinfo=dt.timezone.utc).timestamp())
+    eid = F.col("id") + first_id
+    secs = F.lit(t0) + F.col("id") * 1800
+    return _events(spark, hours * 2, eid, secs, eid % 3, (eid % 13) + 0.25)
 
 
-def test_date_slice_matches_to_date_across_dst(spark):
-    """The ts ranges keep exactly the rows ``to_date(ts) IN dates`` keeps
-    on the 23 h day (2024-03-10) and the 25 h day (2024-11-03) in New
-    York. An upper bound of exactly 24 h after the lower one would take
-    the next day's first hour after the 23 h day and drop the 25 h
-    day's last hour, e.g. its 23:30 local row."""
-    prev = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        ev = _grid(spark, "2024-03-08 00:00:00", 24 * 5).unionByName(
-            _grid(spark, "2024-11-01 00:00:00", 24 * 5)
-        )
-        local = F.date_format("ts", "yyyy-MM-dd HH:mm")
-        assert ev.filter(local == "2024-11-03 23:30").count() == 1
-        for dates in (
-            ["2024-03-10"],
-            ["2024-11-03"],
-            ["2024-03-09", "2024-03-10"],
-            ["2024-11-02", "2024-11-04"],
-            ["2024-03-10", "2024-11-03", "2024-11-04"],
-        ):
-            want = sorted(
-                r.id for r in ev.filter(F.to_date("ts").cast("string").isin(dates)).collect()
-            )
-            got = sorted(r.id for r in incremental.date_slice(ev, dates).collect())
-            assert got == want, dates
-        by_day = {
-            d: incremental.date_slice(ev, [d]).count() for d in ("2024-03-10", "2024-11-03")
-        }
-        assert by_day == {"2024-03-10": 46, "2024-11-03": 50}
-        late = incremental.date_slice(ev, ["2024-11-03"]).filter(local == "2024-11-03 23:30")
-        assert late.count() == 1
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev)
-
-
-def _ts_physical(path: str) -> set[str]:
-    out = set()
-    for f in glob.glob(f"{path}/*.parquet"):
-        col = pq.ParquetFile(f).schema.column(1)
-        assert col.name == "ts"
-        out.add(col.physical_type)
-    return out
-
-
-def test_rollup_sink_over_mixed_int96_history(spark, tmp_path):
-    """Staged dirs written the old way (INT96 ts, no statistics) next to
-    new TIMESTAMP_MICROS ones give the exact rollup: the old files are
-    read in full, just never skipped."""
+def test_rollup_sink_dates_follow_the_session_time_zone_across_dst(spark, tmp_path):
+    """In New York the batches cover the 23 h day 2024-03-10 and the
+    25 h day 2024-11-03, whose rows come in two batches. Each day is
+    staged under its own local date, with 46 and 50 half-hour rows: the
+    25 h day keeps its 23:30 local row (04:30 UTC the next day), and the
+    rollup equals ``daily_rollup`` over the landed rows."""
     staged, rollup = str(tmp_path / "staged"), str(tmp_path / "rollup")
-    batches = _day_batches(spark, 4)
-    for b in (0, 1):
-        batches[b].write.mode("overwrite").parquet(f"{staged}/batch_id={b}")
-    incremental.write_daily_full(
-        incremental.daily_rollup(batches[0].unionByName(batches[1])), rollup
-    )
-    sink = jobs.incremental_rollup_sink(spark, staged, rollup)
-    for b in (2, 3):
-        sink(batches[b], b)
-    assert _ts_physical(f"{staged}/batch_id=0") == {"INT96"}
-    assert _ts_physical(f"{staged}/batch_id=3") == {"INT64"}
-    assert _rollup(spark, rollup) == _expected(batches)
-    # a late row for day 1 lands in a new batch: the INT96 day-1 rows
-    # are folded into that date's recompute
-    late = spark.createDataFrame(
-        [(999, dt.datetime(2024, 1, 1, 12, 0), 3, "click", 4.5)], jobs.EVENTS_SCHEMA
-    )
-    sink(late, 4)
-    assert _rollup(spark, rollup) == _expected(batches + [late])
+    with session.scoped_conf(spark, "spark.sql.session.timeZone", "America/New_York"):
+        sink = jobs.incremental_rollup_sink(spark, staged, rollup)
+        landed = [
+            _half_hours(spark, 0, "2024-03-08 00:00:00", 24 * 5),
+            _half_hours(spark, 1000, "2024-11-01 00:00:00", 24 * 3),
+            _half_hours(spark, 2000, "2024-11-04 00:00:00", 24 * 2),
+        ]
+        for b, df in enumerate(landed):
+            sink(df, b)
+        assert _rollup(spark, rollup) == _expected(landed)
+    assert len(_staged_rows(f"{staged}/date=2024-03-10/batch_id=*")) == 46
+    nov_3 = _staged_rows(f"{staged}/date=2024-11-03/batch_id=*")
+    assert len(nov_3) == 50
+    late = dt.datetime(2024, 11, 4, 4, 30, tzinfo=dt.timezone.utc)
+    assert late in [r["ts"] for r in nov_3]
+
+
+def test_rollup_sink_refuses_a_staged_root_in_the_old_layout(spark, tmp_path):
+    """A staged root that holds a top-level ``batch_id=N`` dir, the
+    layout before the history was partitioned by date, is refused when
+    the sink is built: its rows would never be read again."""
+    staged = tmp_path / "staged"
+    (staged / "batch_id=0").mkdir(parents=True)
+    pq.write_table(pa.table({"event_id": [1]}), staged / "batch_id=0" / "part-0.parquet")
+    with pytest.raises(ValueError, match=re.escape(f"{staged}/batch_id=0")):
+        jobs.incremental_rollup_sink(spark, str(staged), str(tmp_path / "rollup"))
 
 
 def test_rollup_sink_returns_promptly_on_empty_batch(spark, tmp_path):

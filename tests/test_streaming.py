@@ -17,35 +17,21 @@ def input_dir(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _write_batch(spark, d, rows, idx):
-    # land a single flat parquet file in the watched dir (the file source
-    # does not recurse into non-partition subdirectories)
-    import glob
-    import os
-
-    tmp = f"{d}/.staging{idx}"
-    df = spark.createDataFrame(rows, jobs.EVENTS_SCHEMA)
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = glob.glob(f"{tmp}/part-*.parquet")[0]
-    os.replace(part, f"{d}/batch{idx}.parquet")
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
 def _t(minute):
     return dt.datetime(2024, 1, 1, 10, minute)
 
 
-def test_foreach_batch_sink_is_idempotent(spark, input_dir, tmp_path):
+def test_foreach_batch_sink_is_idempotent(spark, input_dir, tmp_path, land_batch):
     """Replaying a batch id overwrites its partition instead of
     duplicating rows."""
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    _write_batch(spark, input_dir, [(1, _t(0), 7, "click", 1.5)], 0)
+    land_batch(input_dir, [(1, _t(0), 7, "click", 1.5)], 0)
     stream = jobs.read_events_stream(spark, input_dir)
     q = jobs.run_foreach_batch(stream, out, ckpt)
     try:
         q.processAllAvailable()
-        _write_batch(spark, input_dir, [(2, _t(1), 8, "view", 2.5)], 1)
+        land_batch(input_dir, [(2, _t(1), 8, "view", 2.5)], 1)
         q.processAllAvailable()
     finally:
         q.stop()
@@ -61,7 +47,7 @@ def test_foreach_batch_sink_is_idempotent(spark, input_dir, tmp_path):
 
 @pytest.mark.slow
 def test_incremental_rollup_stream_replay_leaves_partitions_unchanged(
-    spark, input_dir, tmp_path
+    spark, input_dir, tmp_path, land_batch
 ):
     """Streaming ≫ incremental unification: the foreachBatch sink drives
     the dynamic-partition-overwrite rollup; a replayed epoch must leave
@@ -78,8 +64,7 @@ def test_incremental_rollup_stream_replay_leaves_partitions_unchanged(
 
     d1 = dt.datetime(2024, 1, 1, 10, 0)
     d2 = dt.datetime(2024, 1, 2, 11, 0)
-    _write_batch(
-        spark,
+    land_batch(
         input_dir,
         [(1, d1, 1, "click", 10.0), (2, d1, 1, "click", 5.0), (3, d2, 2, "view", 7.0)],
         0,
@@ -104,9 +89,7 @@ def test_incremental_rollup_stream_replay_leaves_partitions_unchanged(
     # replay epoch 0: re-deliver the same batch to the sink directly
     # (materialized first — a real replayed batch comes from the
     # checkpointed source, not from the staged files being overwritten)
-    replay_rows = (
-        spark.read.option("basePath", staged).parquet(staged).drop("batch_id").collect()
-    )
+    replay_rows = spark.read.parquet(staged).drop("date", "batch_id").collect()
     incremental_rollup_sink(spark, staged, rollup)(
         spark.createDataFrame(replay_rows, jobs.EVENTS_SCHEMA), 0
     )
@@ -114,7 +97,7 @@ def test_incremental_rollup_stream_replay_leaves_partitions_unchanged(
 
     # late row for 2024-01-01 arrives in a later batch: its partition is
     # recomputed from the full staged history, the untouched date stays
-    _write_batch(spark, input_dir, [(4, d1, 1, "click", 2.0)], 1)
+    land_batch(input_dir, [(4, d1, 1, "click", 2.0)], 1)
     q2 = run_incremental_rollup(
         jobs.read_events_stream(spark, input_dir), staged, rollup, ckpt
     )
@@ -125,7 +108,7 @@ def test_incremental_rollup_stream_replay_leaves_partitions_unchanged(
     ]
 
 
-def test_streaming_cdc_merge_versioned(spark, input_dir, tmp_path):
+def test_streaming_cdc_merge_versioned(spark, input_dir, tmp_path, land_batch):
     """Change stream MERGEs into the versioned table: latest change per
     key wins within a batch, cross-batch upserts land as snapshots, and
     a replayed epoch is skipped via the commit marker."""
@@ -134,7 +117,7 @@ def test_streaming_cdc_merge_versioned(spark, input_dir, tmp_path):
     table = str(tmp_path / "cdc_table")
     ckpt = str(tmp_path / "ckpt")
     # batch 0: users 1,2 — user 1 has two changes, later ts wins
-    _write_batch(spark, input_dir, [
+    land_batch(input_dir, [
         (1, _t(0), 1, "click", 10.0),
         (2, _t(5), 1, "click", 11.0),
         (3, _t(1), 2, "view", 20.0),
@@ -146,7 +129,7 @@ def test_streaming_cdc_merge_versioned(spark, input_dir, tmp_path):
         got = {r["user_id"]: r["value"]
                for r in writers.read_versioned_parquet(spark, table).collect()}
         assert got == {1: 11.0, 2: 20.0}
-        _write_batch(spark, input_dir, [
+        land_batch(input_dir, [
             (4, _t(9), 1, "click", 12.0),
             (5, _t(9), 3, "signup", 30.0),
         ], 1)
@@ -166,11 +149,10 @@ def test_streaming_cdc_merge_versioned(spark, input_dir, tmp_path):
     assert got[1] == 12.0
 
 
-def test_streaming_minhash_dedup_band_store(spark, input_dir, tmp_path):
+def test_streaming_minhash_dedup_band_store(spark, input_dir, tmp_path, land_batch):
     """#40q: intra-batch near-dups drop first, later epochs' dups are
     caught against the PERSISTED band store (the corpus is never
     re-signed), and a replayed epoch is a no-op."""
-    import glob
     import os
 
     store = str(tmp_path / "mh_store")
@@ -179,19 +161,12 @@ def test_streaming_minhash_dedup_band_store(spark, input_dir, tmp_path):
     novel1 = "completely different text about spark physical planning details"
     novel2 = "yet another unrelated document on parquet row group statistics"
 
-    def _write_docs(rows, idx):
-        tmp = f"{input_dir}/.dstage{idx}"
-        df = spark.createDataFrame(rows, jobs.DOCS_SCHEMA)
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        os.replace(part, f"{input_dir}/docs{idx}.parquet")
-
-    _write_docs([(1, base), (2, base + " tail"), (3, novel1)], 0)
+    land_batch(input_dir, [(1, base), (2, base + " tail"), (3, novel1)], 0, jobs.DOCS_SCHEMA)
     stream = jobs.read_docs_stream(spark, input_dir)
     q = jobs.run_minhash_dedup(stream, store, ckpt)
     try:
         q.processAllAvailable()
-        _write_docs([(4, base + " coda"), (5, novel2)], 1)
+        land_batch(input_dir, [(4, base + " coda"), (5, novel2)], 1, jobs.DOCS_SCHEMA)
         q.processAllAvailable()
     finally:
         q.stop()
@@ -250,13 +225,12 @@ def test_streaming_minhash_dedup_band_store(spark, input_dir, tmp_path):
 
 
 @pytest.mark.slow
-def test_streaming_ann_index_store(spark, input_dir, tmp_path):
+def test_streaming_ann_index_store(spark, input_dir, tmp_path, land_batch):
     """#40r: epoch 0 bootstraps the graph from its own batch; later
     epochs insert against the PERSISTED index (the standing corpus is
     never re-scored); the view is last-writer-wins per node; search
     over the store finds planted neighbors; a replayed epoch is a
     no-op."""
-    import glob
     import os
 
     import numpy as np
@@ -276,18 +250,11 @@ def test_streaming_ann_index_store(spark, input_dir, tmp_path):
     b = rng.randn(8)
     batch0 = mk(a, 0.05, 6, 0) + mk(b, 0.05, 6, 100)
 
-    def _write_vecs(rows, idx):
-        tmp = f"{input_dir}/.vstage{idx}"
-        df = spark.createDataFrame(rows, jobs.VECS_SCHEMA)
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        os.replace(part, f"{input_dir}/vecs{idx}.parquet")
-
-    _write_vecs(batch0, 0)
+    land_batch(input_dir, batch0, 0, jobs.VECS_SCHEMA)
     q = jobs.run_ann_index(jobs.read_vecs_stream(spark, input_dir), store, ckpt)
     try:
         q.processAllAvailable()
-        _write_vecs(mk(a, 0.05, 3, 200), 1)  # arrivals near cluster a
+        land_batch(input_dir, mk(a, 0.05, 3, 200), 1, jobs.VECS_SCHEMA)  # near cluster a
         q.processAllAvailable()
     finally:
         q.stop()

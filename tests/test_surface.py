@@ -1,9 +1,9 @@
 """The I/O layers hold no entry point that only tests reach.
 
 Walks the AST of ``sources/``, ``sinks/`` and ``streaming/`` and fails
-on any public top-level function that nothing references except
-``tests/``. A reference counts when it comes from the package,
-``__spark_entry__.py``, ``bench.py``, ``tools/`` or ``perfbench/``,
+on any top-level function, private helpers included, that nothing
+references except ``tests/``. A reference counts when it comes from the
+package, ``__spark_entry__.py``, ``bench.py``, ``tools/`` or ``perfbench/``,
 and not from inside another function of these layers that is itself
 unreferenced: dead code keeps none of its callees alive. Names are
 matched bare (a ``Name``, an attribute or an imported name), so a
@@ -50,8 +50,7 @@ def _referenced(node: ast.AST) -> set[str]:
 
 
 def _unreferenced() -> tuple[list[str], set[str]]:
-    """(unreferenced public functions, allowlisted names no layer
-    defines)."""
+    """(unreferenced functions, allowlisted names no layer defines)."""
     sources = [*PKG.rglob("*.py"), *(ROOT / "tools").rglob("*.py"),
                *(ROOT / "perfbench").rglob("*.py"),
                ROOT / "bench.py", ROOT / "__spark_entry__.py"]
@@ -71,10 +70,7 @@ def _unreferenced() -> tuple[list[str], set[str]]:
         reached = set().union(*(candidates[n][1] for n in frontier)) - live
         live |= reached
         frontier = reached & set(candidates)
-    dead = sorted(
-        where for name, (where, _) in candidates.items()
-        if name not in live and not name.startswith("_")
-    )
+    dead = sorted(where for name, (where, _) in candidates.items() if name not in live)
     return dead, set(ALLOWED) - set(candidates)
 
 
