@@ -1,11 +1,10 @@
 """The reference pipeline end-to-end, Spark-native (SURVEY §2 #12).
 
 Reference: Airflow DAG extract ≫ transform ≫ load ≫ validate
-(dags/airflow_dag_calidad_aire.py:441). Here each Airflow task becomes a
-DataFrame→DataFrame stage and the whole flow is ONE lazy Catalyst plan —
-the scheduler's task boundaries (which force CSV materialization between
-tasks in the reference, dag:118/256) disappear; only the final load
-writes anything.
+(dags/airflow_dag_calidad_aire.py:441). Extract and transform build one
+lazy plan, and ``load``'s hourly write is the one action that evaluates
+it. The daily rollup and ``validate`` read the written table back, where
+the reference hands CSV files between its tasks (dag:118/256).
 """
 
 from __future__ import annotations
@@ -15,7 +14,6 @@ from pyspark.sql import functions as F
 
 from ..functions import aqi_from_pm25, pollution_index, quality_category
 from ..operators import aggregates, cleaning, features
-from ..sinks import writers
 from ..sources.generator import generate_air_quality
 
 POLLUTANTS = ["pm25", "pm10", "no2", "o3", "co", "temperature", "humidity"]
@@ -64,16 +62,24 @@ def daily_summary(df: DataFrame) -> DataFrame:
     )
 
 
-def load(df: DataFrame, daily: DataFrame, out_dir: str) -> None:
-    """LOAD (dag:287-359): snappy parquet partitioned by month + CSV."""
-    writers.write_parquet(df, f"{out_dir}/hourly", partition_by=["month"])
-    writers.write_csv(daily, f"{out_dir}/daily_csv")
-    writers.write_parquet(daily, f"{out_dir}/daily")
+def load(clean: DataFrame, out_dir: str) -> DataFrame:
+    """LOAD (dag:287-359): hourly parquet partitioned by month, plus the
+    daily rollup as CSV and as parquet (snappy, Spark's default codec).
+    Returns the written hourly table, reopened with ``clean``'s schema
+    (no inference job): ``validate`` reads it, so the transform is
+    evaluated once, by the hourly write."""
+    hourly = f"{out_dir}/hourly"
+    clean.write.mode("overwrite").partitionBy("month").parquet(hourly)
+    written = clean.sparkSession.read.schema(clean.schema).parquet(hourly)
+    daily = daily_summary(written)
+    daily.write.mode("overwrite").option("header", True).csv(f"{out_dir}/daily_csv")
+    daily.write.mode("overwrite").parquet(f"{out_dir}/daily")
+    return written
 
 
 def validate(df: DataFrame) -> dict:
-    """VALIDATE (dag:365-407): the quality report over the transformed
-    set, with the reference's checks (dag:396-401): fail under 1000
+    """VALIDATE (dag:365-407): the quality report over the loaded
+    table, with the reference's checks (dag:396-401): fail under 1000
     rows, warn over 5 % nulls."""
     report = aggregates.validation_report(
         df, "ts", "station", POLLUTANTS, category_col="air_quality_category"
@@ -82,12 +88,3 @@ def validate(df: DataFrame) -> dict:
         raise ValueError("insufficient data for analysis")
     report["null_warning"] = bool(report["null_percentage"] > 5)
     return report
-
-
-def run_full_pipeline(spark: SparkSession, out_dir: str, num_days: int = 30) -> dict:
-    """extract ≫ transform ≫ load ≫ validate, returning the quality report."""
-    raw = extract(spark, num_days=num_days)
-    clean = transform(raw)
-    daily = daily_summary(clean)
-    load(clean, daily, out_dir)
-    return validate(clean)

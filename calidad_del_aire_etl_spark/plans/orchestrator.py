@@ -5,10 +5,9 @@ transform ≫ load ≫ validate, retries=3, daily 08:00).
 Airflow's roles here split cleanly: SCHEDULING belongs to whatever cron
 invokes the job (the reference's own README suggests a 15-minute cron),
 while DEPENDENCY ORDER, RETRIES and FAILURE PROPAGATION are this
-module. Tasks pass values (usually lazy DataFrames) downstream, so a
-multi-task DAG still collapses into few Spark jobs — task boundaries
-do NOT force materialization the way the reference's CSV handoffs
-between Airflow tasks do (dag:118/256).
+module. Tasks pass values downstream: lazy DataFrames until ``load``
+writes, then the written table itself, where the reference hands CSV
+files between its Airflow tasks (dag:118/256).
 """
 
 from __future__ import annotations
@@ -114,9 +113,11 @@ class Dag:
 
 
 def air_quality_dag(spark, out_dir: str, num_days: int = 30) -> Dag:
-    """The reference DAG re-expressed: extract ≫ transform ≫ [load,
-    validate]; load and validate both depend only on transform and the
-    reference's 3-retry policy applies to every task (dag:417)."""
+    """The reference DAG's chain: extract ≫ transform ≫ load ≫ validate
+    (dag:441), with its 3-retry policy on every task (dag:417). ``load``
+    returns the written hourly table and ``validate`` reports over it, so
+    the transform is evaluated once, by the hourly write; a failed load
+    skips the validation."""
     from . import air_quality as aq
 
     dag = Dag("calidad_del_aire")
@@ -131,13 +132,11 @@ def air_quality_dag(spark, out_dir: str, num_days: int = 30) -> Dag:
 
     @dag.task("load", upstream=["transform"], retries=3)
     def _load(clean):
-        daily = aq.daily_summary(clean)
-        aq.load(clean, daily, out_dir)
-        return out_dir
+        return aq.load(clean, out_dir)
 
-    @dag.task("validate", upstream=["transform"], retries=3)
-    def _validate(clean):
-        return aq.validate(clean)
+    @dag.task("validate", upstream=["load"], retries=3)
+    def _validate(written):
+        return aq.validate(written)
 
     return dag
 

@@ -1,10 +1,10 @@
 """Load-phase sinks (SURVEY §2 #43; reference dag:287-359).
 
 The reference writes one CSV + one parquet file and has a chunked
-PostgreSQL path. Spark-first: writes are partitioned jobs — the "chunk"
-is the task partition; ``partition_by`` date columns give partition-
-pruned reads downstream; snappy parquet matches the reference's
-compression choice (dag:265).
+PostgreSQL path. The CSV and parquet writes are ``plans.air_quality.load``'s
+own. This module holds the rest: bucketed fact tables, the JDBC path
+(Spark-first, the "chunk" is the task partition) and the versioned
+copy-on-write parquet table.
 """
 
 from __future__ import annotations
@@ -13,23 +13,6 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    compression: str = "snappy",
-) -> None:
-    w = df.write.mode(mode).option("compression", compression)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
-    df.write.mode(mode).option("header", header).csv(path)
 
 
 def write_bucketed(

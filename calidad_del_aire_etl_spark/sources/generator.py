@@ -28,6 +28,8 @@ STATIONS = [
     "Estacion_Este",
     "Estacion_Oeste",
 ]
+START = "2024-01-01"
+MISSING_RATE = 0.02  # share of pm25/pm10 readings left NULL
 
 # Base-level ranges per pollutant (reference dag:66-70).
 BASE_RANGES = {
@@ -52,21 +54,15 @@ def _gauss(key: Column, salt: str) -> Column:
     return F.sqrt(-2.0 * F.log(u1)) * F.cos(F.lit(2.0 * math.pi) * u2)
 
 
-def generate_air_quality(
-    spark: SparkSession,
-    num_days: int = 90,
-    stations: list[str] | None = None,
-    start: str = "2024-01-01",
-    missing_rate: float = 0.02,
-) -> DataFrame:
-    """Hourly sensor readings, one row per (station, hour)."""
-    stations = stations or STATIONS
+def generate_air_quality(spark: SparkSession, num_days: int = 90) -> DataFrame:
+    """Hourly sensor readings, one row per (station, hour), from
+    ``START``."""
     n_hours = num_days * 24
-    sdf = spark.createDataFrame([(s,) for s in stations], "station string")
+    sdf = spark.createDataFrame([(s,) for s in STATIONS], "station string")
 
     rows = (
         spark.range(n_hours)
-        .withColumn("ts", F.expr(f"timestamp'{start} 00:00:00' + make_interval(0,0,0,0,id)"))
+        .withColumn("ts", F.expr(f"timestamp'{START} 00:00:00' + make_interval(0,0,0,0,id)"))
         .crossJoin(F.broadcast(sdf))
     )
 
@@ -88,8 +84,8 @@ def generate_air_quality(
             F.lit(0.0),
         )
         value = F.round(raw, 4)
-        if missing_rate > 0 and pol in ("pm25", "pm10"):
-            value = F.when(_u(key, f"miss_{pol}") < missing_rate, None).otherwise(value)
+        if pol in ("pm25", "pm10"):
+            value = F.when(_u(key, f"miss_{pol}") < MISSING_RATE, None).otherwise(value)
         out = out.withColumn(pol, value)
 
     out = out.withColumn("temperature", F.round(F.lit(10.0) + _u(key, "temp") * 20.0, 4))

@@ -1,5 +1,6 @@
 """DAG orchestrator: ordering, retries, failure propagation, and the
-air-quality DAG end-to-end (the reference's Airflow surface)."""
+air-quality DAG under its daily schedule (the reference's Airflow
+surface). The DAG's single run is tested in ``tests/test_pipeline.py``."""
 
 
 from __future__ import annotations
@@ -89,26 +90,11 @@ def test_unknown_upstream_rejected():
 
 
 @pytest.mark.slow
-def test_air_quality_dag_end_to_end(spark):
-    with tempfile.TemporaryDirectory(prefix="aq_dag_") as d:
-        # 5 stations × 10 days × 24 h = 1200 rows — clears the
-        # reference's 1000-row validation gate (dag:396)
-        dag = air_quality_dag(spark, d, num_days=10)
-        res = dag.run()
-        assert [r.state for r in res.values()] == ["success"] * 4
-        report = res["validate"].value
-        assert report["total_records"] >= 1000
-        assert "null_warning" in report
-        out = spark.read.parquet(f"{d}/daily")
-        assert out.count() > 0
-
-
-@pytest.mark.slow
 def test_air_quality_dag_scheduled_catchup_runs_real_pipeline(spark):
     """The reference's operational contract end-to-end: daily 08:00
     schedule, host down over a weekend, catch-up replays each missed
-    window against the REAL Spark DAG (extract ≫ transform ≫ [load,
-    validate]) — every window runs the full pipeline and lands its own
+    window against the REAL Spark DAG (extract ≫ transform ≫ load ≫
+    validate) — every window runs the full pipeline and lands its own
     output."""
     from datetime import datetime
 

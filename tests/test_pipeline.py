@@ -11,7 +11,9 @@ from calidad_del_aire_etl_spark.sources.generator import generate_air_quality
 
 @pytest.fixture(scope="module")
 def generated(spark):
-    return generate_air_quality(spark, num_days=7).cache()
+    df = generate_air_quality(spark, num_days=7).cache()
+    yield df
+    df.unpersist()
 
 
 def test_generator_shape_and_determinism(spark, generated):
@@ -37,18 +39,76 @@ def test_generator_has_missing_and_diurnal_pattern(spark, generated):
     assert byhour[8] > byhour[3]  # rush hour > overnight
 
 
-def test_full_pipeline_runs_and_validates(spark):
+def _executions(spark):
+    return spark._jsparkSession.sharedState().statusStore().executionsList()
+
+
+def _range_evaluations(spark, job_ids, after_execution) -> int:
+    """SQL executions after ``after_execution`` that ran one of
+    ``job_ids`` and whose plan scans the generator's ``spark.range``."""
+    execs = _executions(spark)
+    n = 0
+    for i in reversed(range(execs.size())):
+        e = execs.apply(i)
+        if e.executionId() <= after_execution:
+            break
+        if any(e.jobs().contains(j) for j in job_ids) and "Range (" in e.physicalPlanDescription():
+            n += 1
+    return n
+
+
+def test_air_quality_dag_transforms_once_and_validates_the_written_table(
+    spark, jobs_started, monkeypatch
+):
+    """The reference DAG's chain (dag:441) at 30 days: ``load`` writes
+    the hourly table, the one action that evaluates the transform, and
+    ``validate`` reports over the table ``load`` returns. Chained off
+    ``transform`` instead, the validation collect would evaluate the
+    transform again. A failed ``load`` skips ``validate``."""
+    from calidad_del_aire_etl_spark.plans.orchestrator import air_quality_dag
+
+    def tagged(dag) -> dict[str, list[int]]:
+        jobs: dict[str, list[int]] = {}
+        for t in dag._tasks.values():
+            def fn(*a, _name=t.name, _fn=t.fn, **k):
+                out, jobs[_name] = jobs_started(lambda: _fn(*a, **k))
+                return out
+            t.fn = fn
+        return jobs
+
+    execs = _executions(spark)
+    last_execution = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
     out = tempfile.mkdtemp(prefix="aq_out_")
     try:
-        report = air_quality.run_full_pipeline(spark, out, num_days=30)
+        dag = air_quality_dag(spark, out, num_days=30)
+        jobs = tagged(dag)
+        res = dag.run()
+        assert [r.state for r in res.values()] == ["success"] * 4
+        per_task = {name: len(ids) for name, ids in jobs.items()}
+        print("jobs per task:", per_task)
+        assert per_task["load"] > 0
+        assert sum(per_task.values()) < 25  # 25 with validate off transform
+        all_jobs = [j for ids in jobs.values() for j in ids]
+        assert _range_evaluations(spark, all_jobs, last_execution) == 1
+
+        report = res["validate"].value
         assert report["total_records"] >= 1000
         assert report["unique_groups"] == 5
         assert report["null_percentage"] < 5
+        assert "null_warning" in report
         hourly = spark.read.parquet(f"{out}/hourly")
-        assert hourly.count() > 0
+        assert hourly.count() == report["total_records"] == 30 * 24 * 5
         assert "aqi_pm25" in hourly.columns
         daily = spark.read.parquet(f"{out}/daily")
         assert daily.count() == 30 * 5
+
+        def broken_load(clean, out_dir):
+            raise OSError("disk full")
+
+        monkeypatch.setattr(air_quality, "load", broken_load)
+        res = air_quality_dag(spark, out, num_days=30).run()
+        assert res["load"].state == "failed" and "disk full" in res["load"].error
+        assert res["validate"].state == "skipped"
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

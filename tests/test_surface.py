@@ -1,8 +1,8 @@
-"""The I/O layers hold no entry point that only tests reach.
+"""The I/O layers and the plans hold no entry point that only tests reach.
 
-Walks the AST of ``sources/``, ``sinks/`` and ``streaming/`` and fails
-on any top-level function, private helpers included, that nothing
-references except ``tests/``. A reference counts when it comes from the
+Walks the AST of ``sources/``, ``sinks/``, ``streaming/`` and ``plans/``
+and fails on any top-level function, private helpers included, that
+nothing references except ``tests/``. A reference counts when it comes from the
 package, ``__spark_entry__.py``, ``bench.py``, ``tools/`` or ``perfbench/``,
 and not from inside another function of these layers that is itself
 unreferenced: dead code keeps none of its callees alive. Names are
@@ -18,7 +18,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "calidad_del_aire_etl_spark"
-LAYERS = ("sources", "sinks", "streaming")
+LAYERS = ("sources", "sinks", "streaming", "plans")
 
 # Kept although only tests call them (ROADMAP item 7's keep rule).
 ALLOWED = {
@@ -34,6 +34,13 @@ ALLOWED = {
     # reference Load's PostgreSQL path (dag:323-359)
     "write_jdbc": "to_sql data plane of the reference's Load",
     "ensure_jdbc_table": "CREATE TABLE bootstrap of the reference's Load",
+    # the plans' DAGs and the incremental corpus plan's two steps
+    "air_quality_dag": "the reference's Airflow DAG (dag:409-441)",
+    "corpus_curation_dag": "curate ≫ decontaminate ≫ chunk ≫ pack DAG",
+    "bootstrap_corpus": "day 0 of the incremental corpus plan",
+    "apply_daily_increment": "day N of the incremental corpus plan",
+    # reference implementation that tests compare the fast path against
+    "decode_png_pixels": "reference PNG decoder of the rasterizer tests",
 }
 
 
@@ -74,5 +81,5 @@ def _unreferenced() -> tuple[list[str], set[str]]:
     return dead, set(ALLOWED) - set(candidates)
 
 
-def test_io_layers_have_no_test_only_entry_points():
+def test_layers_have_no_test_only_entry_points():
     assert _unreferenced() == ([], set())
