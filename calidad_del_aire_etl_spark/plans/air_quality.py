@@ -64,16 +64,21 @@ def daily_summary(df: DataFrame) -> DataFrame:
 
 def load(clean: DataFrame, out_dir: str) -> DataFrame:
     """LOAD (dag:287-359): hourly parquet partitioned by month, plus the
-    daily rollup as CSV and as parquet (snappy, Spark's default codec).
-    Returns the written hourly table, reopened with ``clean``'s schema
-    (no inference job): ``validate`` reads it, so the transform is
-    evaluated once, by the hourly write."""
-    hourly = f"{out_dir}/hourly"
+    daily rollup as parquet (snappy, Spark's default codec) and as CSV.
+    Each written table is reopened with the schema it was written from
+    (no inference job): the daily rollup is aggregated once, by the
+    parquet write, and the CSV copies that parquet. Returns the written
+    hourly table: ``validate`` reads it, so the transform is evaluated
+    once, by the hourly write."""
+    spark = clean.sparkSession
+    hourly, daily = f"{out_dir}/hourly", f"{out_dir}/daily"
     clean.write.mode("overwrite").partitionBy("month").parquet(hourly)
-    written = clean.sparkSession.read.schema(clean.schema).parquet(hourly)
-    daily = daily_summary(written)
-    daily.write.mode("overwrite").option("header", True).csv(f"{out_dir}/daily_csv")
-    daily.write.mode("overwrite").parquet(f"{out_dir}/daily")
+    written = spark.read.schema(clean.schema).parquet(hourly)
+    summary = daily_summary(written)
+    summary.write.mode("overwrite").parquet(daily)
+    spark.read.schema(summary.schema).parquet(daily).write.mode("overwrite").option(
+        "header", True
+    ).csv(f"{out_dir}/daily_csv")
     return written
 
 

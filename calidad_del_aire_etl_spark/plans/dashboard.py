@@ -115,10 +115,12 @@ def render_png(spark: SparkSession, sf_dir: str, out_path: str) -> str:
     shuffle: day-of-week bars by ``day_of_week``, the first 20 station
     bars by ``user_id``, the rolling-mean line user by user (a stable
     sort keeps each user's window order, ``(ts, event_id)``)."""
+    import numpy as np
+
     from . import rasterize as rz
 
     rels = chart_relations(spark, sf_dir)
-    roll = rels.pop("dash_rolling_mean").select("user_id", "rolling_mean").toPandas()
+    roll = rels.pop("dash_rolling_mean").select("user_id", "rolling_mean").toArrow()
     rels = collect_packed(rels)
     W, H, cols, rows, pad = 900, 700, 2, 3, 10
     pw, ph = (W - pad * (cols + 1)) // cols, (H - pad * (rows + 1)) // rows
@@ -134,10 +136,11 @@ def render_png(spark: SparkSession, sf_dir: str, out_path: str) -> str:
         c, *cell(0, 0), "KPIS",
         [f"{k} {v}" for k, v in kpi.iloc[0].items()] if len(kpi) else [],
     )
-    roll = roll.sort_values("user_id", kind="stable")
+    # a NULL user_id is NaN here and sorts last, as in sort_values
+    order = np.argsort(roll["user_id"].to_numpy(zero_copy_only=False), kind="stable")
     rz.draw_line_panel(
         c, *cell(0, 1), "ROLLING MEAN",
-        [float(v) for v in roll["rolling_mean"].dropna().tolist()],
+        roll["rolling_mean"].to_numpy(zero_copy_only=False)[order].tolist(),
     )
     dow = rels["dash_dow_distribution"].sort_values("day_of_week")
     rz.draw_bar_panel(

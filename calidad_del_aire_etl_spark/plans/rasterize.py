@@ -3,11 +3,14 @@
 The reference renders its dashboard with matplotlib
 (dashboard_calidad_aire.py:246-254); the engine takes no plotting
 dependency, so ``plans.dashboard.render_png`` draws with this module: a
-tiny software rasterizer (RGB byte buffer, Bresenham lines, filled bars,
-a 5x7 bitmap font for titles) and a from-scratch PNG encoder
-(signature + IHDR + zlib'd filter-0 scanlines + IEND — the minimum the
-spec requires). Charts come out plain but real: the bytes open in any
-viewer, and pytest decodes them back to prove the pipeline end-to-end.
+tiny software rasterizer (an indexed-color canvas of one palette byte
+per pixel, span writes for lines and bars, Bresenham lines, a 5x7
+bitmap font for titles) and a from-scratch PNG encoder (signature +
+IHDR + PLTE + zlib'd filter-0 scanlines + IEND — the minimum an
+indexed-color image needs). The bit depth is the smallest of 1/2/4/8
+that holds the palette, so the dashboard's five colors pack two pixels
+per byte. Charts come out plain but real: the bytes open in any viewer,
+and pytest decodes them back to prove the pipeline end-to-end.
 
 This is a driver-side leaf: it only touches the chart-ready rows the
 dashboard collects, never the fact data. Most panels reduce to a few
@@ -50,25 +53,51 @@ _FONT: dict[str, tuple[int, ...]] = {
 
 
 class Canvas:
-    """Dead-simple RGB raster: (0,0) is top-left, colors are (r,g,b)."""
+    """Indexed-color raster: (0,0) is top-left, colors are (r,g,b).
+
+    ``buf`` holds one palette index per pixel, row-major. ``palette``
+    lists the colors in order of first use, the background at index 0;
+    a 257th color raises ``ValueError``. Every primitive clips to the
+    canvas pixel by pixel, as :meth:`set` does."""
 
     def __init__(self, width: int, height: int, bg=(255, 255, 255)):
         self.width = width
         self.height = height
-        self.buf = bytearray(bytes(bg) * (width * height))
+        self.palette = [tuple(bg)]
+        self._index = {self.palette[0]: 0}
+        self.buf = bytearray(width * height)
+
+    def _ix(self, color) -> int:
+        """The palette index of ``color``, appended on first use."""
+        color = tuple(color)
+        i = self._index.get(color)
+        if i is None:
+            if len(self.palette) == 256:
+                raise ValueError(f"a PNG palette holds 256 colors; {color} is the 257th")
+            i = self._index[color] = len(self.palette)
+            self.palette.append(color)
+        return i
+
+    def _plot(self, x: int, y: int, i: int) -> None:
+        if 0 <= x < self.width and 0 <= y < self.height:
+            self.buf[y * self.width + x] = i
 
     def set(self, x: int, y: int, color) -> None:
-        if 0 <= x < self.width and 0 <= y < self.height:
-            i = (y * self.width + x) * 3
-            self.buf[i : i + 3] = bytes(color)
+        self._plot(x, y, self._ix(color))
 
     def hline(self, x0: int, x1: int, y: int, color) -> None:
-        for x in range(min(x0, x1), max(x0, x1) + 1):
-            self.set(x, y, color)
+        i = self._ix(color)
+        lo, hi = max(min(x0, x1), 0), min(max(x0, x1), self.width - 1)
+        if 0 <= y < self.height and lo <= hi:
+            row = y * self.width
+            self.buf[row + lo : row + hi + 1] = bytes((i,)) * (hi - lo + 1)
 
     def vline(self, x: int, y0: int, y1: int, color) -> None:
-        for y in range(min(y0, y1), max(y0, y1) + 1):
-            self.set(x, y, color)
+        i = self._ix(color)
+        lo, hi = max(min(y0, y1), 0), min(max(y0, y1), self.height - 1)
+        if 0 <= x < self.width and lo <= hi:
+            w = self.width
+            self.buf[lo * w + x : hi * w + x + 1 : w] = bytes((i,)) * (hi - lo + 1)
 
     def rect(self, x0: int, y0: int, x1: int, y1: int, color) -> None:
         self.hline(x0, x1, y0, color)
@@ -82,11 +111,12 @@ class Canvas:
 
     def line(self, x0: int, y0: int, x1: int, y1: int, color) -> None:
         """Bresenham."""
+        i = self._ix(color)
         dx, dy = abs(x1 - x0), -abs(y1 - y0)
         sx, sy = (1 if x0 < x1 else -1), (1 if y0 < y1 else -1)
         err = dx + dy
         while True:
-            self.set(x0, y0, color)
+            self._plot(x0, y0, i)
             if x0 == x1 and y0 == y1:
                 return
             e2 = 2 * err
@@ -98,6 +128,7 @@ class Canvas:
                 y0 += sy
 
     def text(self, x: int, y: int, s: str, color, scale: int = 1) -> None:
+        i = self._ix(color)
         cx = x
         for ch in s.upper():
             glyph = _FONT.get(ch, _FONT[" "])
@@ -106,13 +137,15 @@ class Canvas:
                     if bits >> row & 1:
                         for dx in range(scale):
                             for dy in range(scale):
-                                self.set(
-                                    cx + col * scale + dx, y + row * scale + dy, color
+                                self._plot(
+                                    cx + col * scale + dx, y + row * scale + dy, i
                                 )
             cx += (5 + 1) * scale
 
     def to_png(self) -> bytes:
-        """Minimal spec-conforming PNG: 8-bit RGB, filter 0 scanlines."""
+        """Minimal spec-conforming indexed-color PNG (color type 3): a
+        ``PLTE`` chunk, the smallest bit depth of 1/2/4/8 that holds the
+        palette, filter-0 scanlines, zlib level 9."""
 
         def chunk(tag: bytes, payload: bytes) -> bytes:
             return (
@@ -122,16 +155,27 @@ class Canvas:
                 + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF)
             )
 
-        ihdr = struct.pack(">IIBBBBB", self.width, self.height, 8, 2, 0, 0, 0)
-        stride = self.width * 3
-        raw = b"".join(
-            b"\x00" + bytes(self.buf[y * stride : (y + 1) * stride])
-            for y in range(self.height)
-        )
+        w = self.width
+        depth = next(d for d in (1, 2, 4, 8) if len(self.palette) <= 1 << d)
+        per = 8 // depth  # pixels per byte
+        stride = -(-w // per)
+        pad = bytes(stride * per - w)
+        rows = []
+        for y in range(self.height):
+            row = self.buf[y * w : (y + 1) * w] + pad
+            # pixel k of each byte sits ``depth * (per - 1 - k)`` bits up;
+            # an index fits in ``depth`` bits, so the shifted sub-rows
+            # never overlap and OR-ing them packs the row
+            packed = 0
+            for k in range(per):
+                packed |= int.from_bytes(row[k::per], "big") << depth * (per - 1 - k)
+            rows.append(b"\x00" + packed.to_bytes(stride, "big"))
+        ihdr = struct.pack(">IIBBBBB", w, self.height, depth, 3, 0, 0, 0)
         return (
             b"\x89PNG\r\n\x1a\n"
             + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw, 6))
+            + chunk(b"PLTE", b"".join(bytes(c) for c in self.palette))
+            + chunk(b"IDAT", zlib.compress(b"".join(rows), 9))
             + chunk(b"IEND", b"")
         )
 
@@ -221,22 +265,40 @@ def parse_png_header(data: bytes) -> tuple[int, int]:
 
 
 def decode_png_pixels(data: bytes) -> bytes:
-    """Inflate the IDAT stream and strip filter-0 scanline bytes back to
-    raw RGB — validates the encoder against an independent reader."""
+    """Inflate the IDAT stream of an indexed-color PNG (bit depth 1, 2,
+    4 or 8, filter 0) and expand its palette indexes back to raw RGB —
+    validates the encoder against an independent reader."""
     w, h = parse_png_header(data)
-    idat = b""
+    depth, ctype = data[24], data[25]
+    assert ctype == 3 and depth in (1, 2, 4, 8), "only indexed color is emitted"
+    idat, plte = b"", b""
     off = 8
     while off < len(data):
         (ln,) = struct.unpack(">I", data[off : off + 4])
         tag = data[off + 4 : off + 8]
         if tag == b"IDAT":
             idat += data[off + 8 : off + 8 + ln]
+        elif tag == b"PLTE":
+            plte = data[off + 8 : off + 8 + ln]
         off += 12 + ln
     raw = zlib.decompress(idat)
-    stride = w * 3
-    out = bytearray()
+    per = 8 // depth
+    stride = -(-w // per)
+    mask = (1 << depth) - 1
+    # field k of every byte, as a byte: one translate table per field
+    fields = [
+        bytes(b >> depth * (per - 1 - k) & mask for b in range(256)) for k in range(per)
+    ]
+    idx = bytearray()
     for y in range(h):
         row = raw[y * (stride + 1) : (y + 1) * (stride + 1)]
         assert row[0] == 0, "only filter 0 is emitted"
-        out += row[1:]
+        unpacked = bytearray(stride * per)
+        for k, table in enumerate(fields):
+            unpacked[k::per] = row[1:].translate(table)
+        idx += unpacked[:w]
+    out = bytearray(3 * w * h)
+    for ch in range(3):
+        channel = plte[ch::3].ljust(256, b"\x00")
+        out[ch::3] = idx.translate(channel)
     return bytes(out)

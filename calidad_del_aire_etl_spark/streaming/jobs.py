@@ -179,9 +179,12 @@ def incremental_rollup_sink(spark, staged_dir: str, rollup_dir: str):
         # observe before the sort: over an observation, the planned
         # write swaps this sort for its own (date, batch_id) one
         observed, obs = incremental.observe_dates(batch_df, date)
+        # a string batch_id names the same directory, and unlike an int
+        # literal it is not inlined into the generated code, so a tick
+        # reuses the previous tick's compiled classes
         staging = (
             observed.withColumn("date", date)
-            .withColumn("batch_id", F.lit(batch_id))
+            .withColumn("batch_id", F.lit(str(batch_id)))
             .sortWithinPartitions("date", "ts", "event_id")
         )
         # foreachBatch runs in a clone of the query's session: the confs

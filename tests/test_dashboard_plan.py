@@ -18,6 +18,15 @@ SF = "/root/testdata/sf0.001"
 # one action per panel took 11.
 RENDER_JOBS = 7
 
+# SHA-256 of render_png's pixels decoded to RGB, pinned from the 8-bit
+# RGB encoder that the indexed-color one replaced: the palette changes
+# the bytes on disk, never a drawn pixel.
+PIXEL_SHA256 = {
+    "sf0.001": "a862935e0c748e2b44797367b553564523713341e9e237088bde24e3dd99b1a1",
+    "null_value_sf": "81e23837cd4321940cd40c49802cca6679b6eb1c4d4a556ceb0b8fa7bdfc3547",
+    "empty_sf": "58cbc5ddf6442303e636a80abff067ba81d62ba9f934cbb6b1e01b552d7542da",
+}
+
 
 def _events_variant(tmp_path_factory, name, edit):
     """A copy of SF whose events table is ``edit(table)``; the other
@@ -130,6 +139,18 @@ def test_render_png_draws_null_and_empty_tables(spark, table, request, tmp_path)
     assert len(rz.decode_png_pixels(data)) == 900 * 700 * 3
 
 
+@pytest.mark.parametrize("table", list(PIXEL_SHA256))
+def test_render_png_pixels_match_their_pinned_hash(spark, table, request, tmp_path):
+    import hashlib
+
+    from calidad_del_aire_etl_spark.plans import rasterize as rz
+
+    sf = SF if table == "sf0.001" else request.getfixturevalue(table)
+    out = dashboard.render_png(spark, sf, str(tmp_path / "dash.png"))
+    data = open(out, "rb").read()
+    assert hashlib.sha256(rz.decode_png_pixels(data)).hexdigest() == PIXEL_SHA256[table]
+
+
 def test_render_png_starts_the_benchmarked_job_count(spark, jobs_started, tmp_path):
     out = str(tmp_path / "dash.png")
     dashboard.render_png(spark, SF, out)  # warm-up: schema memo, codegen
@@ -197,6 +218,77 @@ def test_rasterizer_round_trip_and_primitives(tmp_path):
     assert greens > 5
 
 
+@pytest.mark.parametrize("n_colors, depth", [(2, 1), (4, 2), (16, 4), (17, 8)])
+def test_palette_round_trip_at_each_bit_depth(n_colors, depth):
+    """The PNG takes the smallest bit depth that holds the palette, and
+    decodes back to the colors drawn. A width of 13 is no multiple of
+    any pixels-per-byte count, so every packed row is padded."""
+    from calidad_del_aire_etl_spark.plans import rasterize as rz
+
+    w, h = 13, 5
+    colors = [(k, 255 - k, 7 * k % 256) for k in range(n_colors)]
+    c = rz.Canvas(w, h, bg=colors[0])
+    want = []
+    for y in range(h):
+        for x in range(w):
+            want.append(colors[(5 * x + 3 * y) % n_colors])
+            c.set(x, y, want[-1])
+    assert len(c.palette) == n_colors
+    data = c.to_png()
+    assert data[24] == depth  # the IHDR bit depth
+    px = rz.decode_png_pixels(data)
+    assert [tuple(px[i : i + 3]) for i in range(0, len(px), 3)] == want
+
+
+def test_canvas_refuses_a_257th_color():
+    from calidad_del_aire_etl_spark.plans import rasterize as rz
+
+    c = rz.Canvas(300, 1)
+    for k in range(255):
+        c.set(k, 0, (k, 0, 1))
+    assert len(c.palette) == 256
+    c.set(0, 0, (7, 0, 1))  # a color already in the palette still draws
+    with pytest.raises(ValueError, match="257th"):
+        c.set(299, 0, (1, 2, 3))
+
+
+def test_span_writes_clip_like_set():
+    """hline, vline, fill_rect and rect write whole spans; partly or
+    wholly off the canvas they paint exactly the pixels a per-pixel
+    ``set`` loop paints."""
+    from calidad_del_aire_etl_spark.plans import rasterize as rz
+
+    red = (255, 0, 0)
+    shapes = {
+        "hline": [(-5, 25, 3), (30, 40, 3), (4, -2, 9), (4, 8, -1), (2, 2, 10)],
+        "vline": [(7, -3, 14), (-1, 0, 9), (19, 9, 0), (20, 0, 9), (3, 10, 12)],
+        "fill_rect": [(15, 8, 25, 12), (-4, -4, 1, 2), (5, 5, 5, 5), (21, 0, 30, 9)],
+        "rect": [(-2, -2, 5, 5), (12, 3, 30, 30)],
+    }
+
+    def pixels(name, args):
+        if name == "hline":
+            x0, x1, y = args
+            return [(x, y) for x in range(min(x0, x1), max(x0, x1) + 1)]
+        if name == "vline":
+            x, y0, y1 = args
+            return [(x, y) for y in range(min(y0, y1), max(y0, y1) + 1)]
+        x0, y0, x1, y1 = args
+        xs, ys = range(min(x0, x1), max(x0, x1) + 1), range(min(y0, y1), max(y0, y1) + 1)
+        if name == "fill_rect":
+            return [(x, y) for x in xs for y in ys]
+        return [(x, y) for x in xs for y in ys if x in (x0, x1) or y in (y0, y1)]
+
+    for name, cases in shapes.items():
+        for args in cases:
+            got, want = rz.Canvas(20, 10), rz.Canvas(20, 10)
+            getattr(got, name)(*args, red)
+            for x, y in pixels(name, args):
+                want.set(x, y, red)
+            got_px = rz.decode_png_pixels(got.to_png())
+            assert got_px == rz.decode_png_pixels(want.to_png()), (name, args)
+
+
 def test_bar_panel_draws_negative_bars_from_zero_line():
     """Bars must extend from the zero line, not the panel bottom: a
     negative value hangs below zero, a positive one rises above it."""
@@ -260,4 +352,6 @@ def test_line_panel_matches_per_segment_bresenham():
         got, want = rz.Canvas(440, 230), rz.Canvas(440, 230)
         rz.draw_line_panel(got, 0, 0, 439, 229, "T", ys)
         reference(want, 0, 0, 439, 229, "T", ys)
-        assert got.buf == want.buf, name
+        # decoded, so the comparison does not depend on palette order
+        got_px = rz.decode_png_pixels(got.to_png())
+        assert got_px == rz.decode_png_pixels(want.to_png()), name

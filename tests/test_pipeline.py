@@ -86,8 +86,11 @@ def test_air_quality_dag_transforms_once_and_validates_the_written_table(
         assert [r.state for r in res.values()] == ["success"] * 4
         per_task = {name: len(ids) for name, ids in jobs.items()}
         print("jobs per task:", per_task)
-        assert per_task["load"] > 0
-        assert sum(per_task.values()) < 25  # 25 with validate off transform
+        # load: the hourly write (6), the daily parquet write (2) and
+        # the CSV copy of that parquet (1); 25 in all with validate off
+        # transform
+        assert per_task["load"] == 9
+        assert sum(per_task.values()) == 12
         all_jobs = [j for ids in jobs.values() for j in ids]
         assert _range_evaluations(spark, all_jobs, last_execution) == 1
 
@@ -101,6 +104,9 @@ def test_air_quality_dag_transforms_once_and_validates_the_written_table(
         assert "aqi_pm25" in hourly.columns
         daily = spark.read.parquet(f"{out}/daily")
         assert daily.count() == 30 * 5
+        daily_csv = spark.read.option("header", True).csv(f"{out}/daily_csv")
+        assert daily_csv.columns == daily.columns
+        assert daily_csv.count() == 30 * 5
 
         def broken_load(clean, out_dir):
             raise OSError("disk full")

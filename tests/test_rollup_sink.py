@@ -2,9 +2,9 @@
 DataFrames: three Spark jobs per micro-batch, a rollup scan bounded by
 the touched dates, sorted zstd staging that a redelivered epoch
 reproduces, a per-tick cost that stays flat over a long staged history,
-dates that follow the session time zone across DST, the refusal of a
-staged root in the old ``batch_id=N`` layout, and a prompt return on an
-empty batch."""
+ticks that compile no new code, dates that follow the session time zone
+across DST, the refusal of a staged root in the old ``batch_id=N``
+layout, and a prompt return on an empty batch."""
 
 from __future__ import annotations
 
@@ -227,6 +227,32 @@ def test_rollup_sink_cost_stays_flat_over_a_long_history(spark, tmp_path, jobs_s
         assert len(set(rows_read[33:44])) == 1, rows_read
         assert sorted(os.listdir(f"{staged}/date=2024-03-02")) == ["batch_id=45", "batch_id=46"]
         assert _rollup(spark, rollup) == _expected(landed)
+
+
+def test_rollup_sink_ticks_compile_no_new_classes(spark, tmp_path, land_batch):
+    """Four ticks of the same shape, each a landed file of 6 rows for
+    its day plus 2 late rows of the day before: from the second tick on,
+    the sink generates no new Java class. Each tick stages a different
+    ``batch_id``, so that literal must not be inlined into the generated
+    code (an int literal is; a string one is held as a reference)."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    landed, staged, rollup = tmp_path / "landed", str(tmp_path / "staged"), str(tmp_path / "rollup")
+    landed.mkdir()
+    sink = jobs.incremental_rollup_sink(spark, staged, rollup)
+    day0 = dt.datetime(2024, 1, 1)
+    compiles = []
+    for b in range(4):
+        rows = [
+            (10 * b + k, day0 + dt.timedelta(days=b - (k >= 6), hours=k), k % 3, "click", k + 0.5)
+            for k in range(8)
+        ]
+        land_batch(str(landed), rows, b)
+        df = spark.read.schema(jobs.EVENTS_SCHEMA).parquet(f"{landed}/batch{b}.parquet")
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        sink(df, b)
+        compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiles[1:] == [0, 0, 0], compiles
+    assert sorted(os.listdir(f"{staged}/date=2024-01-03")) == ["batch_id=2", "batch_id=3"]
 
 
 def _half_hours(spark, first_id: int, start_utc: str, hours: int):

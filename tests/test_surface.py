@@ -40,7 +40,7 @@ ALLOWED = {
     "bootstrap_corpus": "day 0 of the incremental corpus plan",
     "apply_daily_increment": "day N of the incremental corpus plan",
     # reference implementation that tests compare the fast path against
-    "decode_png_pixels": "reference PNG decoder of the rasterizer tests",
+    "decode_png_pixels": "reference PNG decoder (palette)",
 }
 
 
