@@ -289,9 +289,8 @@ def _edges_for(g: DataFrame, id_col: str, edges_memo: tuple | None) -> DataFrame
     index stores it alongside the graph instead of re-running the
     symmetrizing distinct (one eager job) on every query against the
     same standing index. ``edges_memo`` is the full memo tuple (None →
-    no memoization, e.g. mutating callers / the streaming sink);
-    eviction rides :func:`clear_graph_memo`'s ``{memo_key}#...`` prefix
-    rule."""
+    no memoization, e.g. mutating callers); eviction rides
+    :func:`clear_graph_memo`'s ``{memo_key}#...`` prefix rule."""
     if edges_memo is not None:
         hit = _GRAPH_MEMO.get(edges_memo)
         if hit is not None:
@@ -520,8 +519,8 @@ def nndescent_insert(
         ),
     )
     old_adj, new_adj = insert_into_graph(
-        old, g_old, new, id_t, k=k, beam=beam, hops=hops, n_hubs=n_hubs,
-        edges_old=edges_old,
+        old, g_old, new, id_t, edges_old, k=k, beam=beam, hops=hops,
+        n_hubs=n_hubs,
     )
     return (
         old_adj.unionByName(new_adj)
@@ -539,30 +538,20 @@ def insert_into_graph(
     g_old: DataFrame,
     new: DataFrame,
     id_t: str,
+    edges_old: DataFrame,
     k: int = 8,
     beam: int = 8,
     hops: int = 3,
     n_hubs: int = 64,
-    edges_old: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Core of the insert path, against an EXISTING standing graph —
-    shared by :func:`nndescent_insert` (which builds the old graph
-    in-process) and the streaming index sink (which loads it from the
-    persisted store). ``old``/``new`` are (id, v) relations; ``g_old``
-    is (id, nb, cosine, rank). Returns ``(old_adj, new_adj)`` — the
+    """Core of the insert path, against an EXISTING standing graph
+    (:func:`nndescent_insert` builds that graph in-process).
+    ``old``/``new`` are (id, v) relations; ``g_old`` is (id, nb, cosine,
+    rank) and ``edges_old`` its (possibly memoized) symmetrized
+    adjacency (:func:`_edges_for`). Returns ``(old_adj, new_adj)`` — the
     re-ranked adjacency of ALL old nodes (only those receiving a
     back-link can differ from ``g_old``) and the new nodes' adjacency.
-    ``edges_old`` lets a caller that maintains the standing index pass
-    its (possibly memoized) symmetrized adjacency instead of paying the
-    symmetrizing job per call.
     """
-    if edges_old is None:
-        edges_old = _symmetrize(
-            g_old.select(F.col("id").alias("gid"),
-                         F.col("nb").alias("neighbor_id"))
-            .withColumnRenamed("gid", "id"),
-            "id",
-        )
     arrivals = new.select(F.col("id").alias("qid"), F.col("v").alias("qv"))
     # the final hop is taken as live lineage and materialized ONCE as
     # new_out below — placed's only consumer — so the last hop's merge

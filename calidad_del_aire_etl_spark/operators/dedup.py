@@ -280,33 +280,14 @@ def minhash_lsh_pairs(
     shingle array exactly once and updates all K mins per shingle.
     """
     banded = minhash_bands(df, id_col, text_col, n, num_hashes, bands)
-    return pairs_from_bands(banded, num_hashes=num_hashes)
-
-
-def pairs_from_bands(
-    banded: DataFrame, num_hashes: int = 16, materialize: bool = True
-) -> DataFrame:
-    """Candidate pairs from an (id, sig, b, bkey) band relation — the
-    join/estimate half of :func:`minhash_lsh_pairs`, split out so a
-    caller that already holds the band relation (the streaming sink
-    signs each micro-batch exactly once) doesn't re-sign the text.
-
-    ``materialize=False`` skips the internal checkpoint for callers
-    whose band relation is ALREADY a materialized leaf (the streaming
-    sink's eager-checkpointed micro-batch) — re-checkpointing a leaf
-    stores a second copy of its blocks until the ContextCleaner
-    reclaims them, wasted executor storage in a long-running stream
-    (ADVICE r14)."""
-    # Both sides of the self-join read `banded`; when it arrives as a
-    # live lineage (minhash_lsh_pairs), the signature fold — the
-    # expensive K-min aggregate over every shingle hash — would run
-    # twice. One lazy checkpoint halves the signing work (measured at
+    # Both sides of the self-join read `banded`, so the signature fold
+    # — the expensive K-min aggregate over every shingle hash — would
+    # run twice. One lazy checkpoint halves the signing work (measured at
     # sf0.1, r14: dedup_minhash_lsh ≤ and dedup_minhash_eval 2.7 s ->
     # 2.1 s best, better in every interleaved rep). Non-reliable
     # blocks: an executor loss fails the job rather than recomputing —
     # use checkpoint() on fault-prone fleets.
-    if materialize:
-        banded = banded.localCheckpoint(eager=False)
+    banded = banded.localCheckpoint(eager=False)
     la, lb = banded.alias("la"), banded.alias("lb")
     cand = (
         la.join(
@@ -974,12 +955,12 @@ def incremental_minhash_probe(
     """The probe half of :func:`incremental_minhash_dedup`, against an
     ALREADY-SIGNED band relation (``minhash_bands`` layout:
     (id, sig, b, bkey)). This is the true never-re-sign path: a caller
-    that persists the band store (the streaming minhash sink, a daily
-    pipeline writing bands bucketed by bkey) pays signature cost only
-    for the increment, and the store streams through the probe join
-    map-side. A caller that has ALREADY signed the increment passes its
-    band relation via ``new_bands_rel`` so the text is hashed exactly
-    once per batch. Same output contract as incremental_minhash_dedup."""
+    that persists the band store (a daily pipeline writing bands
+    bucketed by bkey) pays signature cost only for the increment, and
+    the store streams through the probe join map-side. A caller that
+    has ALREADY signed the increment passes its band relation via
+    ``new_bands_rel`` so the text is hashed exactly once per batch.
+    Same output contract as incremental_minhash_dedup."""
     nb = (
         new_bands_rel
         if new_bands_rel is not None

@@ -48,11 +48,6 @@ def daily_rollup(events: DataFrame) -> DataFrame:
     )
 
 
-def write_daily_full(summary: DataFrame, path: str) -> None:
-    """Initial (or backfill-everything) load: all partitions written."""
-    summary.write.mode("overwrite").partitionBy("date").parquet(path)
-
-
 def observe_dates(df: DataFrame, date: Column) -> tuple[DataFrame, Observation]:
     """Attach the distinct values of the string ``date`` column to
     ``df``'s next action. ``obs.get["dates"]`` is ready once that action

@@ -1,1 +1,2 @@
-"""Structured Streaming: ingest, windowed aggregation, stateful sessions."""
+"""Structured Streaming: the file-source event stream into the
+exactly-once incremental daily rollup (``jobs``)."""

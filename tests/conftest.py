@@ -51,24 +51,22 @@ def jobs_started(spark):
 
 @pytest.fixture()
 def land_batch(spark):
-    """``land_batch(d, rows, idx, schema=EVENTS_SCHEMA)`` lands ``rows``
-    as the flat parquet file ``<d>/batch<idx>.parquet`` that a file-source
+    """``land_batch(d, rows, idx)`` lands ``rows`` of ``EVENTS_SCHEMA`` as
+    the flat parquet file ``<d>/batch<idx>.parquet`` that a file-source
     stream watching ``d`` picks up. The file is written with pyarrow, with
     no Spark job, under a hidden name and then renamed into place.
-    ``schema`` is a StructType or a DDL string; timestamps are written
-    UTC-adjusted, so a naive datetime is read back as that UTC instant."""
+    Timestamps are written UTC-adjusted, so a naive datetime is read back
+    as that UTC instant."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from calidad_del_aire_etl_spark.streaming import jobs
+    from calidad_del_aire_etl_spark.streaming.jobs import EVENTS_SCHEMA
 
-    def land(d: str, rows, idx: int, schema=jobs.EVENTS_SCHEMA) -> None:
-        if isinstance(schema, str):
-            schema = T.StructType.fromDDL(schema)
+    def land(d: str, rows, idx: int) -> None:
         table = pa.Table.from_pylist(
-            [dict(zip(schema.fieldNames(), r)) for r in rows], schema=to_arrow_schema(schema)
+            [dict(zip(EVENTS_SCHEMA.fieldNames(), r)) for r in rows],
+            schema=to_arrow_schema(EVENTS_SCHEMA),
         )
         tmp = f"{d}/.batch{idx}.parquet"
         pq.write_table(table, tmp)

@@ -1,15 +1,15 @@
-"""Crash-replay of the streaming sinks — killing a RUNNING query
-mid-epoch, not simulating replay by calling the sink twice (round-5
-VERDICT #4).
+"""Crash-replay of the incremental-rollup sink — killing a RUNNING
+query mid-epoch, not simulating replay by calling the sink twice
+(round-5 VERDICT #4).
 
-Mechanism: ``jobs._test_crash_hook`` raises inside the foreachBatch
-commit protocol at its most dangerous point (after the epoch's side
-effects, before its idempotence marker / final commit). foreachBatch
-runs on the driver, so the raise fails the streaming query exactly like
-a real sink crash; Structured Streaming has NOT committed the epoch's
-offsets, so a restart from the same checkpoint redelivers the same
-epoch to the same sink. Each test then asserts the restarted run
-converges to the state an UNINTERRUPTED run produces on the same input.
+Mechanism: ``jobs._test_crash_hook`` raises at the sink's
+``rollup:post_stage`` crash point, after the epoch staged its rows and
+before the rollup recompute that reads them. foreachBatch runs on the
+driver, so the raise fails the streaming query exactly like a real sink
+crash; Structured Streaming has NOT committed the epoch's offsets, so a
+restart from the same checkpoint redelivers the same epoch to the same
+sink. The test then asserts the restarted run converges to the rollup
+of every landed row.
 """
 
 from __future__ import annotations
@@ -20,7 +20,6 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 
 from calidad_del_aire_etl_spark.streaming import jobs
 
@@ -76,184 +75,6 @@ ROWS1 = [
     (4, _t(9), 1, "click", 12.0),
     (5, _t(9), 3, "signup", 30.0),
 ]
-
-
-@pytest.mark.slow
-def test_cdc_merge_crash_between_commit_and_marker_converges(
-    spark, input_dir, tmp_path, land_batch
-):
-    """Kill the query after epoch 1's MERGE committed but before its
-    marker landed; the restart re-merges the same compacted batch —
-    content-idempotent (one redundant snapshot at most), ending in the
-    exact state of an uninterrupted run."""
-    from calidad_del_aire_etl_spark.sinks import writers
-
-    table, ckpt = str(tmp_path / "cdc"), str(tmp_path / "ckpt")
-    land_batch(input_dir, ROWS0, 0)
-    land_batch(input_dir, ROWS1, 1)
-
-    jobs._test_crash_hook = _crash_on("cdc_merge:pre_marker", 1)
-    q = jobs.run_cdc_merge(jobs.read_events_stream(spark, input_dir), table, ["user_id"], ckpt)
-    _run_until_crash(q)
-
-    # Crash landed after the merge: the data is in, the marker is not.
-    assert {r["user_id"]: r["value"] for r in writers.read_versioned_parquet(spark, table).collect()} \
-        == {1: 12.0, 2: 20.0, 3: 30.0}
-    assert not os.path.exists(f"{table}/_commits/batch-1")
-    v_crash = writers.latest_version(spark, table)
-
-    # Restart from the same checkpoint: epoch 1 is redelivered and
-    # re-merged (its offsets never committed).
-    jobs._test_crash_hook = None
-    q2 = jobs.run_cdc_merge(jobs.read_events_stream(spark, input_dir), table, ["user_id"], ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-
-    got = {r["user_id"]: r["value"] for r in writers.read_versioned_parquet(spark, table).collect()}
-    # Uninterrupted twin on fresh dirs.
-    table_u, ckpt_u = str(tmp_path / "cdc_u"), str(tmp_path / "ckpt_u")
-    q3 = jobs.run_cdc_merge(jobs.read_events_stream(spark, input_dir), table_u, ["user_id"], ckpt_u)
-    try:
-        q3.processAllAvailable()
-    finally:
-        q3.stop()
-    want = {r["user_id"]: r["value"] for r in writers.read_versioned_parquet(spark, table_u).collect()}
-    assert got == want == {1: 12.0, 2: 20.0, 3: 30.0}
-    # The re-merge cost at most one redundant snapshot over the crash
-    # point, and the marker finally landed.
-    assert writers.latest_version(spark, table) <= v_crash + 1
-    assert os.path.exists(f"{table}/_commits/batch-1")
-
-
-@pytest.mark.slow
-def test_cdc_merge_crash_on_bootstrap_epoch_converges(
-    spark, input_dir, tmp_path, land_batch
-):
-    """Crash on epoch 0 — the empty-table bootstrap commit — after its
-    merge landed v0 but before its marker. The restart redelivers epoch
-    0 against a now NON-empty table (the bootstrap became an ordinary
-    merge) and must still converge to the uninterrupted state."""
-    from calidad_del_aire_etl_spark.sinks import writers
-
-    table, ckpt = str(tmp_path / "cdc"), str(tmp_path / "ckpt")
-    land_batch(input_dir, ROWS0, 0)
-    land_batch(input_dir, ROWS1, 1)
-
-    jobs._test_crash_hook = _crash_on("cdc_merge:pre_marker", 0)
-    q = jobs.run_cdc_merge(jobs.read_events_stream(spark, input_dir), table, ["user_id"], ckpt)
-    _run_until_crash(q)
-    assert writers.latest_version(spark, table) == 0  # bootstrap committed
-    assert not os.path.exists(f"{table}/_commits/batch-0")
-
-    jobs._test_crash_hook = None
-    q2 = jobs.run_cdc_merge(jobs.read_events_stream(spark, input_dir), table, ["user_id"], ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    got = {r["user_id"]: r["value"] for r in writers.read_versioned_parquet(spark, table).collect()}
-    assert got == {1: 12.0, 2: 20.0, 3: 30.0}
-    assert os.path.exists(f"{table}/_commits/batch-0")
-    assert os.path.exists(f"{table}/_commits/batch-1")
-
-
-def test_minhash_dedup_crash_between_bands_and_marker_converges(
-    spark, input_dir, tmp_path, land_batch
-):
-    """Kill the query after epoch 1's band partition landed but before
-    its marker; the restarted epoch must not probe its own partial
-    bands (self-match) and must end with decisions and band store
-    identical to an uninterrupted run."""
-    store, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
-    base = "the quick brown fox jumps over the lazy dog again and again in the morning"
-    novel = "completely different text about databases and distributed query engines"
-    docs0 = [(1, base), (2, base + " tail"), (3, novel)]
-    docs1 = [(4, base + " coda"), (5, "unrelated fresh content about sailing ships")]
-    land_batch(input_dir, docs0, 0, jobs.DOCS_SCHEMA)
-    land_batch(input_dir, docs1, 1, jobs.DOCS_SCHEMA)
-
-    jobs._test_crash_hook = _crash_on("minhash:pre_marker", 1)
-    q = jobs.run_minhash_dedup(jobs.read_docs_stream(spark, input_dir), store, ckpt)
-    _run_until_crash(q)
-
-    # Crash residue: epoch 1's bands exist, marker doesn't.
-    assert os.path.exists(f"{store}/bands/epoch=1")
-    assert not os.path.exists(f"{store}/_epochs/batch-1")
-
-    jobs._test_crash_hook = None
-    q2 = jobs.run_minhash_dedup(jobs.read_docs_stream(spark, input_dir), store, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-
-    # Uninterrupted twin.
-    store_u, ckpt_u = str(tmp_path / "store_u"), str(tmp_path / "ckpt_u")
-    q3 = jobs.run_minhash_dedup(jobs.read_docs_stream(spark, input_dir), store_u, ckpt_u)
-    try:
-        q3.processAllAvailable()
-    finally:
-        q3.stop()
-
-    def snap(d):
-        dec = {
-            r["doc_id"]: (r["decision"], r["matched_id"])
-            for r in spark.read.parquet(f"{d}/decisions").collect()
-        }
-        bands = sorted(
-            (r["id"], r["b"], r["bkey"])
-            for r in spark.read.parquet(f"{d}/bands").collect()
-        )
-        return dec, bands
-
-    dec_r, bands_r = snap(store)
-    dec_u, bands_u = snap(store_u)
-    assert dec_r == dec_u
-    assert dec_r[4][0] == "corpus" and dec_r[4][1] == 1
-    assert dec_r[5][0] == "kept"
-    assert bands_r == bands_u
-    assert os.path.exists(f"{store}/_epochs/batch-1")
-
-
-def test_foreach_batch_crash_after_write_replays_identically(
-    spark, input_dir, tmp_path, land_batch
-):
-    """Kill the query after epoch 1's partition write, before the epoch
-    commits; restart rewrites the identical batch_id=1 partition —
-    rows equal to an uninterrupted run, no duplicates."""
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    land_batch(input_dir, ROWS0, 0)
-    land_batch(input_dir, ROWS1, 1)
-
-    jobs._test_crash_hook = _crash_on("foreach_batch:post_write", 1)
-    q = jobs.run_foreach_batch(jobs.read_events_stream(spark, input_dir), out, ckpt)
-    _run_until_crash(q)
-    assert os.path.exists(f"{out}/batch_id=1")  # effect landed, epoch didn't commit
-
-    jobs._test_crash_hook = None
-    q2 = jobs.run_foreach_batch(jobs.read_events_stream(spark, input_dir), out, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-
-    out_u, ckpt_u = str(tmp_path / "out_u"), str(tmp_path / "ckpt_u")
-    q3 = jobs.run_foreach_batch(jobs.read_events_stream(spark, input_dir), out_u, ckpt_u)
-    try:
-        q3.processAllAvailable()
-    finally:
-        q3.stop()
-
-    def rows(d):
-        return sorted(
-            (r["event_id"], r["user_id"], r["value"])
-            for r in spark.read.parquet(d).collect()
-        )
-
-    assert rows(out) == rows(out_u)
-    assert len(rows(out)) == 5  # replay rewrote, not appended
 
 
 def test_rollup_crash_between_stage_and_rollup_update_converges(

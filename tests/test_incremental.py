@@ -27,7 +27,7 @@ def test_incremental_overwrites_only_touched_dates(spark, tmp_path):
         (2, _t(2), 1, 20.0),
         (3, _t(3), 1, 30.0),
     ])
-    incremental.write_daily_full(incremental.daily_rollup(base), path)
+    incremental.daily_rollup(base).write.partitionBy("date").parquet(path)
 
     day1_files = sorted(glob.glob(f"{path}/date=2024-01-01/*.parquet"))
     day1_mtimes = [os.path.getmtime(f) for f in day1_files]

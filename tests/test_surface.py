@@ -1,14 +1,15 @@
-"""The I/O layers and the plans hold no entry point that only tests reach.
+"""The package's layers hold no entry point that only tests reach.
 
-Walks the AST of ``sources/``, ``sinks/``, ``streaming/`` and ``plans/``
-and fails on any top-level function, private helpers included, that
-nothing references except ``tests/``. A reference counts when it comes from the
-package, ``__spark_entry__.py``, ``bench.py``, ``tools/`` or ``perfbench/``,
-and not from inside another function of these layers that is itself
-unreferenced: dead code keeps none of its callees alive. Names are
-matched bare (a ``Name``, an attribute or an imported name), so a
-same-named symbol elsewhere can only hide a dead function, never
-report a live one. Parses no data and starts no Spark session.
+Walks the AST of ``sources/``, ``sinks/``, ``streaming/``, ``plans/``,
+``operators/`` and ``functions/`` and fails on any top-level function,
+private helpers included, that nothing references except ``tests/``. A
+reference counts when it comes from the package, ``__spark_entry__.py``,
+``bench.py``, ``tools/`` or ``perfbench/``, and not from inside another
+function of these layers that is itself unreferenced: dead code keeps
+none of its callees alive. Names are matched bare (a ``Name``, an
+attribute or an imported name), so a same-named symbol elsewhere can
+only hide a dead function, never report a live one. Parses no data and
+starts no Spark session.
 """
 
 from __future__ import annotations
@@ -18,19 +19,10 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "calidad_del_aire_etl_spark"
-LAYERS = ("sources", "sinks", "streaming", "plans")
+LAYERS = ("sources", "sinks", "streaming", "plans", "operators", "functions")
 
 # Kept although only tests call them (ROADMAP item 7's keep rule).
 ALLOWED = {
-    # the only exactly-once path of each foreachBatch sink family
-    "run_foreach_batch": "idempotent batch_id=N/ parquet sink",
-    "run_cdc_merge": "CDC MERGE sink into the versioned table",
-    "read_docs_stream": "document source of the MinHash sink",
-    "run_minhash_dedup": "MinHash near-dup sink with its band store",
-    "read_vecs_stream": "vector source of the ANN index sink",
-    "run_ann_index": "graph-ANN index sink",
-    "ann_index_search": "query side of the ANN index sink's store",
-    "ann_index_compact": "table maintenance of the ANN index sink's store",
     # reference Load's PostgreSQL path (dag:323-359)
     "write_jdbc": "to_sql data plane of the reference's Load",
     "ensure_jdbc_table": "CREATE TABLE bootstrap of the reference's Load",
