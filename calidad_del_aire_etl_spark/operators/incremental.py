@@ -12,8 +12,10 @@ touches (the reprocess-the-partition pattern); late rows for an old date
 mean re-feeding that date's full slice, which is exactly how
 warehouse-style backfills work. The streaming sink
 (streaming/jobs.incremental_rollup_sink) meets it by feeding every
-staged row of the touched dates: its history is staged partitioned by
-the same date string, so those rows are whole ``date=`` directories.
+staged row of the touched dates: it stages only the rollup's inputs
+(:data:`ROLLUP_INPUTS`), partitioned by the same date string, so those
+rows are whole ``date=`` directories that carry their date as the
+partition value.
 
 The write is the only action: the touched dates come back from an
 ``Observation`` riding on it (:func:`observe_dates`), not from a second
@@ -29,23 +31,39 @@ from pyspark.sql import functions as F
 from ..session import scoped_conf
 
 
+# the columns the rollup aggregates besides its date key: the grouping
+# key and the summed value. The streaming sink stages exactly these.
+ROLLUP_INPUTS = ("user_id", "value")
+
+
 def event_date() -> Column:
     """``to_date(ts)`` as a string, in the session time zone: the
     rollup's partition key, and the streaming sink's staging key."""
     return F.to_date("ts").cast("string")
 
 
-def daily_rollup(events: DataFrame) -> DataFrame:
-    """Per (date, user) daily aggregate, partition-keyed by date."""
-    return (
-        events.withColumn("date", event_date())
-        .groupBy("date", "user_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-            F.round(F.avg("value"), 4).alias("avg_value"),
-        )
+def rollup_by_date(dated: DataFrame) -> DataFrame:
+    """:func:`daily_rollup`'s aggregate over rows that already carry the
+    string ``date`` key and the :data:`ROLLUP_INPUTS` columns."""
+    user_id, value = ROLLUP_INPUTS
+    return dated.groupBy("date", user_id).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_events"),
+        F.sum(F.col(value).cast("decimal(18,2)")).cast("double").alias("sum_value"),
+        F.round(F.avg(value), 4).alias("avg_value"),
     )
+
+
+def daily_rollup(events: DataFrame) -> DataFrame:
+    """Per (date, user) daily aggregate, partition-keyed by
+    :func:`event_date`.
+
+    ``avg_value`` rounds a double mean to 4 decimals, and the sum behind
+    that mean follows the order in which the rows arrive: in the
+    streaming sink, the staged row order. So a mean that lies exactly on
+    a 4th-decimal tie (397.05 / 8 = 49.63125, say) can round either way
+    when that order changes. ``n_events`` and the decimal ``sum_value``
+    do not depend on it."""
+    return rollup_by_date(events.withColumn("date", event_date()))
 
 
 def observe_dates(df: DataFrame, date: Column) -> tuple[DataFrame, Observation]:
@@ -56,16 +74,19 @@ def observe_dates(df: DataFrame, date: Column) -> tuple[DataFrame, Observation]:
     return df.observe(obs, F.collect_set(date).alias("dates")), obs
 
 
-def incremental_daily_update(
-    spark: SparkSession, events_batch: DataFrame, path: str
-) -> list[str]:
-    """Re-aggregate the batch and overwrite ONLY its date partitions.
+def incremental_daily_update(spark: SparkSession, dated: DataFrame, path: str) -> list[str]:
+    """Re-aggregate the dated batch (:func:`rollup_by_date`) and
+    overwrite ONLY its date partitions, each written sorted by
+    ``user_id``.
 
     Returns the affected dates, sorted, observed during the write.
-    ``partitionOverwriteMode=dynamic`` is set per-write (session conf
-    restored), so a 2-date batch against a 3-year table rewrites 2
-    directories, not ~1100."""
-    summary, obs = observe_dates(daily_rollup(events_batch), F.col("date"))
+    ``partitionOverwriteMode=dynamic`` is set per-write on ``spark``
+    (session conf restored), so a 2-date batch against a 3-year table
+    rewrites 2 directories, not ~1100."""
+    summary, obs = observe_dates(rollup_by_date(dated), F.col("date"))
+    # sort above the observation: the planned write keeps a sort that
+    # already orders by its partition column, and adds none of its own
+    summary = summary.sortWithinPartitions("date", ROLLUP_INPUTS[0])
     with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         summary.write.mode("overwrite").partitionBy("date").option(
             "compression", "zstd"

@@ -64,22 +64,25 @@ def incremental_rollup_sink(spark, staged_dir: str, rollup_dir: str):
     drives operators/incremental.py's dynamic-partition-overwrite daily
     rollup, epoch-replay-safe.
 
-    The staged history is the batches' RAW rows under
-    ``date=<d>/batch_id=<epoch>/``, where ``d`` is the rollup's own key
-    (operators/incremental.event_date, in the session time zone); like
-    the rollup, a staged root must keep one session time zone. Per
-    micro-batch, three Spark jobs:
+    The staged history is the rollup's inputs
+    (operators/incremental.ROLLUP_INPUTS: ``user_id`` and ``value``)
+    under ``date=<d>/batch_id=<epoch>/``, where ``d`` is the rollup's own
+    key (operators/incremental.event_date, in the session time zone);
+    like the rollup, a staged root must keep one session time zone. Per
+    micro-batch, on the batch's own session, three Spark jobs:
 
     1. stage the batch with one partitioned write under dynamic
        partition overwrite, so a replayed epoch rewrites exactly the
        ``(date, epoch)`` directories it wrote and never appends. Rows
-       are sorted by ``(date, ts, event_id)`` within each partition, so
-       a redelivered epoch stages the same rows in the same order, with
-       no exchange; files are zstd, with ``ts`` as TIMESTAMP_MICROS. An
-       ``Observation`` on this write yields the touched dates, so
-       collecting them costs no job;
-    2. open the touched dates' ``date=<d>`` directories with the batch's
-       schema (no inference job), drop the partition columns, and
+       are sorted by ``(date, user_id, value)`` within each partition, a
+       total order over the staged columns, so a redelivered epoch
+       stages the same rows in the same order, with no exchange; files
+       are zstd without dictionary encoding (sorted ids compress smaller
+       as plain values). An ``Observation`` on this write yields the
+       touched dates, so collecting them costs no job;
+    2. open the touched dates' ``date=<d>`` directories with the schema
+       ``user_id, value, date`` (no inference job; the date is the
+       partition value, not re-derived), and
     3. recompute those dates' rollup partitions and
        dynamic-partition-overwrite only them
        (operators/incremental.incremental_daily_update; two jobs under
@@ -91,7 +94,9 @@ def incremental_rollup_sink(spark, staged_dir: str, rollup_dir: str):
     contract on any single batch), and an epoch replay recomputes
     byte-identical partition contents: exactly-once END-TO-END on an
     at-least-once foreachBatch. Rows with a NULL ``ts`` have no date:
-    they are staged but never read.
+    they are staged but never read. History staged with more columns
+    (all of ``EVENTS_SCHEMA``, as before the staged rows were narrowed)
+    reads through the same schema.
 
     A ``staged_dir`` that holds top-level ``batch_id=N`` directories
     from an older, unpartitioned layout raises ``ValueError``: those
@@ -107,41 +112,39 @@ def incremental_rollup_sink(spark, staged_dir: str, rollup_dir: str):
             f"{legacy[0].getPath()} is staged in the old batch_id=N layout; "
             "the rollup sink needs a staged root of date=<d>/batch_id=N dirs"
         )
+    inputs = incremental.ROLLUP_INPUTS
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # foreachBatch runs in a clone of the query's session: reads,
+        # writes and confs go on the batch's own session, so no conf of
+        # the caller's session changes while the query runs
         session = batch_df.sparkSession
-        date = incremental.event_date()
         # observe before the sort: over an observation, the planned
         # write swaps this sort for its own (date, batch_id) one
-        observed, obs = incremental.observe_dates(batch_df, date)
+        observed, obs = incremental.observe_dates(batch_df, incremental.event_date())
         # a string batch_id names the same directory, and unlike an int
         # literal it is not inlined into the generated code, so a tick
         # reuses the previous tick's compiled classes
         staging = (
-            observed.withColumn("date", date)
+            observed.select(incremental.event_date().alias("date"), *inputs)
             .withColumn("batch_id", F.lit(str(batch_id)))
-            .sortWithinPartitions("date", "ts", "event_id")
+            .sortWithinPartitions("date", *inputs)
         )
-        # foreachBatch runs in a clone of the query's session: the confs
-        # must go on the batch's own session to reach this write
-        with scoped_conf(
-            session, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-        ), scoped_conf(session, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+        with scoped_conf(session, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
             staging.write.mode("overwrite").partitionBy("date", "batch_id").option(
                 "compression", "zstd"
-            ).parquet(staged_dir)
+            ).option("parquet.enable.dictionary", "false").parquet(staged_dir)
         _crash_point("rollup:post_stage", batch_id)
         dates = obs.get["dates"]
         if not dates:
             return
+        schema = T.StructType([batch_df.schema[c] for c in inputs]).add("date", T.StringType())
         staged = (
-            spark.read.schema(batch_df.schema)
+            session.read.schema(schema)
             .option("basePath", staged_dir)
             .parquet(*[f"{staged_dir}/date={d}" for d in dates])
         )
-        incremental.incremental_daily_update(
-            spark, staged.drop("date", "batch_id"), rollup_dir
-        )
+        incremental.incremental_daily_update(session, staged, rollup_dir)
 
     return write_batch
 

@@ -16,6 +16,10 @@ def _ev(spark, rows):
     )
 
 
+def _dated(spark, rows):
+    return _ev(spark, rows).withColumn("date", incremental.event_date())
+
+
 def _t(day, hour=0):
     return dt.datetime(2024, 1, day, hour)
 
@@ -33,7 +37,7 @@ def test_incremental_overwrites_only_touched_dates(spark, tmp_path):
     day1_mtimes = [os.path.getmtime(f) for f in day1_files]
 
     # day-2 reprocess: full slice for that date (two events now)
-    batch = _ev(spark, [(2, _t(2), 1, 20.0), (9, _t(2, 5), 1, 5.0)])
+    batch = _dated(spark, [(2, _t(2), 1, 20.0), (9, _t(2, 5), 1, 5.0)])
     touched = incremental.incremental_daily_update(spark, batch, path)
     assert touched == ["2024-01-02"]
 
@@ -53,7 +57,7 @@ def test_incremental_overwrites_only_touched_dates(spark, tmp_path):
 
 def test_static_mode_restored_after_write(spark, tmp_path):
     path = str(tmp_path / "daily2")
-    incremental.incremental_daily_update(spark, _ev(spark, [(1, _t(1), 1, 1.0)]), path)
+    incremental.incremental_daily_update(spark, _dated(spark, [(1, _t(1), 1, 1.0)]), path)
     assert (
         spark.conf.get("spark.sql.sources.partitionOverwriteMode") != "dynamic"
     )

@@ -1,10 +1,12 @@
 """streaming.jobs.incremental_rollup_sink called directly on batch
 DataFrames: three Spark jobs per micro-batch, a rollup scan bounded by
-the touched dates, sorted zstd staging that a redelivered epoch
-reproduces, a per-tick cost that stays flat over a long staged history,
-ticks that compile no new code, dates that follow the session time zone
-across DST, the refusal of a staged root in the old ``batch_id=N``
-layout, and a prompt return on an empty batch."""
+the touched dates, staged files that hold only the rollup's inputs,
+sorted and zstd, which a redelivered epoch reproduces, a rollup half
+that runs on the batch's session, a history staged with every event
+column that still rolls up, a per-tick cost that stays flat over a long
+staged history, ticks that compile no new code, dates that follow the
+session time zone across DST, the refusal of a staged root in the old
+``batch_id=N`` layout, and a prompt return on an empty batch."""
 
 from __future__ import annotations
 
@@ -133,9 +135,9 @@ def test_rollup_sink_three_jobs_flat_scan_exact_and_replay_safe(
     assert _rollup(spark, rollup) == first
 
 
-def _staged_rows(pattern: str) -> list[dict]:
-    """The rows of the staged files in the dirs ``pattern`` matches, file
-    by file in path order."""
+def _file_rows(pattern: str) -> list[dict]:
+    """The rows of the parquet files in the dirs ``pattern`` matches,
+    file by file in path order."""
     return [
         r
         for f in sorted(glob.glob(f"{pattern}/*.parquet"))
@@ -143,45 +145,110 @@ def _staged_rows(pattern: str) -> list[dict]:
     ]
 
 
+def _chunks(files) -> list:
+    """The column chunks of every row group of ``files``."""
+    out = []
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            out += [rg.column(c) for c in range(rg.num_columns)]
+    return out
+
+
 def test_rollup_sink_stages_sorted_zstd_and_replays_in_the_same_order(spark, tmp_path):
-    """Staged files are zstd-compressed with ``ts`` non-decreasing in
-    each file, rollup files are zstd-compressed, and an epoch redelivered
-    with its rows permuted stages the same rows in the same order: ties
-    on ``ts`` are broken by ``event_id``."""
+    """Staged files hold exactly the rollup's inputs ``user_id`` and
+    ``value``, zstd-compressed, sorted by ``(user_id, value)``, with no
+    dictionary encoding on ``user_id``; an epoch redelivered with its
+    rows permuted stages identical rows. Rollup files are zstd and
+    sorted by ``user_id``, and the replay leaves identical rollup rows
+    in file order."""
     staged, rollup = str(tmp_path / "staged"), str(tmp_path / "rollup")
     sink = jobs.incremental_rollup_sink(spark, staged, rollup)
     batches = _day_batches(spark, 2)
-    # a third batch whose rows share five ts values, shuffled
+    # a third batch whose rows repeat (user_id, value) pairs, shuffled
     rows = [
-        (1000 + i, dt.datetime(2024, 1, 2, i % 5), i % 3, "view", float(i)) for i in range(40)
+        (1000 + i, dt.datetime(2024, 1, 2, i % 5), i % 3, "view", float(i % 7)) for i in range(40)
     ]
     random.Random(3).shuffle(rows)
     batches.append(spark.createDataFrame(rows, jobs.EVENTS_SCHEMA).coalesce(1))
     for b, df in enumerate(batches):
         sink(df, b)
 
-    def codecs(files):
-        out = set()
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            for g in range(md.num_row_groups):
-                out |= {md.row_group(g).column(c).compression for c in range(md.num_columns)}
-        return out
-
     # batch 1's late rows stage under 2024-01-01, the rest under their day
     staged_files = glob.glob(f"{staged}/date=*/batch_id=*/*.parquet")
     assert len(staged_files) == 4
-    assert codecs(staged_files) == {"ZSTD"}
     for f in staged_files:
-        ts = pq.ParquetFile(f).read().column("ts").to_pylist()
-        assert ts == sorted(ts), f
-    assert codecs(glob.glob(f"{rollup}/date=*/*.parquet")) == {"ZSTD"}
+        table = pq.ParquetFile(f).read()
+        assert table.column_names == ["user_id", "value"], f
+        keys = list(zip(*(table.column(c).to_pylist() for c in table.column_names)))
+        assert keys == sorted(keys), f
+    assert {c.compression for c in _chunks(staged_files)} == {"ZSTD"}
+    ids = [c for c in _chunks(staged_files) if c.path_in_schema == "user_id"]
+    assert len(ids) == 4
+    for c in ids:
+        assert not c.has_dictionary_page
+        assert not any("DICTIONARY" in e for e in c.encodings), c.encodings
 
-    first = _staged_rows(f"{staged}/date=*/batch_id=2")
-    assert [r["event_id"] for r in first] != [r[0] for r in rows]
+    rollup_files = glob.glob(f"{rollup}/date=*/*.parquet")
+    assert {c.compression for c in _chunks(rollup_files)} == {"ZSTD"}
+    for f in rollup_files:
+        ids = pq.ParquetFile(f).read().column("user_id").to_pylist()
+        assert ids == sorted(ids), f
+
+    first, rolled = _file_rows(f"{staged}/date=*/batch_id=2"), _file_rows(f"{rollup}/date=*")
     random.Random(4).shuffle(rows)
     sink(spark.createDataFrame(rows, jobs.EVENTS_SCHEMA).coalesce(1), 2)
-    assert _staged_rows(f"{staged}/date=*/batch_id=2") == first
+    assert _file_rows(f"{staged}/date=*/batch_id=2") == first
+    assert _file_rows(f"{rollup}/date=*") == rolled
+
+
+def test_rollup_sink_sets_confs_on_the_batch_session_only(spark, tmp_path, monkeypatch):
+    """A batch whose session is not the one the sink was built with, as
+    in ``foreachBatch``'s clone: every ``scoped_conf`` the sink enters,
+    in the staged write and in the rollup write, targets the batch's
+    session, so no conf of the caller's session changes mid-query."""
+    staged, rollup = str(tmp_path / "staged"), str(tmp_path / "rollup")
+    sink = jobs.incremental_rollup_sink(spark, staged, rollup)
+    batch_session = spark.newSession()
+    targets = []
+
+    def recording(module):
+        real = module.scoped_conf
+
+        def scoped(target, key, value):
+            targets.append((module.__name__, target))
+            return real(target, key, value)
+
+        monkeypatch.setattr(module, "scoped_conf", scoped)
+
+    recording(jobs)
+    recording(incremental)
+    batches = _day_batches(batch_session, 2)
+    for b, df in enumerate(batches):
+        sink(df, b)
+    assert {m for m, _ in targets} == {jobs.__name__, incremental.__name__}
+    assert all(t._jsparkSession.equals(batch_session._jsparkSession) for _, t in targets)
+    assert _rollup(spark, rollup) == _expected(batches)
+
+
+def test_rollup_sink_rolls_up_a_history_staged_with_every_event_column(spark, tmp_path):
+    """A ``date=<d>/batch_id=0`` file in the earlier staged layout (all
+    of ``EVENTS_SCHEMA``, sorted by ``ts``), then new ticks for the same
+    date: the rollup equals ``daily_rollup`` over every landed row."""
+    staged, rollup = str(tmp_path / "staged"), str(tmp_path / "rollup")
+    eid = F.col("id") + 900
+    old = _events(spark, 20, eid, F.lit(_JAN_1) + (eid % 24) * 3600, eid % 7, (eid % 11) + 0.5)
+    old_dir = tmp_path / "staged" / "date=2024-01-01" / "batch_id=0"
+    old_dir.mkdir(parents=True)
+    pq.write_table(old.toArrow().sort_by("ts"), old_dir / "part-00000.zstd.parquet", compression="zstd")
+
+    sink = jobs.incremental_rollup_sink(spark, staged, rollup)
+    batches = _day_batches(spark, 2)
+    for b, df in enumerate(batches, start=1):
+        sink(df, b)
+    assert pq.read_schema(next(old_dir.glob("*.parquet"))).names == jobs.EVENTS_SCHEMA.fieldNames()
+    assert _rollup(spark, rollup) == _expected([old, *batches])
 
 
 def _tiny_batch(spark, b: int):
@@ -280,11 +347,15 @@ def test_rollup_sink_dates_follow_the_session_time_zone_across_dst(spark, tmp_pa
         for b, df in enumerate(landed):
             sink(df, b)
         assert _rollup(spark, rollup) == _expected(landed)
-    assert len(_staged_rows(f"{staged}/date=2024-03-10/batch_id=*")) == 46
-    nov_3 = _staged_rows(f"{staged}/date=2024-11-03/batch_id=*")
-    assert len(nov_3) == 50
-    late = dt.datetime(2024, 11, 4, 4, 30, tzinfo=dt.timezone.utc)
-    assert late in [r["ts"] for r in nov_3]
+    assert len(_file_rows(f"{staged}/date=2024-03-10/batch_id=*")) == 46
+    assert len(_file_rows(f"{staged}/date=2024-11-03/batch_id=*")) == 50
+    # the third batch stages its first 10 rows, 00:00 to 04:30 UTC on
+    # 2024-11-04, under 2024-11-03; of those, only the 04:30 row has
+    # this (user_id, value)
+    eid = 2000 + 9
+    late = {"user_id": eid % 3, "value": eid % 13 + 0.25}
+    nov_3 = _file_rows(f"{staged}/date=2024-11-03/batch_id=2")
+    assert len(nov_3) == 10 and late in nov_3
 
 
 def test_rollup_sink_refuses_a_staged_root_in_the_old_layout(spark, tmp_path):
@@ -313,7 +384,7 @@ def test_rollup_sink_returns_promptly_on_empty_batch(spark, tmp_path):
         try:
             sink(empty, 1)
             result["dates"] = incremental.incremental_daily_update(
-                spark, empty, str(tmp_path / "other")
+                spark, empty.withColumn("date", incremental.event_date()), str(tmp_path / "other")
             )
         except Exception as e:  # surfaced below
             result["error"] = e

@@ -59,12 +59,10 @@ def test_incremental_rollup_stream_replay_leaves_partitions_unchanged(
         ("2024-01-02", 2, 1, 7.0),
     ]
 
-    # replay epoch 0: re-deliver the same batch to the sink directly
-    # (materialized first — a real replayed batch comes from the
-    # checkpointed source, not from the staged files being overwritten)
-    replay_rows = spark.read.parquet(staged).drop("date", "batch_id").collect()
+    # replay epoch 0: re-deliver the landed batch to the sink directly,
+    # as the checkpointed source would
     incremental_rollup_sink(spark, staged, rollup)(
-        spark.createDataFrame(replay_rows, jobs.EVENTS_SCHEMA), 0
+        spark.read.schema(jobs.EVENTS_SCHEMA).parquet(f"{input_dir}/batch0.parquet"), 0
     )
     assert snapshot() == first
 

@@ -33,6 +33,7 @@ ALLOWED = {
     "apply_daily_increment": "day N of the incremental corpus plan",
     # reference implementation that tests compare the fast path against
     "decode_png_pixels": "reference PNG decoder (palette)",
+    "daily_rollup": "batch rollup of raw events that the stream rollup is checked against",
 }
 
 
